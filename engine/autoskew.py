@@ -1,11 +1,14 @@
 """Measurement-driven skew dispatch: decide salted vs plain from the data.
 
-The engine's salted operators (engine/skew.py, engine/joins.py,
-engine/gapfill.py) are bit-identical to their plain twins — the ONLY
-question is cost: salting buys hot-key parallelism with one extra
-(fine-keyed) aggregation exchange, which is pure overhead on uniform
-data. The static `TierPipeline(salted=...)` flag makes that a deploy-time
-guess; `salted='auto'` makes it a per-run measurement:
+The engine's salted operators are bit-identical to their plain forms —
+the ONLY question is cost: salting buys hot-key parallelism with one
+extra (fine-keyed) aggregation exchange, which is pure overhead on
+uniform data. For the hourly tier the choice is one argument of the one
+leaf, `rollup_hourly(n_salts=…)` (engine/rollup.py): an integer salts,
+`None` does not, and both emit the same rows in the same schema; the
+salted twins in engine/joins.py and engine/gapfill.py are separate
+operators. The static `TierPipeline(salted=...)` flag makes the choice a
+deploy-time guess; `salted='auto'` makes it a per-run measurement:
 
     probe:   sample the pending input (one cheap job over a fraction),
              count rows per key, scale by 1/fraction

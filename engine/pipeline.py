@@ -46,7 +46,6 @@ from .rollup import (
     rollup_up,
     tier_view,
 )
-from .skew import rollup_hourly_salted
 
 N_CONV_BUCKETS = 64
 
@@ -258,6 +257,19 @@ class TierPipeline:
         from .forget import TombstoneStore
 
         self.tombstones = TombstoneStore(root)
+
+    @property
+    def _family_kwargs(self) -> dict:
+        """The state-family kwargs of rollup_hourly, as normalised above."""
+        return {
+            k: getattr(self, k)
+            for k in (
+                "sketch_cols", "hist_cols", "firstlast_cols", "sumsq_cols",
+                "sumprod_cols", "freq_cols", "hh_cols", "kmv_cols",
+                "session_gaps", "statedur_cols", "twa_cols", "qsk_cols",
+                "topn_cols", "botn_cols",
+            )
+        }
 
     @property
     def _sketch_token(self) -> str:
@@ -1294,7 +1306,12 @@ class TierPipeline:
 
         A run lease (engine/lease.py) serializes writers per root: a second
         concurrent run raises LeaseHeldError instead of double-writing the
-        same pending partitions; crashed holders are broken as stale."""
+        same pending partitions; crashed holders are broken as stale.
+
+        Outside WAP mode the monthly stage and the series stages (gapfill,
+        compress) run concurrently, so a monthly failure does not stop the
+        series stages from committing; the run then raises the monthly
+        error (chaining a series error, if both failed)."""
         if budget is not None and budget < 1:
             raise ValueError("budget must be >= 1 partition per stage")
         if self.use_lease:
@@ -1432,43 +1449,8 @@ class TierPipeline:
                     f"{'salted' if salted else 'plain'}"
                     f" ratio={st['ratio']:.1f} hot_est={st['hot_est']}"
                 )
-            roll = (
-                rollup_hourly_salted(
-                    inp,
-                    self.n_salts,
-                    sketch_cols=self.sketch_cols,
-                    hist_cols=self.hist_cols,
-                    firstlast_cols=self.firstlast_cols,
-                    sumsq_cols=self.sumsq_cols,
-                    sumprod_cols=self.sumprod_cols,
-                    freq_cols=self.freq_cols,
-                    hh_cols=self.hh_cols,
-                    kmv_cols=self.kmv_cols,
-                    session_gaps=self.session_gaps,
-                    statedur_cols=self.statedur_cols,
-                    twa_cols=self.twa_cols,
-                    qsk_cols=self.qsk_cols,
-                    topn_cols=self.topn_cols,
-                    botn_cols=self.botn_cols,
-                )
-                if salted
-                else rollup_hourly(
-                    inp,
-                    sketch_cols=self.sketch_cols,
-                    hist_cols=self.hist_cols,
-                    firstlast_cols=self.firstlast_cols,
-                    sumsq_cols=self.sumsq_cols,
-                    sumprod_cols=self.sumprod_cols,
-                    freq_cols=self.freq_cols,
-                    hh_cols=self.hh_cols,
-                    kmv_cols=self.kmv_cols,
-                    session_gaps=self.session_gaps,
-                    statedur_cols=self.statedur_cols,
-                    twa_cols=self.twa_cols,
-                    qsk_cols=self.qsk_cols,
-                    topn_cols=self.topn_cols,
-                    botn_cols=self.botn_cols,
-                )
+            roll = rollup_hourly(
+                inp, n_salts=self.n_salts if salted else None, **self._family_kwargs
             )
             if self.fill_tiers:
                 roll = densify_hourly_locf(roll)
@@ -1694,8 +1676,13 @@ class TierPipeline:
             with ThreadPoolExecutor(max_workers=2) as ex:
                 mf = ex.submit(monthly_stage)
                 sf = ex.submit(series_stages)
-                series_done = sf.result()
-                done["monthly"] = mf.result()
+                # wait on both legs; when both fail, the monthly error
+                # (first in stage order) propagates with the series error
+                # as its __context__
+                try:
+                    series_done = sf.result()
+                finally:
+                    done["monthly"] = mf.result()
             done.update(series_done)
 
         return self._finish_run(run_id, done, scans, left)

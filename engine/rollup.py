@@ -245,6 +245,7 @@ def firstlast_merge_aggs(columns: list[str]) -> list:
 
 def rollup_hourly(
     t0: DataFrame,
+    n_salts: int | None = None,
     sketch_cols: list[str] | None = None,
     hist_cols: dict | None = None,
     firstlast_cols: list[str] | None = None,
@@ -266,6 +267,21 @@ def rollup_hourly(
     the group keys) — Catalyst's two-phase HashAggregateExec is exactly the
     reference's per-cell stackApply, distributed.
 
+    `n_salts` (F6, skew): an integer salts the aggregate. AQE splits skewed
+    *joins* at runtime but cannot split a skewed groupBy — a hot conv_id
+    funnels every row through one reducer. Salted, phase 1 groups by
+    (conv_id, bucket, salt) so the hot key's rows spread over n_salts
+    reducers, and phase 2 merges the sub-aggregates per (conv_id, bucket)
+    with the same `state_merge_aggs` that composes tiers — the result is
+    bit-identical to the unsalted path by construction. Every partial
+    family passes through the salt: sum/count/min/max and Σx²/Σxy by
+    associative long arithmetic, histograms by element-wise addition,
+    first/last because the carried unique order keys pick the same winning
+    row whichever salt it landed on, and HLL sketches by register-max
+    union (estimate-exact; tests/test_pipeline_sketches.py). Exact
+    distincts could not pass through and are never tier state (SURVEY.md
+    §7.3). `None` runs the one-phase aggregate. Both modes emit one schema.
+
     `sketch_cols` adds a mergeable Datasketches HLL column `<col>_hll` per
     named raw column (distinct-count sketch of that column's values under
     the bucket) — the tier algebra's non-algebraic member: exact distincts
@@ -281,8 +297,12 @@ def rollup_hourly(
     `firstlast_cols` adds exact open/close state: `{c}_first`/`{c}_last`
     plus the shared order-key carriers that make first/last composable
     across tiers (see firstlast_partial_aggs).
+
+    The remaining families (freq, hh, kmv, sessions, statedur, twa, qsk,
+    top-N/bottom-N) are built from fine-keyed (conv, hour, …) state that is
+    skew-proof without salt plumbing, and join the aggregated rows.
     """
-    sketch_aggs = (
+    partial_aggs = (
         [
             F.hll_sketch_agg(c, F.lit(HLL_LGK)).alias(f"{c}_hll")
             for c in (sketch_cols or [])
@@ -293,160 +313,113 @@ def rollup_hourly(
         + sumprod_partial_aggs(sumprod_cols)
     )
     df = with_metrics(t0)
-    hourly = (
-        # date_trunc returns session-TZ TIMESTAMP; the engine's canonical
-        # bucket type is TIMESTAMP_NTZ (naive UTC) — cast at the source so
-        # no LTZ/NTZ coercion ambiguity survives into joins/UDF schemas
-        df.groupBy(
-            "conv_id",
-            F.date_trunc("hour", "ts").cast("timestamp_ntz").alias("bucket_start"),
+    # date_trunc returns session-TZ TIMESTAMP; the engine's canonical
+    # bucket type is TIMESTAMP_NTZ (naive UTC) — cast at the source so no
+    # LTZ/NTZ coercion ambiguity survives into joins/UDF schemas
+    hour = F.date_trunc("hour", "ts").cast("timestamp_ntz")
+    rows, groups = df, ["conv_id", hour.alias("bucket_start")]
+    if n_salts is not None:
+        rows = df.withColumn(
+            "_salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts))
         )
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum("token_count").alias("token_sum"),
-            F.min("token_count").alias("token_min"),
-            F.max("token_count").alias("token_max"),
-            F.sum("is_tool").alias("tool_sum"),
-            F.min("is_tool").alias("tool_min"),
-            F.max("is_tool").alias("tool_max"),
-            *sketch_aggs,
-        )
-        .withColumns(
-            {
-                "hours_count": F.lit(1).cast("long"),
-                "hturns_min": F.col("n_turns"),
-                "hturns_max": F.col("n_turns"),
-            }
-        )
+        groups.append("_salt")
+    hourly = rows.groupBy(*groups).agg(
+        F.count("*").alias("n_turns"),
+        F.sum("token_count").alias("token_sum"),
+        F.min("token_count").alias("token_min"),
+        F.max("token_count").alias("token_max"),
+        F.sum("is_tool").alias("tool_sum"),
+        F.min("is_tool").alias("tool_min"),
+        F.max("is_tool").alias("tool_max"),
+        *partial_aggs,
     )
-    fm = freq_maps(
-        df.withColumn(
-            "bucket_start",
-            F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-        ),
-        ["conv_id", "bucket_start"],
-        freq_cols,
-    )
-    if fm is not None:
-        hourly = hourly.join(fm, ["conv_id", "bucket_start"], "left")
-        for c in sorted(freq_cols):
-            hourly = hourly.withColumn(
-                f"{c}_freq", F.coalesce(f"{c}_freq", empty_freq_map())
-            )
+    if n_salts is not None:
+        hourly = hourly.groupBy("conv_id", "bucket_start").agg(
+            *state_merge_aggs(hourly.columns)
+        )
+
+    # fine-keyed families: a bucket with no value for the family carries its
+    # empty state, never NULL, so densify's gap-carry can't fire on
+    # observed rows
+    keys = ["conv_id", "bucket_start"]
+    leaf = df.withColumn("bucket_start", hour)
+
+    def join(acc, state, empty=None):
+        acc = acc.join(state, keys, "left")
+        for c, e in (empty or {}).items():
+            acc = acc.withColumn(c, F.coalesce(c, e))
+        return acc
+
+    if freq_cols:
+        hourly = join(
+            hourly,
+            freq_maps(leaf, keys, freq_cols),
+            {f"{c}_freq": empty_freq_map() for c in sorted(freq_cols)},
+        )
     if hh_cols:
         from .heavyhitters import hh_coalesce_empty, hh_partial_maps
 
-        hm = hh_partial_maps(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            hh_cols,
-        )
         hourly = hh_coalesce_empty(
-            hourly.join(hm, ["conv_id", "bucket_start"], "left"), hh_cols
+            join(hourly, hh_partial_maps(leaf, keys, hh_cols)), hh_cols
         )
     if kmv_cols:
         from .kmv import empty_kmv_array, kmv_arrays, kmv_state_col
 
-        km = kmv_arrays(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            kmv_cols,
+        hourly = join(
+            hourly,
+            kmv_arrays(leaf, keys, kmv_cols),
+            {
+                kmv_state_col(c, k): empty_kmv_array()
+                for c, k in sorted(kmv_cols.items())
+            },
         )
-        hourly = hourly.join(km, ["conv_id", "bucket_start"], "left")
-        for c, k in sorted(kmv_cols.items()):
-            hourly = hourly.withColumn(
-                kmv_state_col(c, k),
-                F.coalesce(kmv_state_col(c, k), empty_kmv_array()),
-            )
     if session_gaps:
         from .sessionstate import sess_leaf_states
 
-        ss = sess_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            session_gaps,
-        )
-        # inner-join semantics are safe: every observed hourly row has at
-        # least one turn, so the session pass emits a state for every key
-        hourly = hourly.join(ss, ["conv_id", "bucket_start"], "left")
+        # every observed hourly row has at least one turn, so the session
+        # pass emits a state for every key — no empty state needed
+        hourly = join(hourly, sess_leaf_states(leaf, keys, session_gaps))
     if statedur_cols:
         from .statedur import sd_leaf_states
 
-        sd = sd_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            statedur_cols,
-        )
-        hourly = hourly.join(sd, ["conv_id", "bucket_start"], "left")
+        hourly = join(hourly, sd_leaf_states(leaf, keys, statedur_cols))
     if twa_cols:
         from .twa import empty_twa_struct, twa_leaf_states, twa_state_col
 
-        tw = twa_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            twa_cols,
+        hourly = join(
+            hourly,
+            twa_leaf_states(leaf, keys, twa_cols),
+            {twa_state_col(c): empty_twa_struct() for c in sorted(set(twa_cols))},
         )
-        hourly = hourly.join(tw, ["conv_id", "bucket_start"], "left")
-        for c in sorted(set(twa_cols)):
-            hourly = hourly.withColumn(
-                twa_state_col(c),
-                F.coalesce(twa_state_col(c), empty_twa_struct()),
-            )
     if qsk_cols:
         from .qsketch import empty_qsk_map, qsk_maps, qsk_state_col
 
-        qm = qsk_maps(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            qsk_cols,
+        hourly = join(
+            hourly,
+            qsk_maps(leaf, keys, qsk_cols),
+            {qsk_state_col(c): empty_qsk_map() for c in sorted(set(qsk_cols))},
         )
-        hourly = hourly.join(qm, ["conv_id", "bucket_start"], "left")
-        for c in sorted(set(qsk_cols)):
-            hourly = hourly.withColumn(
-                qsk_state_col(c),
-                F.coalesce(qsk_state_col(c), empty_qsk_map()),
-            )
     for spec, direction in ((topn_cols, "top"), (botn_cols, "bot")):
         if not spec:
             continue
         from .topn import empty_topn_array, topn_leaf_states, topn_state_col
 
-        tn = topn_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            spec,
-            direction,
+        hourly = join(
+            hourly,
+            topn_leaf_states(leaf, keys, spec, direction),
+            {
+                topn_state_col(c, n, direction): empty_topn_array()
+                for c, n in sorted(spec.items())
+            },
         )
-        hourly = hourly.join(tn, ["conv_id", "bucket_start"], "left")
-        for c, n in sorted(spec.items()):
-            hourly = hourly.withColumn(
-                topn_state_col(c, n, direction),
-                F.coalesce(
-                    topn_state_col(c, n, direction), empty_topn_array()
-                ),
-            )
-    return hourly.withColumn("tier", F.lit("hourly"))
+    return hourly.withColumns(
+        {
+            "hours_count": F.lit(1).cast("long"),
+            "hturns_min": F.col("n_turns"),
+            "hturns_max": F.col("n_turns"),
+            "tier": F.lit("hourly"),
+        }
+    )
 
 
 def observed_state(state: DataFrame) -> DataFrame:
@@ -679,6 +652,17 @@ def state_merge_aggs(columns) -> list:
         + _qsk_merges(columns)
         + _topn_merges(columns)
     )
+    # hour-count state is absent only from the salted leaf's per-salt
+    # partials: rollup_hourly derives it after the salt merge
+    hour_merges = (
+        [
+            F.sum("hours_count").alias("hours_count"),
+            F.min("hturns_min").alias("hturns_min"),
+            F.max("hturns_max").alias("hturns_max"),
+        ]
+        if "hours_count" in columns
+        else []
+    )
     return [
         F.sum("n_turns").alias("n_turns"),
         F.sum("token_sum").alias("token_sum"),
@@ -687,9 +671,7 @@ def state_merge_aggs(columns) -> list:
         F.sum("tool_sum").alias("tool_sum"),
         F.min("tool_min").alias("tool_min"),
         F.max("tool_max").alias("tool_max"),
-        F.sum("hours_count").alias("hours_count"),
-        F.min("hturns_min").alias("hturns_min"),
-        F.max("hturns_max").alias("hturns_max"),
+        *hour_merges,
         *sketch_merges,
     ]
 
@@ -730,41 +712,10 @@ def rollup_grain(
     )
 
 
-def build_tiers(
-    t0: DataFrame,
-    sketch_cols: list[str] | None = None,
-    hist_cols: dict | None = None,
-    firstlast_cols: list[str] | None = None,
-    sumsq_cols: list[str] | None = None,
-    sumprod_cols: list | None = None,
-    freq_cols: list[str] | None = None,
-    hh_cols: dict[str, int] | None = None,
-    kmv_cols: dict[str, int] | None = None,
-    session_gaps: list[int] | None = None,
-    statedur_cols: list[str] | None = None,
-    twa_cols: list[str] | None = None,
-    qsk_cols: list[str] | None = None,
-    topn_cols: dict[str, int] | None = None,
-    botn_cols: dict[str, int] | None = None,
-) -> dict[str, DataFrame]:
-    """raw → {hourly, daily, monthly} tier-state DataFrames."""
-    hourly = rollup_hourly(
-        t0,
-        sketch_cols=sketch_cols,
-        hist_cols=hist_cols,
-        firstlast_cols=firstlast_cols,
-        sumsq_cols=sumsq_cols,
-        sumprod_cols=sumprod_cols,
-        freq_cols=freq_cols,
-        hh_cols=hh_cols,
-        kmv_cols=kmv_cols,
-        session_gaps=session_gaps,
-        statedur_cols=statedur_cols,
-        twa_cols=twa_cols,
-        qsk_cols=qsk_cols,
-        topn_cols=topn_cols,
-        botn_cols=botn_cols,
-    )
+def build_tiers(t0: DataFrame, **state) -> dict[str, DataFrame]:
+    """raw → {hourly, daily, monthly} tier-state DataFrames; `state` is
+    rollup_hourly's family kwargs."""
+    hourly = rollup_hourly(t0, **state)
     daily = rollup_up(hourly, "daily")
     monthly = rollup_up(daily, "monthly")
     return {"hourly": hourly, "daily": daily, "monthly": monthly}

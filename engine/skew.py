@@ -5,10 +5,12 @@ aggregation and shuffle partitioning is keyed on (conv_id bucket, time
 bucket)". AQE splits skewed *joins* at runtime but cannot split a skewed
 groupBy aggregation — a hot conv_id funnels every row through one reducer.
 
-The fix exploits the tier algebra's composability (engine/rollup.py): the
-leaf rollup is salted into S sub-aggregates per (conv_id, bucket) and then
-composed with the same integer-exact sum/min/max merge used between tiers —
-results are bit-identical to the unsalted path by construction.
+The fix exploits the tier algebra's composability: `rollup_hourly(t0,
+n_salts=S)` (engine/rollup.py) salts the leaf rollup into S sub-aggregates
+per (conv_id, bucket) and composes them with the same integer-exact merge
+used between tiers — results are bit-identical to the unsalted path by
+construction. This module holds the shuffle-key helpers, the skew
+diagnostics and the salted session-window twin.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .bucket import with_metrics
+from .rollup import rollup_hourly
 
 
 def with_conv_time_keys(
@@ -58,271 +60,12 @@ def hot_conversations(t0: DataFrame, top_k: int = 20) -> DataFrame:
     )
 
 
-def rollup_hourly_salted(
-    t0: DataFrame,
-    n_salts: int = 16,
-    sketch_cols: list[str] | None = None,
-    hist_cols: dict | None = None,
-    firstlast_cols: list[str] | None = None,
-    sumsq_cols: list[str] | None = None,
-    sumprod_cols: list | None = None,
-    freq_cols: list[str] | None = None,
-    hh_cols: dict[str, int] | None = None,
-    kmv_cols: dict[str, int] | None = None,
-    session_gaps: list[int] | None = None,
-    statedur_cols: list[str] | None = None,
-    twa_cols: list[str] | None = None,
-    qsk_cols: list[str] | None = None,
-    topn_cols: dict[str, int] | None = None,
-    botn_cols: dict[str, int] | None = None,
-) -> DataFrame:
-    """F6: two-phase salted leaf rollup.
-
-    Phase 1 groups by (conv_id, bucket, salt) — the hot key's rows spread
-    over n_salts reducers. Phase 2 merges the sub-aggregates per
-    (conv_id, bucket) with the tier-composition algebra. Only algebraic
-    aggregates (sum/count/min/max) pass through this path — exact distincts
-    must bypass it (SURVEY.md §7.3). HLL sketch columns DO pass through:
-    register-max union is associative, so per-salt sketches union to the
-    estimate-exact equivalent of the unsalted sketch (asserted in
-    tests/test_pipeline_sketches.py). Histogram columns (`hist_cols`) pass
-    through EXACTLY: per-salt bin-count arrays sum element-wise to the
-    bit-identical unsalted histogram. First/last columns (`firstlast_cols`)
-    also pass through exactly: the carried unique order keys pick the same
-    winning row whichever salt it landed on.
-    """
-    from .rollup import (
-        HLL_LGK,
-        firstlast_merge_aggs,
-        firstlast_partial_aggs,
-        hist_merge_aggs,
-        hist_partial_aggs,
-        sumprod_partial_aggs,
-        sumsq_merge_aggs,
-        sumsq_partial_aggs,
-    )
-
-    fl_partial = firstlast_partial_aggs(firstlast_cols)
-    sketch_partial = (
-        [
-            F.hll_sketch_agg(c, F.lit(HLL_LGK)).alias(f"{c}_hll")
-            for c in (sketch_cols or [])
-        ]
-        + hist_partial_aggs(hist_cols)
-        + fl_partial
-        + sumsq_partial_aggs(sumsq_cols)
-        + sumprod_partial_aggs(sumprod_cols)
-    )
-    sketch_merge = (
-        [
-            F.hll_union_agg(f"{c}_hll").alias(f"{c}_hll")
-            for c in (sketch_cols or [])
-        ]
-        + hist_merge_aggs([f"{c}_hist" for c in sorted(hist_cols or {})])
-        + firstlast_merge_aggs(
-            ["fl_k_first", "fl_k_last"]
-            + [
-                f"{c}_{side}"
-                for c in sorted(firstlast_cols or [])
-                for side in ("first", "last")
-            ]
-            if firstlast_cols
-            else []
-        )
-        # per-salt Σx²/Σxy sums add to the unsalted ones exactly (long
-        # addition is associative) — same pass-through argument as token_sum
-        + sumsq_merge_aggs(
-            [f"{c}_sumsq" for c in sorted(sumsq_cols or [])]
-            + [f"{a}_x_{b}_sumprod" for a, b in sorted(sumprod_cols or [])]
-        )
-    )
-    df = with_metrics(t0).withColumn(
-        "_salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts))
-    )
-    partial = df.groupBy(
-        "conv_id",
-        F.date_trunc("hour", "ts").cast("timestamp_ntz").alias("bucket_start"),
-        "_salt",
-    ).agg(
-        F.count("*").alias("n_turns"),
-        F.sum("token_count").alias("token_sum"),
-        F.min("token_count").alias("token_min"),
-        F.max("token_count").alias("token_max"),
-        F.sum("is_tool").alias("tool_sum"),
-        F.min("is_tool").alias("tool_min"),
-        F.max("is_tool").alias("tool_max"),
-        *sketch_partial,
-    )
-    merged = partial.groupBy("conv_id", "bucket_start").agg(
-        F.sum("n_turns").alias("n_turns"),
-        F.sum("token_sum").alias("token_sum"),
-        F.min("token_min").alias("token_min"),
-        F.max("token_max").alias("token_max"),
-        F.sum("tool_sum").alias("tool_sum"),
-        F.min("tool_min").alias("tool_min"),
-        F.max("tool_max").alias("tool_max"),
-        *sketch_merge,
-    )
-    # frequency maps need no salt plumbing at all: their fine-keyed
-    # (conv, bucket, value) pre-aggregation is already skew-proof
-    # (engine/rollup.py freq_maps), so they join the merged state directly
-    from .rollup import freq_maps
-
-    fm = freq_maps(
-        df.withColumn(
-            "bucket_start",
-            F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-        ),
-        ["conv_id", "bucket_start"],
-        freq_cols,
-    )
-    if fm is not None:
-        from .rollup import empty_freq_map
-
-        merged = merged.join(fm, ["conv_id", "bucket_start"], "left")
-        for c in sorted(freq_cols):
-            merged = merged.withColumn(
-                f"{c}_freq", F.coalesce(f"{c}_freq", empty_freq_map())
-            )
-    # bounded heavy-hitter summaries: same argument — the fine-keyed
-    # pre-agg inside hh_partial_maps is salt-proof, so the MG state joins
-    # the merged rows directly and is BIT-IDENTICAL to the unsalted path
-    if hh_cols:
-        from .heavyhitters import hh_coalesce_empty, hh_partial_maps
-
-        hm = hh_partial_maps(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            hh_cols,
-        )
-        merged = hh_coalesce_empty(
-            merged.join(hm, ["conv_id", "bucket_start"], "left"), hh_cols
-        )
-    # KMV distinct sketches: same argument again — the fine-keyed
-    # (conv, bucket, hash) pre-distinct inside kmv_arrays is salt-proof,
-    # so the bottom-k state joins the merged rows directly and is
-    # BIT-IDENTICAL to the unsalted path (engine/kmv.py)
-    if kmv_cols:
-        from .kmv import empty_kmv_array, kmv_arrays, kmv_state_col
-
-        km = kmv_arrays(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            kmv_cols,
-        )
-        merged = merged.join(km, ["conv_id", "bucket_start"], "left")
-        for c, k in sorted(kmv_cols.items()):
-            merged = merged.withColumn(
-                kmv_state_col(c, k),
-                F.coalesce(kmv_state_col(c, k), empty_kmv_array()),
-            )
-    # sessionization state: the leaf window is partitioned by
-    # (conv_id, hour bucket) — per-task work is bounded by one
-    # conversation-hour regardless of key heat, so like freq/hh/kmv it
-    # joins the merged rows directly, bit-identical to the unsalted path
-    if session_gaps:
-        from .sessionstate import sess_leaf_states
-
-        ss = sess_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            session_gaps,
-        )
-        merged = merged.join(ss, ["conv_id", "bucket_start"], "left")
-    # duration-in-state: identical boundedness argument — the leaf window
-    # is keyed (conv, hour); joins the merged rows, bit-identical unsalted
-    if statedur_cols:
-        from .statedur import sd_leaf_states
-
-        sd = sd_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            statedur_cols,
-        )
-        merged = merged.join(sd, ["conv_id", "bucket_start"], "left")
-    # time-weighted-average state: leaf window keyed (conv, hour) —
-    # skew-bounded per conversation-hour, joins directly (statedur's
-    # argument), bit-identical to the unsalted path
-    if twa_cols:
-        from .twa import empty_twa_struct, twa_leaf_states, twa_state_col
-
-        tw = twa_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            twa_cols,
-        )
-        merged = merged.join(tw, ["conv_id", "bucket_start"], "left")
-        for c in sorted(set(twa_cols)):
-            merged = merged.withColumn(
-                twa_state_col(c),
-                F.coalesce(twa_state_col(c), empty_twa_struct()),
-            )
-    # quantile-sketch maps: fine-keyed (conv, hour, bucket-key) pre-agg
-    # inside qsk_maps is salt-proof (the freq argument), joins directly
-    if qsk_cols:
-        from .qsketch import empty_qsk_map, qsk_maps, qsk_state_col
-
-        qm = qsk_maps(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            qsk_cols,
-        )
-        merged = merged.join(qm, ["conv_id", "bucket_start"], "left")
-        for c in sorted(set(qsk_cols)):
-            merged = merged.withColumn(
-                qsk_state_col(c),
-                F.coalesce(qsk_state_col(c), empty_qsk_map()),
-            )
-    # top/bottom-N value state: leaf window keyed (conv, hour) —
-    # skew-bounded, joins directly, bit-identical to the unsalted path
-    for spec, direction in ((topn_cols, "top"), (botn_cols, "bot")):
-        if not spec:
-            continue
-        from .topn import empty_topn_array, topn_leaf_states, topn_state_col
-
-        tn = topn_leaf_states(
-            df.withColumn(
-                "bucket_start",
-                F.date_trunc("hour", "ts").cast("timestamp_ntz"),
-            ),
-            ["conv_id", "bucket_start"],
-            spec,
-            direction,
-        )
-        merged = merged.join(tn, ["conv_id", "bucket_start"], "left")
-        for c, n in sorted(spec.items()):
-            merged = merged.withColumn(
-                topn_state_col(c, n, direction),
-                F.coalesce(
-                    topn_state_col(c, n, direction), empty_topn_array()
-                ),
-            )
-    return merged.withColumns(
-        {
-            "hours_count": F.lit(1).cast("long"),
-            "hturns_min": F.col("n_turns"),
-            "hturns_max": F.col("n_turns"),
-            "tier": F.lit("hourly"),
-        }
-    )
+# A delegation kept for its importers: the benchmark's kernel timings
+# (perfbench/layers.py), which must run unchanged on older and newer
+# checkouts to compare them, and the per-family salt-parity tests.
+def rollup_hourly_salted(t0: DataFrame, n_salts: int = 16, **state) -> DataFrame:
+    """F6: the salted leaf rollup — rollup_hourly with `n_salts` salts."""
+    return rollup_hourly(t0, n_salts=n_salts, **state)
 
 
 def session_islands_salted(

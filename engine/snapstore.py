@@ -49,6 +49,7 @@ import json
 import os
 import shutil
 import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,10 +57,13 @@ _SNAPS = "_snaps"
 _CURRENT = "_CURRENT"
 
 
-#: published-snapshot DataFrame memo: (id(spark), snapshot dir) -> DataFrame.
+#: published-snapshot read memo: session -> {snapshot dir -> JVM DataFrame}.
 #: Safe because published snapshot trees are immutable (CoW — every write,
-#: drop or compaction begins a NEW snapshot id); bounded by a clear-on-cap.
-_READ_CACHE: dict = {}
+#: drop or compaction begins a NEW snapshot id); each session's memo is
+#: bounded by a clear-on-cap. Weakly keyed so a dropped session's entries
+#: go with it; the values are JVM handles because a Python DataFrame
+#: would hold its session and keep the key alive.
+_READ_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _READ_CACHE_CAP = 512
 
 
@@ -263,15 +267,15 @@ class SnapStore:
         path = self.snapshot_path(sid)
         if not os.path.isdir(path):
             raise SnapshotError(f"{self.root}: snapshot {sid!r} expired or unknown")
-        key = (id(spark), path)
-        cached = _READ_CACHE.get(key)
+        memo = _READ_CACHE.setdefault(spark, {})
+        cached = memo.get(path)
         if cached is not None:
-            return cached
+            return DataFrame(cached, spark)
         df = spark.read.option("basePath", path).parquet(*_data_dirs(path))
         if self.meta(sid).get("published"):
-            if len(_READ_CACHE) >= _READ_CACHE_CAP:
-                _READ_CACHE.clear()
-            _READ_CACHE[key] = df
+            if len(memo) >= _READ_CACHE_CAP:
+                memo.clear()
+            memo[path] = df._jdf
         return df
 
     # -- changelog -----------------------------------------------------------

@@ -265,3 +265,33 @@ def test_full_partition_delete_invalidates_output(spark, t0, tmp_path):
         pipe.read_tier("hourly").toPandas().sort_values(KEY, ignore_index=True)[cols],
         ref2.read_tier("hourly").toPandas().sort_values(KEY, ignore_index=True)[cols],
     )
+
+
+def test_both_legs_failing_raises_monthly_error(spark, tmp_path, monkeypatch):
+    """The monthly and series legs run concurrently; when both fail, the
+    monthly error (first in stage order) propagates and carries the series
+    error as its context."""
+    import engine.pipeline as pl
+
+    class MonthlyBoom(RuntimeError):
+        pass
+
+    class SeriesBoom(RuntimeError):
+        pass
+
+    real_rollup_up = pl.rollup_up
+
+    def rollup_up(lower, to_tier):
+        if to_tier == "monthly":
+            raise MonthlyBoom(to_tier)
+        return real_rollup_up(lower, to_tier)
+
+    def gapfill(*a, **k):
+        raise SeriesBoom("gapfill")
+
+    monkeypatch.setattr(pl, "rollup_up", rollup_up)
+    monkeypatch.setattr(pl, "gapfill", gapfill)
+    pipe = TierPipeline(spark, str(tmp_path / "root"), lease=False)
+    with pytest.raises(MonthlyBoom) as ei:
+        pipe.run(synth_transcripts(spark, n_convs=3, hot_turns=20))
+    assert isinstance(ei.value.__context__, SeriesBoom)

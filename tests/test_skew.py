@@ -56,6 +56,65 @@ def test_salted_view_identical(spark, t0):
     assert a.equals(b)
 
 
+#: every tier-state family of the hourly leaf, enabled at once
+ALL_FAMILIES = dict(
+    sketch_cols=["tool", "role"],
+    hist_cols={"token_count": (0.0, 50.0, 8)},
+    firstlast_cols=["role", "tool"],
+    sumsq_cols=["token_count"],
+    sumprod_cols=[("token_count", "is_tool")],
+    freq_cols=["tool"],
+    hh_cols={"role": 4},
+    kmv_cols={"tool": 8},
+    session_gaps=[30],
+    statedur_cols=["role"],
+    twa_cols=["token_count"],
+    qsk_cols=["token_count"],
+    topn_cols={"token_count": 3},
+    botn_cols={"token_count": 2},
+)
+
+
+def _canon(v):
+    """Order-free form of a collected value: map entries sorted, rows and
+    arrays as tuples (array order is part of the state)."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return tuple(_canon(x) for x in v)
+    return v
+
+
+def _leaf_rows(df):
+    # HLL sketch bytes depend on merge order; their estimates do not
+    df = df.withColumns(
+        {c: F.hll_sketch_estimate(c) for c in df.columns if c.endswith("_hll")}
+    )
+    return sorted(_canon(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def small_t0(spark):
+    df = synth_transcripts(spark, n_convs=20, hot_turns=300)
+    df.cache().count()
+    return df
+
+
+@pytest.fixture(scope="module")
+def plain_all(small_t0):
+    df = rollup_hourly(small_t0, **ALL_FAMILIES)
+    return df.schema.simpleString(), _leaf_rows(df)
+
+
+@pytest.mark.parametrize("n_salts", [1, 16])
+def test_salted_equals_unsalted_all_families(small_t0, plain_all, n_salts):
+    """One leaf, every family: the salted result equals the plain one row
+    for row, and both write one hourly schema (names, types and order), so
+    a root built under salted='auto' never mixes file schemas."""
+    salted = rollup_hourly_salted(small_t0, n_salts=n_salts, **ALL_FAMILIES)
+    assert (salted.schema.simpleString(), _leaf_rows(salted)) == plain_all
+
+
 def test_salt_spreads_hot_key(spark, t0):
     """The phase-1 aggregate must actually split the hot conversation."""
     from engine.bucket import with_metrics

@@ -695,3 +695,32 @@ def test_tags_pin_snapshots_and_survive_expire(spark, store):
         store.tag("ok-name", "no-such-snapshot")
     with pytest.raises(SnapshotError):
         store.resolve("neither-tag-nor-id")
+
+
+def test_read_cache_entries_go_with_their_session(spark, store):
+    """The published-snapshot read memo is keyed by the session object, not
+    its id(): a dropped session's entries are released with it (and a
+    recycled id can never hit a dead session's DataFrame)."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from engine import snapstore
+
+    _write_snapshot(store, _mk(spark, [("a", 1, 1.0)]))
+    n0 = len(snapstore._READ_CACHE)
+    to_df = RDD.toDF
+    try:
+        other = spark.newSession()
+        assert store.read(other).count() == 1
+        assert store.read(other).count() == 1  # memo hit, rewrapped for `other`
+        assert len(snapstore._READ_CACHE) == n0 + 1
+        ref = weakref.ref(other)
+        del other
+    finally:
+        # newSession() re-points RDD.toDF at the new session, which pins it
+        RDD.toDF = to_df
+    gc.collect()
+    assert ref() is None
+    assert len(snapstore._READ_CACHE) == n0

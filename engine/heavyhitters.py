@@ -47,6 +47,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .countmap import empty_counts, fold_counts
+
 _HH_RE = re.compile(r"^(?P<col>.+)_hh(?P<cap>\d+)$")
 _HHN_RE = re.compile(r"^(?P<col>.+)_hhn(?P<cap>\d+)$")
 
@@ -65,12 +67,6 @@ def parse_hh_col(name: str):
     if m and not _HHN_RE.match(name):
         return m.group("col"), int(m.group("cap"))
     return None
-
-
-def empty_hh_map():
-    return F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
 
 
 def mg_truncate(map_col, cap: int):
@@ -130,20 +126,16 @@ def hh_partial_maps(df: DataFrame, keys: list[str], hh_cols: dict[str, int] | No
     return out
 
 
-def hh_coalesce_empty(df: DataFrame, hh_cols: dict[str, int]) -> DataFrame:
-    """Buckets with no non-null values carry an empty map + 0 total (the
-    freq_cols convention: never NULL, so densify's gap-carry can't fire on
-    observed rows)."""
+def hh_empty_state(hh_cols: dict[str, int]) -> dict:
+    """The state of a bucket with no non-null values: an empty map + 0
+    total (the freq_cols convention: never NULL, so densify's gap-carry
+    can't fire on observed rows)."""
+    out = {}
     for c in sorted(hh_cols):
         cap = int(hh_cols[c])
-        df = df.withColumn(
-            hh_col_name(c, cap),
-            F.coalesce(hh_col_name(c, cap), empty_hh_map()),
-        ).withColumn(
-            hhn_col_name(c, cap),
-            F.coalesce(hhn_col_name(c, cap), F.lit(0).cast("long")),
-        )
-    return df
+        out[hh_col_name(c, cap)] = empty_counts()
+        out[hhn_col_name(c, cap)] = F.lit(0).cast("long")
+    return out
 
 
 def hh_merge_aggs(colnames: list[str]) -> list:
@@ -151,9 +143,6 @@ def hh_merge_aggs(colnames: list[str]) -> list:
     `<col>_hh{cap}`: exact key-union addition fold (order-independent),
     then one MG truncation of the merged map. `<col>_hhn{cap}`: sum."""
     out = []
-    seed = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
     for name in colnames:
         if _HHN_RE.match(name):
             out.append(F.sum(name).alias(name))
@@ -162,16 +151,7 @@ def hh_merge_aggs(colnames: list[str]) -> list:
         if parsed is None:
             continue
         _, cap = parsed
-        merged = F.aggregate(
-            F.collect_list(name),
-            seed,
-            lambda acc, m: F.map_zip_with(
-                acc,
-                m,
-                lambda k, a, b: F.coalesce(a, F.lit(0).cast("long"))
-                + F.coalesce(b, F.lit(0).cast("long")),
-            ),
-        )
+        merged = fold_counts(F.collect_list(name), empty_counts())
         out.append(mg_truncate(merged, cap).alias(name))
     return out
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .countmap import add_counts, empty_counts
 from .statedur import sd_state_col
 from .twa import twa_state_col
 
@@ -118,9 +119,7 @@ def interpolated_statedur(
     b_start, b_end = _bucket_bounds(tier)
     prev = F.lag(c).over(w)
     has_next = F.lead("bucket_start").over(w).isNotNull()
-    empty = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
+    empty = empty_counts()
     carry_in = F.when(
         prev.isNotNull() & (st["first_us"] > b_start),
         F.map_from_arrays(
@@ -136,20 +135,12 @@ def interpolated_statedur(
         ),
     ).otherwise(empty)
 
-    def add(a, b):
-        return F.map_zip_with(
-            a,
-            b,
-            lambda k, x, y: F.coalesce(x, F.lit(0).cast("long"))
-            + F.coalesce(y, F.lit(0).cast("long")),
-        )
-
     # generators cannot wrap window expressions — materialize the merged
     # map first, explode in a second projection
     merged = obs.select(
         "conv_id",
         "bucket_start",
-        add(add(st["durs"], carry_in), carry_out).alias("_m"),
+        add_counts(add_counts(st["durs"], carry_in), carry_out).alias("_m"),
     )
     return merged.select(
         "conv_id",

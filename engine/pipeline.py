@@ -39,6 +39,7 @@ from .checkpoint import (
 from .codec.chunks import make_chunks
 from .gapfill import gapfill, hourly_series
 from .rollup import (
+    FAMILIES,
     STATE_COLS,
     densify_hourly_locf,
     observed_state,
@@ -96,6 +97,7 @@ class TierPipeline:
         lease: bool = True,
         lease_ttl_s: float = 3600.0,
     ):
+        args = locals()  # the state-family keywords, by name (FAMILIES)
         self.spark = spark
         self.root = root
         if salted not in (True, False, "auto"):
@@ -118,106 +120,14 @@ class TierPipeline:
         #: snapshot behind an atomic pointer — concurrent readers are never
         #: torn, re-rolls are time-travelable, drops roll back
         self.snapshots = snapshots
-        #: raw columns sketched into mergeable HLL tier state (`<col>_hll`,
-        #: engine/rollup.py): the tier algebra's non-algebraic member.
-        #: The sketch spec is folded into the day-stage fingerprint, so
-        #: enabling (or disabling) sketches on an existing root triggers a
-        #: one-time manifest-gated incremental backfill of every tier —
-        #: schema evolution as just another fingerprint change.
-        self.sketch_cols = list(sketch_cols or [])
-        #: exact mergeable histogram tier state: {raw_col: (origin, width,
-        #: n_bins)} adds a `<col>_hist` array<long> of bin counts per tier
-        #: row (engine/rollup.py hist_partial_aggs). Unlike the HLL columns
-        #: this state is exact, so it joins the tier-state fingerprint as
-        #: its raw array; the spec folds into the day token the same way —
-        #: enabling histograms on an existing root is a one-time
-        #: manifest-gated backfill.
-        self.hist_cols = dict(hist_cols or {})
-        #: exact first/last (open/close) tier state per raw column, carried
-        #: with its unique (ts, turn_idx) order keys so it composes across
-        #: tiers and salts bit-identically (engine/rollup.py
-        #: firstlast_partial_aggs). Fingerprint + migration story identical
-        #: to hist_cols.
-        self.firstlast_cols = sorted(firstlast_cols or [])
-        #: exact sum-of-squares tier state per raw column (`<col>_sumsq`,
-        #: engine/rollup.py sumsq_partial_aggs): Σx² composes by long
-        #: addition across tiers and salts, so variance/stddev are served
-        #: from any tier with one final float expression. Fingerprint +
-        #: migration story identical to hist_cols.
-        self.sumsq_cols = sorted(sumsq_cols or [])
-        #: exact cross-product tier state per (a, b) column pair
-        #: (`<a>_x_<b>_sumprod`, engine/rollup.py sumprod_partial_aggs):
-        #: Σxy composes by addition, completing the second-moment algebra —
-        #: covariance/correlation/slope served from tiers. Fingerprint +
-        #: migration story identical to sumsq_cols.
-        self.sumprod_cols = sorted(tuple(p) for p in (sumprod_cols or []))
-        #: exact categorical frequency tier state per raw column
-        #: (`<col>_freq` map<string,long>, engine/rollup.py freq_maps):
-        #: value→count maps compose across tiers and salts by key-union
-        #: addition — exact heavy-hitters / distribution-over-categories
-        #: served from any tier. Fingerprint hashes the SORTED entry array
-        #: (map internal order is merge-order-dependent); migration story
-        #: identical to hist_cols.
-        self.freq_cols = sorted(freq_cols or [])
-        #: BOUNDED heavy-hitter tier state per raw column ({col: cap},
-        #: `<col>_hh{cap}` Misra–Gries map + `<col>_hhn{cap}` total,
-        #: engine/heavyhitters.py): the freq_cols variant whose per-bucket
-        #: state is hard-capped for high-cardinality columns; composes
-        #: across tiers (exact union-add fold + one truncation per row) and
-        #: salts (fine-keyed pre-agg, bit-identical to unsalted). Fingerprint
-        #: hashes the sorted entry array as JSON like freq; migration story
-        #: identical to hist_cols.
-        self.hh_cols = {c: int(k) for c, k in sorted((hh_cols or {}).items())}
-        #: KMV distinct sketches per raw column ({col: k}, `<col>_kmv{k}`
-        #: sorted bottom-k distinct-hash arrays, engine/kmv.py): the
-        #: set-algebra member of the tier algebra — supports intersection /
-        #: Jaccard / overlap between buckets, which the HLL columns cannot.
-        #: Merge is exact-deterministic (sorted-union-truncate), so tier
-        #: composition and the salted leaf are bit-identical to a direct
-        #: build; exact below k distincts per bucket. Fingerprint hashes
-        #: the canonical array as JSON (empty arrays must stay visible);
-        #: migration story identical to hist_cols.
-        self.kmv_cols = {c: int(k) for c, k in sorted((kmv_cols or {}).items())}
-        #: mergeable sessionization state per gap threshold in minutes
-        #: (`sessions_g{G}` structs, engine/sessionstate.py): per-bucket
-        #: island counts + boundary timestamps composing hourly→daily→
-        #: monthly by time-ordered monoid fold — session counts served
-        #: from any tier equal a fresh gaps-and-islands scan of raw.
-        #: Fingerprint hashes the struct as JSON; migration like hist_cols.
-        self.session_gaps = sorted({int(g) for g in (session_gaps or [])})
-        #: duration-in-state structs per categorical column
-        #: (`statedur_{col}`, engine/statedur.py): the TimescaleDB
-        #: state_agg — time-in-state maps composing across tiers by the
-        #: same ordered-monoid fold as sessions. Fingerprint hashes the
-        #: struct with its entries canonicalized; migration like hist_cols.
-        self.statedur_cols = sorted(set(statedur_cols or []))
-        #: time-weighted-average structs per numeric column (`twa_{col}`,
-        #: engine/twa.py): the TimescaleDB time_weight('locf')/gauge_agg
-        #: pair — exact integer LOCF integrals composing across tiers by
-        #: the ordered-monoid fold (boundary gaps weighted by the earlier
-        #: span's last value). Fingerprint hashes the struct as JSON;
-        #: migration like hist_cols.
-        self.twa_cols = sorted(set(twa_cols or []))
-        #: integer log-bucket quantile-sketch maps per numeric column
-        #: (`{col}_qsk`, engine/qsketch.py): DDSketch-style mergeable
-        #: quantile state with a hard ≤1/32 relative-error bound, exact
-        #: below 32; merge is key-union count addition (the freq fold),
-        #: so composition is exact as a multiset. Fingerprint hashes the
-        #: canonical sorted entry array as JSON (the freq lesson);
-        #: migration like hist_cols.
-        self.qsk_cols = sorted(set(qsk_cols or []))
-        #: exact top/bottom-N value state per numeric column
-        #: (`{col}_top{n}`/`{col}_bot{n}` arrays of (v, u, i) structs,
-        #: engine/topn.py): the n extremes with their timestamps, merge =
-        #: flatten+sort+truncate — bit-exact composition (the KMV
-        #: argument order-reversed). Fingerprint hashes the canonical
-        #: array as JSON; migration like hist_cols.
-        self.topn_cols = {
-            c: int(n) for c, n in sorted((topn_cols or {}).items())
-        }
-        self.botn_cols = {
-            c: int(n) for c, n in sorted((botn_cols or {}).items())
-        }
+        #: optional mergeable tier-state families (engine/rollup.py
+        #: FAMILIES): each keyword's normalised spec, under its own name.
+        #: A spec is part of the day-stage fingerprint token, so enabling or
+        #: disabling a family on an existing root triggers a one-time
+        #: manifest-gated incremental backfill of every tier — schema
+        #: evolution as just another fingerprint change.
+        for fam in FAMILIES:
+            setattr(self, fam.kwarg, fam.normalise(args[fam.kwarg]))
         #: write-audit-publish (requires snapshots): a run writes every
         #: stage into STAGED (unpublished) snapshots with manifest commits
         #: deferred; at the seal, `wap_audit(pipe)` (if given) inspects the
@@ -259,81 +169,14 @@ class TierPipeline:
         self.tombstones = TombstoneStore(root)
 
     @property
-    def _family_kwargs(self) -> dict:
-        """The state-family kwargs of rollup_hourly, as normalised above."""
-        return {
-            k: getattr(self, k)
-            for k in (
-                "sketch_cols", "hist_cols", "firstlast_cols", "sumsq_cols",
-                "sumprod_cols", "freq_cols", "hh_cols", "kmv_cols",
-                "session_gaps", "statedur_cols", "twa_cols", "qsk_cols",
-                "topn_cols", "botn_cols",
-            )
-        }
-
-    @property
-    def _sketch_token(self) -> str:
-        return (
-            "sketch:" + ",".join(sorted(self.sketch_cols))
-            if self.sketch_cols
-            else ""
-        )
-
-    @property
     def _day_token(self) -> str:
-        """Day-stage fingerprint configuration token: sketch spec + hourly
-        partition-spec version. Empty at the defaults, keeping historical
-        fingerprints byte-identical."""
-        parts = [self._sketch_token]
-        if self.hist_cols:
-            parts.append(
-                "hist:"
-                + ";".join(
-                    f"{c}={o},{w},{k}"
-                    for c, (o, w, k) in sorted(self.hist_cols.items())
-                )
-            )
-        if self.firstlast_cols:
-            parts.append("fl:" + ";".join(self.firstlast_cols))
-        if self.sumsq_cols:
-            parts.append("sq:" + ";".join(self.sumsq_cols))
-        if self.sumprod_cols:
-            parts.append(
-                "sp:" + ";".join(f"{a}*{b}" for a, b in self.sumprod_cols)
-            )
-        if self.freq_cols:
-            parts.append("fq:" + ";".join(self.freq_cols))
-        if self.hh_cols:
-            parts.append(
-                "hh:" + ";".join(f"{c}={k}" for c, k in self.hh_cols.items())
-            )
-        if self.kmv_cols:
-            parts.append(
-                "kmv:" + ";".join(f"{c}={k}" for c, k in self.kmv_cols.items())
-            )
-        if self.session_gaps:
-            parts.append(
-                "sess:" + ";".join(str(g) for g in self.session_gaps)
-            )
-        if self.statedur_cols:
-            parts.append("sd:" + ";".join(self.statedur_cols))
-        if self.twa_cols:
-            parts.append("twa:" + ";".join(self.twa_cols))
-        if self.qsk_cols:
-            parts.append("qsk:" + ";".join(self.qsk_cols))
-        if self.topn_cols:
-            parts.append(
-                "topn:"
-                + ";".join(f"{c}={n}" for c, n in self.topn_cols.items())
-            )
-        if self.botn_cols:
-            parts.append(
-                "botn:"
-                + ";".join(f"{c}={n}" for c, n in self.botn_cols.items())
-            )
+        """Day-stage fingerprint configuration token: the enabled state
+        families' specs + hourly partition-spec version. Empty at the
+        defaults, keeping historical fingerprints byte-identical."""
+        parts = [f.token(s) for f in FAMILIES if (s := getattr(self, f.kwarg))]
         if self.hourly_layout != 1:
             parts.append(f"layout:{self.hourly_layout}")
-        return "|".join(p for p in parts if p)
+        return "|".join(parts)
 
     def hourly_partition_cols(self) -> list[str]:
         return (
@@ -343,104 +186,18 @@ class TierPipeline:
         )
 
     def _tier_hash_cols(self) -> list:
-        """Fingerprint columns for tier-state inputs (daily/monthly/mirror).
-        Sketch columns join the fingerprint as their ESTIMATE (a
-        deterministic double) — raw sketch bytes can vary with aggregation
-        order and would cause spurious re-rolls. The gapfill/compress
-        fingerprints deliberately stay sketch-free (_STATE_HASH_COLS): those
-        outputs don't read sketches, so sketch-only changes must not re-roll
+        """Fingerprint columns for tier-state inputs (daily/monthly/mirror):
+        the state columns plus each enabled family's hash expressions
+        (engine/rollup.py FAMILIES). The gapfill/compress fingerprints
+        deliberately stay family-free (_STATE_HASH_COLS): those outputs
+        don't read family state, so family-only changes must not re-roll
         them."""
-        return (
-            _STATE_HASH_COLS
-            + [
-                F.hll_sketch_estimate(f"{c}_hll")
-                for c in sorted(self.sketch_cols)
-            ]
-            # hist arrays are exact + deterministic — hash them raw
-            + [F.col(f"{c}_hist") for c in sorted(self.hist_cols)]
-            # first/last values are exact + deterministic (unique order
-            # keys) — hash them raw too
-            + [
-                F.col(f"{c}_{side}")
-                for c in self.firstlast_cols
-                for side in ("first", "last")
-            ]
-            # Σx²/Σxy are exact + deterministic — hash raw
-            + [F.col(f"{c}_sumsq") for c in self.sumsq_cols]
-            + [F.col(f"{a}_x_{b}_sumprod") for a, b in self.sumprod_cols]
-            # freq maps are exact as MULTISETS of entries but internally
-            # merge-order-dependent — hash the canonical sorted entry array,
-            # AS JSON: xxhash64 skips empty arrays entirely (like nulls), so
-            # a raw empty array would make enable/disable migrations miss
-            # every all-empty-map day (mixed-schema tiers); the "[]" string
-            # is never hash-invisible
-            + [
-                F.to_json(F.sort_array(F.map_entries(f"{c}_freq")))
-                for c in self.freq_cols
-            ]
-            # hh maps: same canonical-JSON argument as freq (deterministic
-            # given the input multiset — see engine/heavyhitters.py merge
-            # strategy); the companion total is a plain long
-            + [
-                e
-                for c, k in self.hh_cols.items()
-                for e in (
-                    F.to_json(F.sort_array(F.map_entries(f"{c}_hh{k}"))),
-                    F.col(f"{c}_hhn{k}"),
-                )
-            ]
-            # KMV arrays are sorted + exact-deterministic — but hash them
-            # AS JSON, not raw: xxhash64 skips empty arrays (the freq
-            # lesson), and an all-null bucket's state is exactly []
-            + [
-                F.to_json(F.col(f"{c}_kmv{k}"))
-                for c, k in self.kmv_cols.items()
-            ]
-            # session structs are deterministic (the merge fold is ordered)
-            # — JSON for the same empty-visibility reason as the others
-            + [
-                F.to_json(F.col(f"sessions_g{g}"))
-                for g in self.session_gaps
-            ]
-            # statedur structs: canonicalize the internal map to sorted
-            # entries before hashing (merge-order-independent multiset,
-            # the freq lesson applies to the nested map too)
-            + [
-                e
-                for c in self.statedur_cols
-                for e in (
-                    F.col(f"statedur_{c}")["first_us"],
-                    F.col(f"statedur_{c}")["last_us"],
-                    F.col(f"statedur_{c}")["last_state"],
-                    F.to_json(
-                        F.sort_array(
-                            F.map_entries(F.col(f"statedur_{c}")["durs"])
-                        )
-                    ),
-                )
-            ]
-            # twa structs are flat + deterministic (unique order keys at
-            # the leaf, ordered fold upward) — JSON so an all-null
-            # bucket's NULL struct stays hash-visible
-            + [F.to_json(F.col(f"twa_{c}")) for c in self.twa_cols]
-            # qsk maps: canonical sorted entries AS JSON (the freq lesson
-            # — xxhash64 skips raw empty arrays, and all-null buckets
-            # carry exactly an empty map)
-            + [
-                F.to_json(F.sort_array(F.map_entries(f"{c}_qsk")))
-                for c in self.qsk_cols
-            ]
-            # top/bot-N arrays are already canonically ordered — JSON so
-            # empty arrays stay hash-visible
-            + [
-                F.to_json(F.col(f"{c}_top{n}"))
-                for c, n in self.topn_cols.items()
-            ]
-            + [
-                F.to_json(F.col(f"{c}_bot{n}"))
-                for c, n in self.botn_cols.items()
-            ]
-        )
+        return _STATE_HASH_COLS + [
+            e
+            for f in FAMILIES
+            if (s := getattr(self, f.kwarg))
+            for e in f.hash_cols(s)
+        ]
 
     # -- paths -------------------------------------------------------------
     def tier_path(self, tier: str) -> str:
@@ -1424,8 +1181,8 @@ class TierPipeline:
         # deferred keys out of the next run's work manifest forever.
         left: dict[str, int] = {}
 
-        # 1. raw -> hourly, keyed by day. The sketch spec is part of the
-        # fingerprint: turning sketches on/off re-rolls each day exactly once.
+        # 1. raw -> hourly, keyed by day. The state-family specs are part of
+        # the fingerprint: turning a family on/off re-rolls each day once.
         day_work = work_manifest(
             t0,
             F.col("bucket_date").cast("string"),
@@ -1450,7 +1207,9 @@ class TierPipeline:
                     f" ratio={st['ratio']:.1f} hot_est={st['hot_est']}"
                 )
             roll = rollup_hourly(
-                inp, n_salts=self.n_salts if salted else None, **self._family_kwargs
+                inp,
+                n_salts=self.n_salts if salted else None,
+                **{f.kwarg: getattr(self, f.kwarg) for f in FAMILIES},
             )
             if self.fill_tiers:
                 roll = densify_hourly_locf(roll)

@@ -47,6 +47,8 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .countmap import empty_counts, fold_counts
+
 _QSK_RE = re.compile(r"^(?P<base>.+)_qsk$")
 
 #: values with |v| below this are their own bucket (exact regime)
@@ -138,9 +140,7 @@ def qsk_maps(df: DataFrame, keys: list[str], qsk_cols: list[str] | None):
 
 
 def empty_qsk_map() -> Column:
-    return F.map_from_arrays(
-        F.array().cast("array<long>"), F.array().cast("array<long>")
-    )
+    return empty_counts("long")
 
 
 def qsk_fold_agg(col: str) -> Column:
@@ -149,16 +149,7 @@ def qsk_fold_agg(col: str) -> Column:
     multiset of entries; canonicalize via sort_array(map_entries) when
     hashing). Shared by the tier merges and the continuous-aggregate
     'percentile_qsk' kind."""
-    return F.aggregate(
-        F.collect_list(col),
-        empty_qsk_map(),
-        lambda acc, m: F.map_zip_with(
-            acc,
-            m,
-            lambda k, a, b: F.coalesce(a, F.lit(0).cast("long"))
-            + F.coalesce(b, F.lit(0).cast("long")),
-        ),
-    )
+    return fold_counts(F.collect_list(col), empty_qsk_map())
 
 
 def qsk_merge_aggs(colnames) -> list[Column]:

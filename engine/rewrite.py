@@ -368,6 +368,7 @@ def rewrite_range_hh(
     guaranteed present (mergeable-summaries no-false-dismissal). Bounds
     and bracketing are pytest-asserted against raw recounts."""
     from pyspark.sql import Window
+    from .countmap import empty_counts, fold_counts
     from .heavyhitters import hh_col_name, hhn_col_name
 
     spans = split_range(lo, hi)
@@ -386,20 +387,8 @@ def rewrite_range_hh(
             ).select("conv_id", F.col(hh).alias("m"), F.col(hhn).alias("n"))
         )
     u = reduce(lambda x, y: x.unionByName(y), parts)
-    seed = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
     merged = u.groupBy("conv_id").agg(
-        F.aggregate(
-            F.collect_list("m"),
-            seed,
-            lambda acc, m: F.map_zip_with(
-                acc,
-                m,
-                lambda _k, a, b: F.coalesce(a, F.lit(0).cast("long"))
-                + F.coalesce(b, F.lit(0).cast("long")),
-            ),
-        ).alias("m"),
+        fold_counts(F.collect_list("m"), empty_counts()).alias("m"),
         F.sum("n").alias("n_total"),
     )
     retained = F.aggregate(

@@ -23,14 +23,73 @@ mean/min/max/count over the hourly rates they cover. Because
 Σ r_h = (Σ n_h)/3600 exactly in ℝ, the engine composes the integer Σ n_h and
 divides once — bit-exact and identical to pandas summing rates only when the
 division is deferred, which the pandas oracle mirrors.
+
+Adding a state family: append one StateFamily record to the END of
+FAMILIES. It supplies the keyword name and its normaliser (shared by
+rollup_hourly and TierPipeline, whose attribute of that name holds the
+normalised spec), the day-token fragment and the fingerprint hash
+expressions (engine/pipeline.py), the column predicate recognising its
+state columns, their merge aggregates, and its leaf: either `partial`
+aggregates inside the core groupBy (which pass through the salt) or a
+fine-keyed `leaf` state frame joined onto the hourly rows, with the
+`empty` state a bucket without values gets. The table's order fixes the
+day-token, fingerprint and tier-schema column order of every root already
+written, so a record is never inserted, reordered or removed.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .bucket import TIER_ORDER, TIER_UNIT, bucket_span_seconds, with_metrics
+from .countmap import empty_counts, fold_counts
+from .heavyhitters import (
+    hh_col_name,
+    hh_empty_state,
+    hh_is_state_col,
+    hh_merge_aggs,
+    hh_partial_maps,
+    hhn_col_name,
+)
+from .kmv import (
+    empty_kmv_array,
+    kmv_arrays,
+    kmv_is_state_col,
+    kmv_merge_aggs,
+    kmv_state_col,
+)
+from .qsketch import (
+    empty_qsk_map,
+    qsk_is_state_col,
+    qsk_maps,
+    qsk_merge_aggs,
+    qsk_state_col,
+)
+from .sessionstate import (
+    sess_is_state_col,
+    sess_leaf_states,
+    sess_merge_aggs,
+    sess_state_col,
+)
+from .statedur import sd_is_state_col, sd_leaf_states, sd_merge_aggs, sd_state_col
+from .topn import (
+    empty_topn_array,
+    topn_is_state_col,
+    topn_leaf_states,
+    topn_merge_aggs,
+    topn_state_col,
+)
+from .twa import (
+    empty_twa_struct,
+    twa_is_state_col,
+    twa_leaf_states,
+    twa_merge_aggs,
+    twa_state_col,
+)
 
 STATE_COLS = [
     "n_turns",
@@ -67,10 +126,6 @@ def sumsq_partial_aggs(sumsq_cols: list | None) -> list:
         F.sum(F.col(c).cast("long") * F.col(c).cast("long")).alias(f"{c}_sumsq")
         for c in sorted(sumsq_cols or [])
     ]
-
-
-def sumsq_merge_aggs(cols: list[str]) -> list:
-    return [F.sum(c).alias(c) for c in sorted(cols)]
 
 
 def sumprod_partial_aggs(sumprod_cols: list | None) -> list:
@@ -146,10 +201,6 @@ def freq_maps(df: DataFrame, keys: list[str], freq_cols: list[str] | None):
     if not freq_cols:
         return None
     out = None
-    # NOTE: callers must coalesce the join result with EMPTY_FREQ_MAP —
-    # a bucket with no non-null values must carry an empty map, not NULL
-    # (the HLL precedent: hll_sketch_agg yields an empty sketch), so the
-    # densifier's gap-carry never fires on observed rows.
     for c in sorted(freq_cols):
         m = (
             df.filter(F.col(c).isNotNull())
@@ -166,36 +217,15 @@ def freq_maps(df: DataFrame, keys: list[str], freq_cols: list[str] | None):
     return out
 
 
-def empty_freq_map():
-    return F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
-
-
 def freq_merge_aggs(cols: list[str]) -> list:
     """Merge aggregates for `<col>_freq` maps: fold the tier-bounded list
     of maps with map_zip_with (key-union, count addition) — exact under any
     merge order, so frequency maps compose across tiers AND salts
     bit-identically (as multisets of entries; internal key order is
     canonicalized at hash/compare time)."""
-    out = []
-    seed = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
-    for c in cols:
-        out.append(
-            F.aggregate(
-                F.collect_list(c),
-                seed,
-                lambda acc, m: F.map_zip_with(
-                    acc,
-                    m,
-                    lambda k, a, b: F.coalesce(a, F.lit(0).cast("long"))
-                    + F.coalesce(b, F.lit(0).cast("long")),
-                ),
-            ).alias(c)
-        )
-    return out
+    return [
+        fold_counts(F.collect_list(c), empty_counts()).alias(c) for c in cols
+    ]
 
 
 def firstlast_partial_aggs(firstlast_cols: list[str] | None) -> list:
@@ -243,6 +273,262 @@ def firstlast_merge_aggs(columns: list[str]) -> list:
     return out
 
 
+@dataclass(frozen=True)
+class StateFamily:
+    """One optional mergeable tier-state family (see FAMILIES). `spec` is
+    the family's keyword value after `normalise`; a falsy spec is off."""
+
+    #: the rollup_hourly / TierPipeline keyword (and TierPipeline attribute)
+    kwarg: str
+    #: keyword value → spec; idempotent, so a normalised spec passes again
+    normalise: Callable[[Any], Any]
+    #: spec → its fragment of the day-stage fingerprint token
+    token: Callable[[Any], str]
+    #: spec → the expressions its state joins tier fingerprints with
+    hash_cols: Callable[[Any], list]
+    #: column name → whether it is this family's state
+    is_state: Callable[[str], bool]
+    #: state column names → merge aggregates; None when a sibling
+    #: family's merge step takes its columns
+    merge: Callable[[list[str]], list] | None
+    #: spec → partial aggregates inside the core hourly groupBy
+    partial: Callable[[Any], list] | None = None
+    #: (rows, keys, spec) → fine-keyed state frame joined onto the hourly rows
+    leaf: Callable[[DataFrame, list[str], Any], DataFrame] | None = None
+    #: spec → {state column: the state of a bucket with no values}
+    empty: Callable[[Any], dict] = lambda spec: {}
+
+
+def _sorted(v) -> list:
+    return sorted(v or [])
+
+
+def _sorted_set(v) -> list:
+    return sorted(set(v or []))
+
+
+def _caps(v) -> dict:
+    return {c: int(k) for c, k in sorted((v or {}).items())}
+
+
+def _list_token(tag: str):
+    return lambda spec: f"{tag}:" + ";".join(str(x) for x in spec)
+
+
+def _caps_token(tag: str):
+    return lambda spec: f"{tag}:" + ";".join(f"{c}={k}" for c, k in spec.items())
+
+
+def _json(col: str):
+    return F.to_json(F.col(col))
+
+
+def _map_json(m):
+    return F.to_json(F.sort_array(F.map_entries(m)))
+
+
+def _statedur_hash(spec) -> list:
+    out = []
+    for c in spec:
+        st = F.col(sd_state_col(c))
+        out += [st["first_us"], st["last_us"], st["last_state"]]
+        out.append(_map_json(st["durs"]))
+    return out
+
+
+def _topn_family(kwarg: str, direction: str, merge) -> StateFamily:
+    return StateFamily(
+        kwarg,
+        normalise=_caps,
+        token=_caps_token(f"{direction}n"),
+        hash_cols=lambda spec: [
+            _json(topn_state_col(c, n, direction)) for c, n in spec.items()
+        ],
+        is_state=topn_is_state_col,
+        merge=merge,
+        leaf=lambda df, keys, spec: topn_leaf_states(df, keys, spec, direction),
+        empty=lambda spec: {
+            topn_state_col(c, n, direction): empty_topn_array()
+            for c, n in spec.items()
+        },
+    )
+
+
+#: The optional tier-state families, in the order that fixes the day token,
+#: the fingerprint columns and the tier-schema column order — new families
+#: go at the END (module docstring). Every family is exact and mergeable
+#: (HLL is estimate-exact), so it composes hourly→daily→monthly and across
+#: salts, and enabling or disabling one on an existing root is a one-time
+#: manifest-gated backfill of every day: its spec is part of the day token.
+#: Fingerprints hash exact deterministic state raw; map state hashes its
+#: sorted entry array (map key order depends on merge order); and empty-able
+#: arrays, maps and structs hash AS JSON, because xxhash64 skips empty
+#: arrays and NULLs, so enable/disable migrations would miss every all-empty
+#: day, while the "[]" string is never hash-invisible. Fine-keyed families
+#: give a bucket with no values its `empty` state, never NULL, so the
+#: densifier's gap-carry cannot fire on observed rows.
+FAMILIES: tuple[StateFamily, ...] = (
+    # `<col>_hll` Datasketches HLL distinct-count sketch: the algebra's one
+    # non-algebraic member — exact distincts cannot compose, register-max
+    # union can. Nulls are skipped. Hashed as its ESTIMATE: raw sketch
+    # bytes vary with aggregation order.
+    StateFamily(
+        "sketch_cols",
+        normalise=lambda v: list(v or []),
+        token=lambda spec: "sketch:" + ",".join(sorted(spec)),
+        hash_cols=lambda spec: [
+            F.hll_sketch_estimate(f"{c}_hll") for c in sorted(spec)
+        ],
+        is_state=lambda c: c.endswith("_hll"),
+        merge=lambda cols: [F.hll_union_agg(c).alias(c) for c in cols],
+        partial=lambda spec: [
+            F.hll_sketch_agg(c, F.lit(HLL_LGK)).alias(f"{c}_hll") for c in spec
+        ],
+    ),
+    # `<col>_hist` bin counts, {col: (origin, width, n_bins)}: exact
+    # distribution state, merged by element-wise addition
+    StateFamily(
+        "hist_cols",
+        normalise=lambda v: dict(v or {}),
+        token=lambda spec: "hist:"
+        + ";".join(f"{c}={o},{w},{k}" for c, (o, w, k) in sorted(spec.items())),
+        hash_cols=lambda spec: [F.col(f"{c}_hist") for c in sorted(spec)],
+        is_state=lambda c: c.endswith("_hist"),
+        merge=hist_merge_aggs,
+        partial=hist_partial_aggs,
+    ),
+    # `<col>_first`/`<col>_last` open/close values + the shared order keys
+    # that make them composable (the keys are unique, so no ties)
+    StateFamily(
+        "firstlast_cols",
+        normalise=_sorted,
+        token=_list_token("fl"),
+        hash_cols=lambda spec: [
+            F.col(f"{c}_{side}") for c in spec for side in ("first", "last")
+        ],
+        is_state=lambda c: c.endswith(("_first", "_last")),
+        merge=firstlast_merge_aggs,
+        partial=firstlast_partial_aggs,
+    ),
+    # `<col>_sumsq` Σx² (variance/stddev from any tier with one final
+    # float expression); its merge step also takes the Σxy columns, sorted
+    # jointly, which fixes their order in the upper tiers
+    StateFamily(
+        "sumsq_cols",
+        normalise=_sorted,
+        token=_list_token("sq"),
+        hash_cols=lambda spec: [F.col(f"{c}_sumsq") for c in spec],
+        is_state=lambda c: c.endswith(("_sumsq", "_sumprod")),
+        merge=lambda cols: [F.sum(c).alias(c) for c in sorted(cols)],
+        partial=sumsq_partial_aggs,
+    ),
+    # `<a>_x_<b>_sumprod` Σxy per (a, b) pair (covariance, correlation,
+    # regression slope from tiers); merged by the Σx² step
+    StateFamily(
+        "sumprod_cols",
+        normalise=lambda v: sorted(tuple(p) for p in (v or [])),
+        token=lambda spec: "sp:" + ";".join(f"{a}*{b}" for a, b in spec),
+        hash_cols=lambda spec: [F.col(f"{a}_x_{b}_sumprod") for a, b in spec],
+        is_state=lambda c: c.endswith("_sumprod"),
+        merge=None,
+        partial=sumprod_partial_aggs,
+    ),
+    # `<col>_freq` value→count maps, merged by key-union addition
+    StateFamily(
+        "freq_cols",
+        normalise=_sorted,
+        token=_list_token("fq"),
+        hash_cols=lambda spec: [_map_json(f"{c}_freq") for c in spec],
+        is_state=lambda c: c.endswith("_freq"),
+        merge=freq_merge_aggs,
+        leaf=freq_maps,
+        empty=lambda spec: {f"{c}_freq": empty_counts() for c in spec},
+    ),
+    # {col: cap}: `<col>_hh{cap}` Misra–Gries map + `<col>_hhn{cap}` total
+    # (engine/heavyhitters.py), the freq variant hard-capped per bucket for
+    # high-cardinality columns
+    StateFamily(
+        "hh_cols",
+        normalise=_caps,
+        token=_caps_token("hh"),
+        hash_cols=lambda spec: [
+            e
+            for c, k in spec.items()
+            for e in (_map_json(hh_col_name(c, k)), F.col(hhn_col_name(c, k)))
+        ],
+        is_state=hh_is_state_col,
+        merge=hh_merge_aggs,
+        leaf=hh_partial_maps,
+        empty=hh_empty_state,
+    ),
+    # {col: k}: `<col>_kmv{k}` bottom-k distinct-hash arrays (engine/kmv.py),
+    # the set-algebra member (intersection, Jaccard — which HLL cannot);
+    # exact below k distincts per bucket
+    StateFamily(
+        "kmv_cols",
+        normalise=_caps,
+        token=_caps_token("kmv"),
+        hash_cols=lambda spec: [
+            _json(kmv_state_col(c, k)) for c, k in spec.items()
+        ],
+        is_state=kmv_is_state_col,
+        merge=kmv_merge_aggs,
+        leaf=kmv_arrays,
+        empty=lambda spec: {
+            kmv_state_col(c, k): empty_kmv_array() for c, k in spec.items()
+        },
+    ),
+    # gap minutes: `sessions_g{G}` island structs (engine/sessionstate.py).
+    # Every observed hourly row has a turn, so every key gets a state.
+    StateFamily(
+        "session_gaps",
+        normalise=lambda v: sorted({int(g) for g in (v or [])}),
+        token=_list_token("sess"),
+        hash_cols=lambda spec: [_json(sess_state_col(g)) for g in spec],
+        is_state=sess_is_state_col,
+        merge=sess_merge_aggs,
+        leaf=sess_leaf_states,
+    ),
+    # `statedur_{col}` time-in-state structs (engine/statedur.py); the
+    # nested map hashes as sorted entries. Every key gets a state.
+    StateFamily(
+        "statedur_cols",
+        normalise=_sorted_set,
+        token=_list_token("sd"),
+        hash_cols=_statedur_hash,
+        is_state=sd_is_state_col,
+        merge=sd_merge_aggs,
+        leaf=sd_leaf_states,
+    ),
+    # `twa_{col}` time-weighted-average structs (engine/twa.py)
+    StateFamily(
+        "twa_cols",
+        normalise=_sorted_set,
+        token=_list_token("twa"),
+        hash_cols=lambda spec: [_json(twa_state_col(c)) for c in spec],
+        is_state=twa_is_state_col,
+        merge=twa_merge_aggs,
+        leaf=twa_leaf_states,
+        empty=lambda spec: {twa_state_col(c): empty_twa_struct() for c in spec},
+    ),
+    # `{col}_qsk` log-bucket quantile-sketch maps (engine/qsketch.py)
+    StateFamily(
+        "qsk_cols",
+        normalise=_sorted_set,
+        token=_list_token("qsk"),
+        hash_cols=lambda spec: [_map_json(qsk_state_col(c)) for c in spec],
+        is_state=qsk_is_state_col,
+        merge=qsk_merge_aggs,
+        leaf=qsk_maps,
+        empty=lambda spec: {qsk_state_col(c): empty_qsk_map() for c in spec},
+    ),
+    # {col: n}: `{col}_top{n}` / `{col}_bot{n}` extreme-value arrays
+    # (engine/topn.py); one merge step takes both directions
+    _topn_family("topn_cols", "top", topn_merge_aggs),
+    _topn_family("botn_cols", "bot", None),
+)
+
+
 def rollup_hourly(
     t0: DataFrame,
     n_salts: int | None = None,
@@ -282,36 +568,14 @@ def rollup_hourly(
     distincts could not pass through and are never tier state (SURVEY.md
     §7.3). `None` runs the one-phase aggregate. Both modes emit one schema.
 
-    `sketch_cols` adds a mergeable Datasketches HLL column `<col>_hll` per
-    named raw column (distinct-count sketch of that column's values under
-    the bucket) — the tier algebra's non-algebraic member: exact distincts
-    cannot compose hourly→daily→monthly, but HLL register-max union can,
-    so `rollup_up` merges these columns with `hll_union_agg` exactly like
-    sum/min/max. Nulls are skipped by the sketch (e.g. non-tool turns).
-
-    `hist_cols` ({col: (origin, width, n_bins)}) adds an EXACT mergeable
-    `<col>_hist` array<long> of bin counts per spec'd column — distribution
-    state that composes hourly→daily→monthly (and across salts) by
-    element-wise addition, bit-identically to recomputing from raw.
-
-    `firstlast_cols` adds exact open/close state: `{c}_first`/`{c}_last`
-    plus the shared order-key carriers that make first/last composable
-    across tiers (see firstlast_partial_aggs).
-
-    The remaining families (freq, hh, kmv, sessions, statedur, twa, qsk,
-    top-N/bottom-N) are built from fine-keyed (conv, hour, …) state that is
-    skew-proof without salt plumbing, and join the aggregated rows.
+    Each other keyword enables one of the FAMILIES of optional tier state.
+    The partial families (HLL, hist, first/last, Σx², Σxy) aggregate in
+    the core groupBy; the rest are built from fine-keyed (conv, hour, …)
+    state that is skew-proof without salt plumbing, and join the
+    aggregated rows.
     """
-    partial_aggs = (
-        [
-            F.hll_sketch_agg(c, F.lit(HLL_LGK)).alias(f"{c}_hll")
-            for c in (sketch_cols or [])
-        ]
-        + hist_partial_aggs(hist_cols)
-        + firstlast_partial_aggs(firstlast_cols)
-        + sumsq_partial_aggs(sumsq_cols)
-        + sumprod_partial_aggs(sumprod_cols)
-    )
+    given = locals()  # the family keywords, by name
+    on = [(f, s) for f in FAMILIES if (s := f.normalise(given[f.kwarg]))]
     df = with_metrics(t0)
     # date_trunc returns session-TZ TIMESTAMP; the engine's canonical
     # bucket type is TIMESTAMP_NTZ (naive UTC) — cast at the source so no
@@ -331,87 +595,19 @@ def rollup_hourly(
         F.sum("is_tool").alias("tool_sum"),
         F.min("is_tool").alias("tool_min"),
         F.max("is_tool").alias("tool_max"),
-        *partial_aggs,
+        *[a for f, s in on if f.partial for a in f.partial(s)],
     )
     if n_salts is not None:
         hourly = hourly.groupBy("conv_id", "bucket_start").agg(
             *state_merge_aggs(hourly.columns)
         )
-
-    # fine-keyed families: a bucket with no value for the family carries its
-    # empty state, never NULL, so densify's gap-carry can't fire on
-    # observed rows
     keys = ["conv_id", "bucket_start"]
     leaf = df.withColumn("bucket_start", hour)
-
-    def join(acc, state, empty=None):
-        acc = acc.join(state, keys, "left")
-        for c, e in (empty or {}).items():
-            acc = acc.withColumn(c, F.coalesce(c, e))
-        return acc
-
-    if freq_cols:
-        hourly = join(
-            hourly,
-            freq_maps(leaf, keys, freq_cols),
-            {f"{c}_freq": empty_freq_map() for c in sorted(freq_cols)},
-        )
-    if hh_cols:
-        from .heavyhitters import hh_coalesce_empty, hh_partial_maps
-
-        hourly = hh_coalesce_empty(
-            join(hourly, hh_partial_maps(leaf, keys, hh_cols)), hh_cols
-        )
-    if kmv_cols:
-        from .kmv import empty_kmv_array, kmv_arrays, kmv_state_col
-
-        hourly = join(
-            hourly,
-            kmv_arrays(leaf, keys, kmv_cols),
-            {
-                kmv_state_col(c, k): empty_kmv_array()
-                for c, k in sorted(kmv_cols.items())
-            },
-        )
-    if session_gaps:
-        from .sessionstate import sess_leaf_states
-
-        # every observed hourly row has at least one turn, so the session
-        # pass emits a state for every key — no empty state needed
-        hourly = join(hourly, sess_leaf_states(leaf, keys, session_gaps))
-    if statedur_cols:
-        from .statedur import sd_leaf_states
-
-        hourly = join(hourly, sd_leaf_states(leaf, keys, statedur_cols))
-    if twa_cols:
-        from .twa import empty_twa_struct, twa_leaf_states, twa_state_col
-
-        hourly = join(
-            hourly,
-            twa_leaf_states(leaf, keys, twa_cols),
-            {twa_state_col(c): empty_twa_struct() for c in sorted(set(twa_cols))},
-        )
-    if qsk_cols:
-        from .qsketch import empty_qsk_map, qsk_maps, qsk_state_col
-
-        hourly = join(
-            hourly,
-            qsk_maps(leaf, keys, qsk_cols),
-            {qsk_state_col(c): empty_qsk_map() for c in sorted(set(qsk_cols))},
-        )
-    for spec, direction in ((topn_cols, "top"), (botn_cols, "bot")):
-        if not spec:
-            continue
-        from .topn import empty_topn_array, topn_leaf_states, topn_state_col
-
-        hourly = join(
-            hourly,
-            topn_leaf_states(leaf, keys, spec, direction),
-            {
-                topn_state_col(c, n, direction): empty_topn_array()
-                for c, n in sorted(spec.items())
-            },
-        )
+    for f, s in on:
+        if f.leaf:
+            hourly = hourly.join(f.leaf(leaf, keys, s), keys, "left")
+            for c, e in f.empty(s).items():
+                hourly = hourly.withColumn(c, F.coalesce(c, e))
     return hourly.withColumns(
         {
             "hours_count": F.lit(1).cast("long"),
@@ -463,22 +659,7 @@ def densify_hourly_locf(hourly: DataFrame) -> DataFrame:
     )
     gap = F.col("n_turns").isNull()
     carry_cols = STATE_COLS + [
-        c
-        for c in hourly.columns
-        if c.endswith("_hll")
-        or c.endswith("_hist")
-        or c.endswith("_first")
-        or c.endswith("_last")
-        or c.endswith("_sumsq")
-        or c.endswith("_sumprod")
-        or c.endswith("_freq")
-        or _is_hh(c)
-        or _is_kmv(c)
-        or _is_sess(c)
-        or _is_sd(c)
-        or _is_twa(c)
-        or _is_qsk(c)
-        or _is_topn(c)
+        c for c in hourly.columns if any(f.is_state(c) for f in FAMILIES)
     ]
     return dense.select(
         "conv_id",
@@ -491,112 +672,6 @@ def densify_hourly_locf(hourly: DataFrame) -> DataFrame:
         gap.alias("filled"),
         F.when(gap, F.lit("locf")).alias("fill_method"),
     )
-
-
-def _is_hh(name: str) -> bool:
-    from .heavyhitters import hh_is_state_col
-
-    return hh_is_state_col(name)
-
-
-def _hh_merges(colnames) -> list:
-    """Bounded heavy-hitter state merges, cap recovered from the
-    self-describing `<col>_hh{cap}` names (engine/heavyhitters.py)."""
-    from .heavyhitters import hh_is_state_col, hh_merge_aggs
-
-    hh = [c for c in colnames if hh_is_state_col(c)]
-    return hh_merge_aggs(hh) if hh else []
-
-
-def _is_kmv(name: str) -> bool:
-    from .kmv import kmv_is_state_col
-
-    return kmv_is_state_col(name)
-
-
-def _kmv_merges(colnames) -> list:
-    """KMV distinct-sketch merges (`<col>_kmv{k}`, engine/kmv.py):
-    sorted-union-truncate — exact-deterministic under any grouping, so
-    tier composition is bit-identical to a direct build."""
-    from .kmv import kmv_merge_aggs
-
-    return kmv_merge_aggs(colnames)
-
-
-def _is_sd(name: str) -> bool:
-    from .statedur import sd_is_state_col
-
-    return sd_is_state_col(name)
-
-
-def _sd_merges(colnames) -> list:
-    """Duration-in-state merges (`statedur_{col}`, engine/statedur.py):
-    time-ordered monoid fold attributing boundary intervals to the
-    earlier span's last state."""
-    from .statedur import sd_merge_aggs
-
-    return sd_merge_aggs(colnames)
-
-
-def _is_sess(name: str) -> bool:
-    from .sessionstate import sess_is_state_col
-
-    return sess_is_state_col(name)
-
-
-def _is_twa(name: str) -> bool:
-    from .twa import twa_is_state_col
-
-    return twa_is_state_col(name)
-
-
-def _twa_merges(colnames) -> list:
-    """Time-weighted-average state merges (`twa_{col}`, engine/twa.py):
-    time-ordered monoid fold — boundary gaps weighted by the earlier
-    span's last value (LOCF), exact integer value·micros."""
-    from .twa import twa_merge_aggs
-
-    return twa_merge_aggs(colnames)
-
-
-def _is_qsk(name: str) -> bool:
-    from .qsketch import qsk_is_state_col
-
-    return qsk_is_state_col(name)
-
-
-def _is_topn(name: str) -> bool:
-    from .topn import topn_is_state_col
-
-    return topn_is_state_col(name)
-
-
-def _topn_merges(colnames) -> list:
-    """Top/bottom-N value-state merges (`{col}_top{n}`/`{col}_bot{n}`,
-    engine/topn.py): flatten + comparator-sort + truncate — the n
-    extremes of a union are a pure function of each part's n extremes,
-    so composition is bit-exact."""
-    from .topn import topn_merge_aggs
-
-    return topn_merge_aggs(colnames)
-
-
-def _qsk_merges(colnames) -> list:
-    """Quantile-sketch state merges (`{col}_qsk`, engine/qsketch.py):
-    key-union count addition — exact multiset composition, so tier
-    quantiles == a direct sketch of raw."""
-    from .qsketch import qsk_merge_aggs
-
-    return qsk_merge_aggs(colnames)
-
-
-def _sess_merges(colnames) -> list:
-    """Sessionization state merges (`sessions_g{G}`,
-    engine/sessionstate.py): time-ordered monoid fold — session counts
-    compose across buckets exactly (boundary islands re-merge)."""
-    from .sessionstate import sess_merge_aggs
-
-    return sess_merge_aggs(colnames)
 
 
 def rollup_up(lower: DataFrame, to_tier: str) -> DataFrame:
@@ -626,32 +701,16 @@ def rollup_up(lower: DataFrame, to_tier: str) -> DataFrame:
 def state_merge_aggs(columns) -> list:
     """The FULL tier-state composition list: algebraic metric aggregates
     (sum←sum, min←min, max←max) plus every optional state family's merge,
-    keyed on the self-describing column suffixes. Any grouping of tier
+    keyed on the self-describing column names (FAMILIES). Any grouping of tier
     rows composed with these aggregates equals recomputing from raw —
     rollup_up (calendar tiers) and rollup_grain (arbitrary N-hour grains)
     are the same operation over different bucket keys."""
-    # any HLL sketch columns in the lower tier merge upward by register-max
-    # union — same one-shuffle partial+final shape as the algebraic aggs
-    sketch_merges = (
-        [F.hll_union_agg(c).alias(c) for c in columns if c.endswith("_hll")]
-        + hist_merge_aggs([c for c in columns if c.endswith("_hist")])
-        + firstlast_merge_aggs(columns)
-        + sumsq_merge_aggs(
-            [
-                c
-                for c in columns
-                if c.endswith("_sumsq") or c.endswith("_sumprod")
-            ]
-        )
-        + freq_merge_aggs([c for c in columns if c.endswith("_freq")])
-        + _hh_merges(columns)
-        + _kmv_merges(columns)
-        + _sess_merges(columns)
-        + _sd_merges(columns)
-        + _twa_merges(columns)
-        + _qsk_merges(columns)
-        + _topn_merges(columns)
-    )
+    family_merges = [
+        a
+        for f in FAMILIES
+        if f.merge
+        for a in f.merge([c for c in columns if f.is_state(c)])
+    ]
     # hour-count state is absent only from the salted leaf's per-salt
     # partials: rollup_hourly derives it after the salt merge
     hour_merges = (
@@ -672,7 +731,7 @@ def state_merge_aggs(columns) -> list:
         F.min("tool_min").alias("tool_min"),
         F.max("tool_max").alias("tool_max"),
         *hour_merges,
-        *sketch_merges,
+        *family_merges,
     ]
 
 

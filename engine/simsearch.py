@@ -405,10 +405,11 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Deterministic kmeans-lite coarse quantizer for IVF: init = the k
     lowest vec_ids (or a caller-supplied (cid, ce) table), then `iters`
-    Lloyd rounds — assign each vector to its max-dot centroid (broadcast k
-    rows), recompute centroids as per-cluster means (array HOF zip_with
-    folding inside a partial+final agg). Every data-scale step is one
-    broadcast + one shuffle on the cluster id; no Python touches vectors.
+    Lloyd rounds — assign each vector to its max-cosine centroid (cosine
+    similarity, ties to the lower cid; broadcast k rows), recompute
+    centroids as per-cluster means (array HOF zip_with folding inside a
+    partial+final agg). Every data-scale step is one broadcast + one
+    shuffle on the cluster id; no Python touches vectors.
 
     `reseed` adds the standard degenerate-cluster treatment: between
     rounds, starved centroids — population under total/(3k), or vanished
@@ -437,8 +438,9 @@ def kmeans_centroids(
     dim = DIM
     for _ in range(iters):
         # vectorized best-centroid assignment (assign_centroids): one Arrow
-        # pass instead of the n×k crossJoin with an interpreted HOF dot per
-        # pair and a row_number window — sims and tie-breaks bit-identical
+        # pass ranking centroids by cosine similarity (sim DESC, cid ASC),
+        # not by raw dot — the ranking ivf_cosine_topk uses, with sims and
+        # tie-breaks bit-identical to its crossJoin + row_number window
         assigned = assign_centroids(v, cents)
         # per-cluster mean: element-wise array sum (zip_with fold) / count
         zero = F.array(*[F.lit(0.0) for _ in range(dim)])

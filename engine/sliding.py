@@ -389,6 +389,7 @@ def sliding_hh(
     Returns observed (keys, bucket_start) rows with `w_hh`
     (map<value,long>) and `w_total`.
     """
+    from .countmap import empty_counts, fold_counts
     from .heavyhitters import hh_col_name, hhn_col_name, mg_truncate
 
     if window_hours <= 0:
@@ -403,19 +404,7 @@ def sliding_hh(
         .orderBy("_hidx")
         .rangeBetween(-(int(window_hours) - 1), 0)
     )
-    seed = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
-    merged = F.aggregate(
-        F.collect_list(F.col(hh)).over(w),
-        seed,
-        lambda acc, m: F.map_zip_with(
-            acc,
-            m,
-            lambda k, a, b: F.coalesce(a, F.lit(0).cast("long"))
-            + F.coalesce(b, F.lit(0).cast("long")),
-        ),
-    )
+    merged = fold_counts(F.collect_list(F.col(hh)).over(w), empty_counts())
     return h.select(
         *keys,
         "bucket_start",

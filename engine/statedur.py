@@ -40,6 +40,8 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .countmap import add_counts, empty_counts
+
 _SD_RE = re.compile(r"^statedur_(?P<col>.+)$")
 
 NULL_STATE = "<null>"
@@ -55,21 +57,6 @@ def sd_is_state_col(name: str) -> bool:
 
 def _us(col) -> Column:
     return F.unix_micros(F.col(col).cast("timestamp_ltz"))
-
-
-def _empty_durs() -> Column:
-    return F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<long>")
-    )
-
-
-def _add_maps(a: Column, b: Column) -> Column:
-    return F.map_zip_with(
-        a,
-        b,
-        lambda k, x, y: F.coalesce(x, F.lit(0).cast("long"))
-        + F.coalesce(y, F.lit(0).cast("long")),
-    )
 
 
 def sd_leaf_states(
@@ -112,7 +99,7 @@ def sd_leaf_states(
                 F.col("_first_us").alias("first_us"),
                 F.col("_last_us").alias("last_us"),
                 F.col("_last_state").alias("last_state"),
-                F.coalesce("_durs", _empty_durs()).alias("durs"),
+                F.coalesce("_durs", empty_counts()).alias("durs"),
             ).alias(sd_state_col(c)),
         )
         out = m if out is None else out.join(m, keys, "full")
@@ -141,8 +128,8 @@ def sd_merge_aggs(colnames) -> list[Column]:
                 acc["first_us"].alias("first_us"),
                 s["last_us"].alias("last_us"),
                 s["last_state"].alias("last_state"),
-                _add_maps(
-                    _add_maps(
+                add_counts(
+                    add_counts(
                         acc["durs"],
                         F.map_from_arrays(
                             F.array(acc["last_state"]),

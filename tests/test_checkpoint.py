@@ -295,3 +295,101 @@ def test_both_legs_failing_raises_monthly_error(spark, tmp_path, monkeypatch):
     with pytest.raises(MonthlyBoom) as ei:
         pipe.run(synth_transcripts(spark, n_convs=3, hot_turns=20))
     assert isinstance(ei.value.__context__, SeriesBoom)
+
+
+#: every state family enabled, inputs deliberately unsorted and duplicated;
+#: the Σxy pair sorts before the Σx² column
+PIN_FAMILIES = dict(
+    sketch_cols=["tool", "role"],
+    hist_cols={"token_count": (0.0, 50.0, 8), "is_tool": (0, 1, 2)},
+    firstlast_cols=["tool", "role"],
+    sumsq_cols=["token_count"],
+    sumprod_cols=[("is_tool", "token_count")],
+    freq_cols=["tool", "role"],
+    hh_cols={"role": 4, "tool": 16},
+    kmv_cols={"tool": 8},
+    session_gaps=[60, 30, 30],
+    statedur_cols=["role", "role"],
+    twa_cols=["token_count"],
+    qsk_cols=["token_count", "is_tool"],
+    topn_cols={"token_count": 3},
+    botn_cols={"token_count": 2},
+)
+
+
+def test_family_fingerprint_pinned(spark, tmp_path):
+    """The day-stage config token, the tier-state hash columns and the
+    normalised family attributes are persisted (in manifests) or read by
+    the serving API; any change silently re-rolls every day of an
+    existing root, so they are pinned literally."""
+    pipe = TierPipeline(
+        spark, str(tmp_path / "root"), hourly_layout=2, **PIN_FAMILIES
+    )
+    assert pipe._day_token == (
+        "sketch:role,tool|hist:is_tool=0,1,2;token_count=0.0,50.0,8"
+        "|fl:role;tool|sq:token_count|sp:is_tool*token_count|fq:role;tool"
+        "|hh:role=4;tool=16|kmv:tool=8|sess:30;60|sd:role|twa:token_count"
+        "|qsk:is_tool;token_count|topn:token_count=3|botn:token_count=2"
+        "|layout:2"
+    )
+    assert [str(c) for c in pipe._tier_hash_cols()] == [
+        "conv_id", "bucket_start", "n_turns", "token_sum", "token_min",
+        "token_max", "tool_sum", "tool_min", "tool_max", "hours_count",
+        "hturns_min", "hturns_max",
+        "Column<'hll_sketch_estimate(role_hll)'>",
+        "Column<'hll_sketch_estimate(tool_hll)'>",
+        "Column<'is_tool_hist'>",
+        "Column<'token_count_hist'>",
+        "Column<'role_first'>",
+        "Column<'role_last'>",
+        "Column<'tool_first'>",
+        "Column<'tool_last'>",
+        "Column<'token_count_sumsq'>",
+        "Column<'is_tool_x_token_count_sumprod'>",
+        "Column<'to_json(sort_array(map_entries(role_freq), true))'>",
+        "Column<'to_json(sort_array(map_entries(tool_freq), true))'>",
+        "Column<'to_json(sort_array(map_entries(role_hh4), true))'>",
+        "Column<'role_hhn4'>",
+        "Column<'to_json(sort_array(map_entries(tool_hh16), true))'>",
+        "Column<'tool_hhn16'>",
+        "Column<'to_json(tool_kmv8)'>",
+        "Column<'to_json(sessions_g30)'>",
+        "Column<'to_json(sessions_g60)'>",
+        "Column<'statedur_role['first_us']'>",
+        "Column<'statedur_role['last_us']'>",
+        "Column<'statedur_role['last_state']'>",
+        "Column<'to_json(sort_array(map_entries(statedur_role['durs']), true))'>",
+        "Column<'to_json(twa_token_count)'>",
+        "Column<'to_json(sort_array(map_entries(is_tool_qsk), true))'>",
+        "Column<'to_json(sort_array(map_entries(token_count_qsk), true))'>",
+        "Column<'to_json(token_count_top3)'>",
+        "Column<'to_json(token_count_bot2)'>",
+    ]
+    attrs = {
+        k: list(v.items()) if isinstance(v, dict) else v
+        for k, v in ((k, getattr(pipe, k)) for k in PIN_FAMILIES)
+    }
+    assert attrs == {
+        "sketch_cols": ["tool", "role"],
+        "hist_cols": [("token_count", (0.0, 50.0, 8)), ("is_tool", (0, 1, 2))],
+        "firstlast_cols": ["role", "tool"],
+        "sumsq_cols": ["token_count"],
+        "sumprod_cols": [("is_tool", "token_count")],
+        "freq_cols": ["role", "tool"],
+        "hh_cols": [("role", 4), ("tool", 16)],
+        "kmv_cols": [("tool", 8)],
+        "session_gaps": [30, 60],
+        "statedur_cols": ["role"],
+        "twa_cols": ["token_count"],
+        "qsk_cols": ["is_tool", "token_count"],
+        "topn_cols": [("token_count", 3)],
+        "botn_cols": [("token_count", 2)],
+    }
+    # defaults add nothing, so historical fingerprints stay byte-identical
+    plain = TierPipeline(spark, str(tmp_path / "plain"))
+    assert plain._day_token == ""
+    assert [str(c) for c in plain._tier_hash_cols()] == [
+        "conv_id", "bucket_start", "n_turns", "token_sum", "token_min",
+        "token_max", "tool_sum", "tool_min", "tool_max", "hours_count",
+        "hturns_min", "hturns_max",
+    ]

@@ -6,8 +6,9 @@ the common lifecycle reads as one object:
 
     eng = TierEngine(spark, root, salted=True, snapshots=True,
                      freq_cols=["tool"])
-    eng.run(t0)                                   # tiers + gapfill + chunks
+    eng.run(t0)                                   # tiers + chunks
     eng.serve_range(lo, hi)                        # exact agg from tiers
+    eng.serve_gapfill(lo, hi)                      # LOCF/linear fill on read
     eng.serve_range_topk(lo, hi, "tool")           # exact heavy hitters
     eng.serve_realtime(lo, hi, watermark, t0_live) # straddles the watermark
     eng.sql("SELECT * FROM tiers_monthly ...")     # SQL over the tiers
@@ -53,8 +54,8 @@ class TierEngine:
         stages=None,
         budget: int | None = None,
     ) -> dict:
-        """One batch run: dedup/mask → hourly → daily → monthly → gapfill →
-        compress, manifest-gated per partition (only changed work re-rolls),
+        """One batch run: dedup/mask → hourly → daily → monthly → compress,
+        manifest-gated per partition (only changed work re-rolls),
         serialized by the root's writer lease. `budget` bounds each stage
         to its N oldest pending partitions (bounded-increment backfill);
         deferred work is reported in the result's `left` map."""
@@ -123,7 +124,7 @@ class TierEngine:
         }
         if self.pipeline.snapshots:
             snaps: dict = {}
-            for name in ("hourly", "daily", "monthly", "gapfill", "chunks"):
+            for name in self.pipeline.TABLE_NAMES:
                 store = self.pipeline._store(self.pipeline.table_path(name))
                 cur = store.current_id()
                 snaps[name] = {
@@ -741,6 +742,26 @@ class TierEngine:
             self.pipeline.read_table("chunks"),
             lo,
             hi,
+            metrics,
+        )
+
+    def serve_gapfill(
+        self, lo: datetime, hi: datetime, metrics: list[str] | None = None
+    ) -> DataFrame:
+        """Gap-filled long-form hourly series over [lo, hi), filled on read
+        with the pipeline's `fill_method` ('locf' or 'linear'): for each
+        (conv_id, metric), one row per hour from its first to its last
+        observation (clipped to the range), observed hours as they are,
+        missing hours filled (`filled`, `fill_method`), in
+        engine/gapfill.py SERIES_SCHEMA. Survives retention like
+        `serve_series`: the whole series is filled, then clipped
+        (engine/rewrite.py serve_gapfill)."""
+        return _rw.serve_gapfill(
+            self.pipeline.read_tier("hourly"),
+            self.pipeline.read_table("chunks"),
+            lo,
+            hi,
+            self.pipeline.fill_method,
             metrics,
         )
 

@@ -145,7 +145,6 @@ def _swept_tables(pipe) -> list[tuple[str, str, list[str]]]:
         ("hourly", pipe.tier_path("hourly"), pipe.hourly_partition_cols()),
         ("daily", pipe.tier_path("daily"), ["bucket_date"]),
         ("monthly", pipe.tier_path("monthly"), ["bucket_month"]),
-        ("gapfill", pipe.gapfill_path, ["conv_bucket"]),
         ("chunks", pipe.chunks_path, ["conv_bucket"]),
     ]
 
@@ -182,6 +181,8 @@ def forget_sweep(pipe, run_id: str | None = None) -> dict:
 
 
 def _sweep_locked(pipe, run_id: str) -> dict:
+    # a retired table is not swept: it goes, with every row it holds
+    pipe._drop_retired_tables()
     tomb = pipe.tombstones.read(pipe.spark)
     report: dict = {}
     for name, path, part_cols in _swept_tables(pipe):
@@ -289,8 +290,8 @@ def _sweep_could_matter(pipe) -> bool:
     """The sweep exists for partitions the re-roll can't reach — which can
     only arise after a retention drop or rollback sentinel. With the raw
     input re-presented and a manifest free of those events, every
-    partition is re-rollable and was just re-rolled, so the 5-table sweep
-    scan is provably redundant (saves ~5 full-table probes per erasure)."""
+    partition is re-rollable and was just re-rolled, so the 4-table sweep
+    scan is provably redundant (saves ~4 full-table probes per erasure)."""
     m = pipe.manifest.read_pandas()
     if len(m) == 0:
         return False
@@ -321,9 +322,13 @@ def forget_conversations(
        runs it only when the re-roll could have missed something: no raw
        input given, or the manifest shows retention/rollback events.
 
+    Tables of earlier versions that nothing reads any more
+    (`TierPipeline.RETIRED_TABLES`) are deleted whole, sweep or not.
+
     Returns {'tombstoned': ids, 'run': run-report|None, 'swept': {...}}.
     """
     pipe.tombstones.append(conv_ids, note=note)
+    pipe._drop_retired_tables()
     report: dict = {"tombstoned": sorted(set(conv_ids)), "run": None, "swept": {}}
     if t0 is not None:
         report["run"] = pipe.run(t0, run_id=run_id)

@@ -150,6 +150,31 @@ def write_tier(
     )
 
 
+def partition_row_counts(path: str, part: str, vals) -> dict[str, int]:
+    """Row count of each `part=<val>` partition directory of the parquet
+    table at `path`, from its file footers alone (no Spark job): the
+    driver-side answer to "how many rows did this write leave in each
+    partition". Counts exactly the files a Spark scan reads — names
+    starting with '_' or '.' (_SUCCESS, .crc) are skipped — and walks
+    nested sub-partition directories (day/conv_bucket layouts). A missing
+    directory counts 0, like an empty partition."""
+    import pyarrow.parquet as pq
+
+    def rows(d: str) -> int:
+        n = 0
+        for e in os.scandir(d):
+            if e.name.startswith(("_", ".")):
+                continue
+            n += rows(e.path) if e.is_dir() else pq.read_metadata(e.path).num_rows
+        return n
+
+    out = {}
+    for v in vals:
+        d = os.path.join(path, f"{part}={v}")
+        out[v] = rows(d) if os.path.isdir(d) else 0
+    return out
+
+
 def read_tier(spark: SparkSession, path: str, tier: str | None = None) -> DataFrame:
     backend, target = tier_backend(spark, path)
     df = (

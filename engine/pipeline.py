@@ -1,7 +1,7 @@
 """EP2 — the full tiering batch job (SURVEY.md §3):
 
-    ingest -> dedup/order -> hourly -> daily -> monthly -> gap-fill ->
-    compress -> (retention) with a manifest commit after every stage.
+    ingest -> dedup/order -> hourly -> daily -> monthly -> compress ->
+    (retention) with a manifest commit after every stage.
 
 Each stage materializes to its table and commits per-partition lineage rows
 carrying an order-insensitive *input fingerprint*, deliberately mirroring the
@@ -14,8 +14,14 @@ affected day → its month → the touched conv_buckets, and nothing else.
 Resume granularity per stage:
     hourly/daily  -> bucket_date (day)      key 'day=YYYY-MM-DD'
     monthly       -> month                   key 'month=YYYY-MM'
-    gapfill/compress -> conv_bucket          key 'cb=<n>'   (series must be
-                        whole per conversation: LOCF/interp cross months)
+    compress      -> conv_bucket             key 'cb=<n>'   (series must be
+                     whole per conversation: chunks span months)
+
+Gap-fill (LOCF / linear) is not a stage: no read path needs a materialized
+filled series, so `TierEngine.serve_gapfill` fills the range it is asked
+for at read time (engine/rewrite.py serve_gapfill). Roots written before
+that still hold a `gapfill` table; the first run sealed on them, or the
+first `forget`, deletes it (`_drop_retired_tables`).
 """
 
 from __future__ import annotations
@@ -37,7 +43,7 @@ from .checkpoint import (
     work_manifest,
 )
 from .codec.chunks import make_chunks
-from .gapfill import gapfill, hourly_series
+from .gapfill import hourly_series
 from .rollup import (
     FAMILIES,
     STATE_COLS,
@@ -112,7 +118,7 @@ class TierPipeline:
         #: (SURVEY §1.2 filled/fill_method on tier rows)
         self.fill_tiers = fill_tiers
         #: maintain a conv_id-bucketed mirror of the hourly tier so the
-        #: gapfill + compress stages read co-located series (zero Exchange)
+        #: compress stage reads co-located series (zero Exchange)
         self.bucketed = bucketed
         self.n_buckets = n_buckets
         #: snapshot-versioned tables (engine/snapstore.py): every stage
@@ -145,7 +151,7 @@ class TierPipeline:
         #: into the day-stage fingerprint, so switching it on an existing
         #: root is a one-time manifest-gated re-roll of every day — and
         #: because tier-state fingerprints hash rows, not layout, the
-        #: daily/monthly/gapfill/compress stages do NOT cascade. In snapshot
+        #: daily/monthly/compress stages do NOT cascade. In snapshot
         #: mode the pre-migration snapshots keep their old layout and stay
         #: readable via time travel.
         if hourly_layout not in (1, 2):
@@ -188,10 +194,9 @@ class TierPipeline:
     def _tier_hash_cols(self) -> list:
         """Fingerprint columns for tier-state inputs (daily/monthly/mirror):
         the state columns plus each enabled family's hash expressions
-        (engine/rollup.py FAMILIES). The gapfill/compress fingerprints
-        deliberately stay family-free (_STATE_HASH_COLS): those outputs
-        don't read family state, so family-only changes must not re-roll
-        them."""
+        (engine/rollup.py FAMILIES). The compress fingerprint deliberately
+        stays family-free (_STATE_HASH_COLS): chunks don't read family
+        state, so family-only changes must not re-roll them."""
         return _STATE_HASH_COLS + [
             e
             for f in FAMILIES
@@ -204,18 +209,12 @@ class TierPipeline:
         return os.path.join(self.root, "tiers", tier)
 
     @property
-    def gapfill_path(self) -> str:
-        return os.path.join(self.root, "gapfill")
-
-    @property
     def chunks_path(self) -> str:
         return os.path.join(self.root, "chunks")
 
     def table_path(self, name: str) -> str:
         if name in ("hourly", "daily", "monthly"):
             return self.tier_path(name)
-        if name == "gapfill":
-            return self.gapfill_path
         if name in ("chunks", "compress"):
             return self.chunks_path
         raise KeyError(name)
@@ -348,7 +347,10 @@ class TierPipeline:
             store.publish(sid)
 
     # -- cross-table run barrier (snapshot mode) -----------------------------
-    TABLE_NAMES = ("hourly", "daily", "monthly", "gapfill", "chunks")
+    TABLE_NAMES = ("hourly", "daily", "monthly", "chunks")
+    #: derived tables earlier versions wrote and no reader opens; a sealed
+    #: run deletes them from the root (with their changelog pointers)
+    RETIRED_TABLES = ("gapfill",)
 
     def _commit(self, rows: list[dict]) -> None:
         """Manifest commit, deferred to the seal inside a WAP run so a
@@ -437,6 +439,7 @@ class TierPipeline:
                     )
             if rows:
                 self.manifest.commit(rows)
+        self._drop_retired_tables()
         return {
             "run_id": run_id,
             "stages": done,
@@ -444,9 +447,23 @@ class TierPipeline:
             "left": left or {},
         }
 
+    def _drop_retired_tables(self) -> None:
+        """Delete RETIRED_TABLES left on a root by earlier versions: derived
+        data nothing reads, whose per-file write and storage cost the root
+        would otherwise keep paying for on every snapshot and replica."""
+        import shutil
+
+        for name in self.RETIRED_TABLES:
+            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+            try:
+                os.remove(self._progress_file(name))
+            except FileNotFoundError:
+                pass
+
     def run_snapshots(self, run_id: str | None = None) -> dict[str, str]:
         """table name -> snapshot id pinned at the end of `run_id` (default:
-        the most recently sealed run)."""
+        the most recently sealed run). Barrier rows of RETIRED_TABLES, which
+        runs of earlier versions sealed, are skipped."""
         m = self.manifest.read().filter(F.col("stage") == "snapshot")
         if run_id is None:
             last = m.orderBy(F.desc("committed_at")).select("run_id").first()
@@ -454,8 +471,10 @@ class TierPipeline:
                 raise ValueError("no sealed snapshot-mode runs in manifest")
             run_id = last["run_id"]
         return {
-            r["partition_key"].split("=", 1)[1]: r["input_snapshot_id"]
+            name: r["input_snapshot_id"]
             for r in m.filter(F.col("run_id") == run_id).collect()
+            if (name := r["partition_key"].split("=", 1)[1])
+            in self.TABLE_NAMES
         }
 
     def read_consistent(self, run_id: str | None = None) -> dict[str, DataFrame]:
@@ -472,9 +491,7 @@ class TierPipeline:
     #: fingerprint, so every partition the undone runs had committed re-rolls
     ROLLED_BACK = "<rolled-back>"
 
-    _DATA_STAGES = (
-        "hourly", "daily", "monthly", "gapfill", "compress", "hourly_bucketed",
-    )
+    _DATA_STAGES = ("hourly", "daily", "monthly", "compress", "hourly_bucketed")
 
     def rollback_run(self, run_id: str) -> dict[str, str]:
         """Restore every table to the snapshot ids sealed by `run_id` —
@@ -637,10 +654,10 @@ class TierPipeline:
         Cost model (the whole point of this structure): the stage transform
         is computed a single time — by the write. Per-key rows_in and the
         input fingerprint come from the `work` manifest scan (one shuffle-
-        light partial aggregate over the input); rows_out comes from a
-        footer-only read-back of the partitions just written (the count
-        references no data columns, so parquet row-group metadata answers
-        it). Nothing collects the transformed data to the driver.
+        light partial aggregate over the input); rows_out comes from the
+        parquet footers of the partitions just written, read driver-side
+        (`_rows_out`: no Spark job). Nothing collects the transformed data
+        to the driver.
 
         `budget` bounds the pending batch: at most `budget` keys (sorted by
         partition_key — oldest-first for date-keyed stages, deterministic
@@ -675,18 +692,9 @@ class TierPipeline:
         keys = [r["partition_key"] for r in pending]
         out = build(keys)
         self._write_table(out, out_path, partition_cols)
-        part = partition_cols[0]
-        vals = [k.split("=", 1)[1] for k in keys]
-        rows_out = {
-            r["_k"]: r["count"]
-            for r in (
-                self._read_path(out_path)
-                .filter(F.col(part).cast("string").isin(vals))
-                .groupBy(F.col(part).cast("string").alias("_k"))
-                .count()
-                .collect()
-            )
-        }
+        rows_out = self._rows_out(
+            out_path, partition_cols[0], [k.split("=", 1)[1] for k in keys]
+        )
         wall = int((time.monotonic() - t0) * 1000)
         self._commit(
             [
@@ -705,6 +713,28 @@ class TierPipeline:
             ]
         )
         return len(keys)
+
+    def _rows_out(self, path: str, part: str, vals: list[str]) -> dict[str, int]:
+        """Rows now in each `part=<val>` partition of the table at `path`
+        (this run's staged snapshot inside WAP). Parquet tables answer from
+        their file footers; an Iceberg table keeps a Spark count."""
+        if self.snapshots:
+            store = self._store(path)
+            snap = store.snapshot_path(self._staged.get(path) or store.current_id())
+            return eio.partition_row_counts(snap, part, vals)
+        backend, target = eio.tier_backend(self.spark, path)
+        if backend == "parquet":
+            return eio.partition_row_counts(target, part, vals)
+        return {
+            r["_k"]: r["count"]
+            for r in (
+                eio.read_tier(self.spark, path)
+                .filter(F.col(part).cast("string").isin(vals))
+                .groupBy(F.col(part).cast("string").alias("_k"))
+                .count()
+                .collect()
+            )
+        }
 
     def _drop_stale(
         self,
@@ -787,17 +817,11 @@ class TierPipeline:
 
     def _retention_dropped(self, lineage: str) -> set[str]:
         """Partition keys removed from `lineage`'s table by a retention
-        drop (manifest stage='retention') — protected from _drop_stale."""
-        return {
-            r["partition_key"]
-            for r in self.manifest.read()
-            .filter(
-                (F.col("stage") == "retention") & (F.col("lineage") == lineage)
-            )
-            .select("partition_key")
-            .distinct()
-            .collect()
-        }
+        drop (manifest stage='retention') — protected from _drop_stale.
+        Driver-side over the memoized manifest frame: no Spark job."""
+        m = self.manifest.read_pandas()
+        hit = (m["stage"] == "retention") & (m["lineage"] == lineage)
+        return set(m.loc[hit, "partition_key"])
 
     # -- bucketed hourly mirror (L5 scale path, VERDICT r2 item 3) ----------
     def bucketed_table(self) -> str:
@@ -916,19 +940,19 @@ class TierPipeline:
         return read_bucketed(self.spark, tbl)
 
     def series_input(self, run_id: str | None = None) -> DataFrame:
-        """Observed hourly state as the gapfill/compress input.
+        """Observed hourly state as the compress input.
 
-        Plain mode: the day-partitioned tier — each series-keyed stage then
+        Plain mode: the day-partitioned tier — the series-keyed stage then
         pays its own conv_id shuffle. Bucketed mode: a bucketBy(conv_id)
         mirror refreshed when the hourly tier's fingerprint changes — ONE
-        shuffle at mirror-write time, after which the gap-filler's window,
-        the linear-fill FlatMapGroupsInPandas and the chunk compressor's
-        aggregation all plan with ZERO Exchange (the bucketed scan's
+        shuffle at mirror-write time, after which the chunk compressor's
+        aggregation (and any other (conv_id, …)-clustered reader, e.g. the
+        gap-fill kernels) plans with ZERO Exchange (the bucketed scan's
         HashPartitioning(conv_id) satisfies every (conv_id, …)-clustered
         requirement; asserted in tests/test_bucketed.py). Net at scale: the
-        two per-run series shuffles collapse into one amortized write that
-        co-locates every later conv-keyed reader too. With an Iceberg
-        catalog the same layout is `bucket(N, conv_id)` hidden partitioning.
+        per-run series shuffle becomes one amortized write that co-locates
+        every later conv-keyed reader too. With an Iceberg catalog the same
+        layout is `bucket(N, conv_id)` hidden partitioning.
         """
         hourly = observed_state(self.read_tier("hourly"))
         if not self.bucketed:
@@ -1037,7 +1061,7 @@ class TierPipeline:
         return read_bucketed(self.spark, tbl)
 
     # -- stages --------------------------------------------------------------
-    ALL_STAGES = ("hourly", "daily", "monthly", "gapfill", "compress")
+    ALL_STAGES = ("hourly", "daily", "monthly", "compress")
 
     def run(
         self,
@@ -1048,10 +1072,12 @@ class TierPipeline:
     ) -> dict:
         """Run the batch job. `stages` limits execution to a prefix of
         ALL_STAGES (used by tests to simulate a kill between stages; a later
-        run resumes from the manifest). In WAP mode the whole run stages
-        unpublished and seals atomically in `_finish_run`; any exception —
-        including an audit veto — aborts with published tables and the
-        manifest untouched.
+        run resumes from the manifest); a "gapfill" entry, the stage earlier
+        versions ran before compress, is accepted and ignored. Gap-fill is
+        served on read (`TierEngine.serve_gapfill`). In WAP mode the whole
+        run stages unpublished and seals atomically in `_finish_run`; any
+        exception — including an audit veto — aborts with published tables
+        and the manifest untouched.
 
         `budget` caps how many pending partitions EACH stage builds this
         run (oldest-first); the rest stays pending and is reported in the
@@ -1065,10 +1091,10 @@ class TierPipeline:
         concurrent run raises LeaseHeldError instead of double-writing the
         same pending partitions; crashed holders are broken as stale.
 
-        Outside WAP mode the monthly stage and the series stages (gapfill,
-        compress) run concurrently, so a monthly failure does not stop the
-        series stages from committing; the run then raises the monthly
-        error (chaining a series error, if both failed)."""
+        Outside WAP mode the monthly stage and the series stage (compress)
+        run concurrently, so a monthly failure does not stop the series
+        stage from committing; the run then raises the monthly error
+        (chaining a series error, if both failed)."""
         if budget is not None and budget < 1:
             raise ValueError("budget must be >= 1 partition per stage")
         if self.use_lease:
@@ -1342,60 +1368,31 @@ class TierPipeline:
                     self._record_reconciled("monthly", cur_d)
             return n
 
-        if "gapfill" not in stages:
+        if "compress" not in stages:
             done["monthly"] = monthly_stage()
             return self._finish_run(run_id, done, scans, left)
 
-        # 4+5. gap-fill and compress, keyed by conv_bucket (series must stay
-        # whole; observed rows only — the gapfill table derives its own
-        # fills). In bucketed mode this is the conv_id-bucketed mirror:
-        # gapfill and compress below then plan with zero Exchange
+        # 4. compress, keyed by conv_bucket (series must stay whole;
+        # observed rows only). In bucketed mode the input is the
+        # conv_id-bucketed mirror and the stage plans with zero Exchange
         # (series_input).
         # Series-stage short-circuit (snapshot mode): when the hourly
-        # snapshot is inode-identical to what BOTH series stages last
-        # reconciled, their full-bucket fingerprints cannot have changed
-        # and no stale transition is possible — skip the scan, the mirror
-        # touch, and both stages outright. (Per-bucket partial pruning is
-        # deliberately not attempted: a bucket's fingerprint spans its
-        # every day, and layout-1 hourly cannot dir-prune on conv_bucket.)
-        def series_stages() -> dict:
-            out: dict = {}
-            ch_g = self._changed_upstream_days("gapfill", "hourly")
-            ch_c = self._changed_upstream_days("compress", "hourly")
-            if ch_g == [] and ch_c == [] and "compress" in stages:
+        # snapshot is inode-identical to what compress last reconciled, its
+        # full-bucket fingerprints cannot have changed and no stale
+        # transition is possible — skip the scan, the mirror touch, and the
+        # stage outright. (Per-bucket partial pruning is deliberately not
+        # attempted: a bucket's fingerprint spans its every day, and
+        # layout-1 hourly cannot dir-prune on conv_bucket.)
+        def series_stage() -> dict:
+            if self._changed_upstream_days("compress", "hourly") == []:
                 scans["series"] = "pruned-noop"
-                return {"gapfill": 0, "compress": 0}
+                return {"compress": 0}
             scans["series"] = "full"
             hourly = self.series_input(run_id)
-            # collect the conv-bucket work manifest ONCE: gapfill and
-            # compress share the same keys/fingerprints, and passing the
-            # DataFrame to both stages would re-execute the full-hourly
-            # fingerprint aggregation twice (each _run_stage collects its
-            # `work` input)
             cb_work = work_manifest(
                 hourly, F.col("conv_bucket").cast("string"),
                 _STATE_HASH_COLS, "cb",
-            ).collect()
-
-            def build_gapfill(keys):
-                cbs = [int(k.split("=", 1)[1]) for k in keys]
-                inp = hourly.filter(F.col("conv_bucket").isin(cbs))
-                series = hourly_series(inp)
-                return gapfill(series, self.fill_method).withColumn(
-                    "conv_bucket", _conv_bucket()
-                )
-
-            out["gapfill"] = self._run_stage(
-                "gapfill", run_id, cb_work, build_gapfill,
-                self.gapfill_path, ["conv_bucket"], "hourly",
-                budget=budget, left=left,
             )
-            if self.snapshots and not self.wap and not left.get("gapfill"):
-                cur_h = self._store(self.table_path("hourly")).current_id()
-                if cur_h is not None:
-                    self._record_reconciled("gapfill", cur_h)
-            if "compress" not in stages:
-                return out
 
             def build_compress(keys):
                 cbs = [int(k.split("=", 1)[1]) for k in keys]
@@ -1404,7 +1401,7 @@ class TierPipeline:
                     "conv_bucket", _conv_bucket()
                 )
 
-            out["compress"] = self._run_stage(
+            n = self._run_stage(
                 "compress", run_id, cb_work, build_compress,
                 self.chunks_path, ["conv_bucket"], "hourly",
                 budget=budget, left=left,
@@ -1413,10 +1410,10 @@ class TierPipeline:
                 cur_h = self._store(self.table_path("hourly")).current_id()
                 if cur_h is not None:
                     self._record_reconciled("compress", cur_h)
-            return out
+            return {"compress": n}
 
-        # The monthly stage reads only the DAILY tier; the series stages
-        # read only the HOURLY tier and write independent tables — the two
+        # The monthly stage reads only the DAILY tier; the series stage
+        # reads only the HOURLY tier and writes its own table — the two
         # legs share no data dependency, so overlap them (guide §2.6:
         # Spark's scheduler runs concurrent driver-thread jobs fine, and
         # the second leg's tasks back-fill the first leg's stragglers).
@@ -1428,13 +1425,13 @@ class TierPipeline:
         # deliberately not made concurrent.
         if self.wap:
             done["monthly"] = monthly_stage()
-            done.update(series_stages())
+            done.update(series_stage())
         else:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as ex:
                 mf = ex.submit(monthly_stage)
-                sf = ex.submit(series_stages)
+                sf = ex.submit(series_stage)
                 # wait on both legs; when both fail, the monthly error
                 # (first in stage order) propagates with the series error
                 # as its __context__

@@ -150,7 +150,11 @@ class Replica:
 
     def sync(self) -> dict:
         """Ship every table's diff; returns per-table
-        {'mode': full|incremental|noop|absent, 'copied': [...], 'removed': [...]}."""
+        {'mode': full|incremental|noop|absent, 'copied': [...], 'removed': [...]}.
+        Tables the primary retired (TierPipeline.RETIRED_TABLES) are
+        deleted from the replica."""
+        for name in self.primary.RETIRED_TABLES:
+            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
         return {
             t: self._sync_table(t) for t in self.primary.TABLE_NAMES
         }

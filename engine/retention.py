@@ -6,10 +6,11 @@ continuous aggregates remain queryable via Spark SQL."
 Safety rule (SURVEY.md §7.3): a partition may be dropped only when its
 *entire* downstream lineage is manifest-committed — e.g. an hourly
 bucket_date partition needs its 'daily' day commit AND the 'monthly' commit
-of its month AND the gapfill/compress commits of every conv_bucket. On plain
-parquet the drop is a partition-directory delete (the emulation of Iceberg
-``DELETE FROM ... WHERE`` + ``expire_snapshots``); the manifest records the
-drop so resume never re-creates it.
+of its month AND the compress commit of every conv_bucket (the chunks keep
+the dropped days' series: `serve_series` and `serve_gapfill` decode them).
+On plain parquet the drop is a partition-directory delete (the emulation of
+Iceberg ``DELETE FROM ... WHERE`` + ``expire_snapshots``); the manifest
+records the drop so resume never re-creates it.
 """
 
 from __future__ import annotations
@@ -67,17 +68,14 @@ def droppable_hourly_days(pipe: TierPipeline, older_than: str) -> list[str]:
     daily = _committed(m, "daily")
     monthly = _committed(m, "monthly")
     hourly = _committed(m, "hourly")
-    gapfill = _committed(m, "gapfill")
     compress = _committed(m, "compress")
-    # every conv_bucket stage key must be committed before any day drops:
-    # chunks/gapfill read whole hourly series
+    # every conv_bucket key must be committed before any day drops: the
+    # chunks read whole hourly series
     all_cb = {
         r["conv_bucket"]
         for r in pipe.read_tier("hourly").select("conv_bucket").distinct().collect()
     }
-    cb_done = all_cb <= {int(x) for x in gapfill} and all_cb <= {
-        int(x) for x in compress
-    }
+    cb_done = all_cb <= {int(x) for x in compress}
     out = []
     for day in sorted(hourly):
         if day >= older_than:
@@ -121,15 +119,16 @@ def drop_hourly_partitions(
 
 
 def _recommit_series_fingerprints(pipe: TierPipeline, run_id: str) -> None:
-    """After an hourly retention drop, re-commit the gapfill/compress
-    manifest rows with fingerprints recomputed over the REMAINING hourly
-    days. Without this the next run's fingerprint diff would read the
-    horizon truncation as late data and re-roll every conv_bucket's series
-    from the partial input — overwriting archived full-history gapfill and
-    chunk partitions with truncated ones. With it, an unchanged input skips
-    cleanly; genuinely new post-drop data still re-rolls its bucket (which
-    then regenerates from the remaining horizon only — documented loss of
-    pre-horizon fill rows for that actively-changing bucket)."""
+    """After an hourly retention drop, re-commit the compress manifest
+    rows with fingerprints recomputed over the REMAINING hourly days.
+    Without this the next run's fingerprint diff would read the horizon
+    truncation as late data and re-roll every conv_bucket's series from the
+    partial input — overwriting archived full-history chunk partitions with
+    truncated ones. With it, an unchanged input skips cleanly; genuinely
+    new post-drop data still re-rolls its bucket (which then regenerates
+    from the remaining horizon only — documented loss of pre-horizon
+    series points, and so of served gap-fill rows, for that
+    actively-changing bucket)."""
     from .checkpoint import work_manifest
     from .pipeline import _STATE_HASH_COLS
     from .rollup import observed_state
@@ -141,38 +140,36 @@ def _recommit_series_fingerprints(pipe: TierPipeline, run_id: str) -> None:
         hourly, F.col("conv_bucket").cast("string"), _STATE_HASH_COLS, "cb"
     ).collect()
     work_keys = {r["partition_key"] for r in work}
-    rows = []
-    for stage in ("gapfill", "compress"):
-        committed = _committed(pipe.manifest, stage)
-        rows += [
-            {
-                "run_id": run_id,
-                "stage": stage,
-                "partition_key": r["partition_key"],
-                "rows_in": r["rows_in"],
-                "lineage": "hourly-retention-recommit",
-                "input_snapshot_id": r["input_snapshot_id"],
-            }
-            for r in work
-            if r["partition_key"].split("=", 1)[1] in committed
-        ]
-        # conv_buckets whose EVERY hourly row fell inside the dropped days
-        # have no work row left; the DELETED sentinel (archive lineage)
-        # exempts their gapfill/chunk partitions from the stale-input
-        # cascade — the archived series outlives its raw tier, which is
-        # the entire point of retention — while still re-rolling the
-        # bucket if its conversations ever produce data again.
-        rows += [
-            {
-                "run_id": run_id,
-                "stage": stage,
-                "partition_key": f"cb={cb}",
-                "lineage": "hourly-retention-archive",
-                "input_snapshot_id": DELETED_SNAPSHOT,
-            }
-            for cb in sorted(committed)
-            if f"cb={cb}" not in work_keys
-        ]
+    committed = _committed(pipe.manifest, "compress")
+    rows = [
+        {
+            "run_id": run_id,
+            "stage": "compress",
+            "partition_key": r["partition_key"],
+            "rows_in": r["rows_in"],
+            "lineage": "hourly-retention-recommit",
+            "input_snapshot_id": r["input_snapshot_id"],
+        }
+        for r in work
+        if r["partition_key"].split("=", 1)[1] in committed
+    ]
+    # conv_buckets whose EVERY hourly row fell inside the dropped days
+    # have no work row left; the DELETED sentinel (archive lineage)
+    # exempts their chunk partitions from the stale-input cascade — the
+    # archived series outlives its raw tier, which is the entire point of
+    # retention — while still re-rolling the bucket if its conversations
+    # ever produce data again.
+    rows += [
+        {
+            "run_id": run_id,
+            "stage": "compress",
+            "partition_key": f"cb={cb}",
+            "lineage": "hourly-retention-archive",
+            "input_snapshot_id": DELETED_SNAPSHOT,
+        }
+        for cb in sorted(committed)
+        if f"cb={cb}" not in work_keys
+    ]
     if rows:
         pipe.manifest.commit(rows)
 
@@ -235,26 +232,21 @@ def drop_daily_partitions(
 
 
 def frozen_months(manifest: Manifest) -> set[str]:
-    """Months finalized by daily retention — excluded from monthly re-rolls."""
-    return {
-        r["partition_key"].split("=", 1)[1]
-        for r in manifest.read()
-        .filter(F.col("stage") == "frozen")
-        .select("partition_key")
-        .distinct()
-        .collect()
-    }
+    """Months finalized by daily retention — excluded from monthly re-rolls.
+    Driver-side over the memoized manifest frame: no Spark job."""
+    m = manifest.read_pandas()
+    return {k.split("=", 1)[1] for k in m.loc[m["stage"] == "frozen", "partition_key"]}
 
 
 def droppable_conv_buckets(pipe: TierPipeline, stage: str) -> list[int]:
-    """conv_bucket partitions of the gapfill/compress tables safe to expire:
-    committed AND not pending (a bucket whose hourly input changed is mid
-    re-roll — dropping it would race the rewrite). Retention of cold
+    """conv_bucket partitions of the chunks table ('compress') safe to
+    expire: committed AND not pending (a bucket whose hourly input changed
+    is mid re-roll — dropping it would race the rewrite). Retention of cold
     conversation buckets; if a dropped bucket's conversations turn hot
     again, the fingerprint diff re-rolls and the partition reappears —
     that resurrection is the intended semantics for activity-based
     retention."""
-    assert stage in ("gapfill", "compress"), stage
+    assert stage == "compress", stage
     from .checkpoint import pending_rows, work_manifest
     from .pipeline import _STATE_HASH_COLS
     from .rollup import observed_state
@@ -280,13 +272,13 @@ def drop_conv_bucket_partitions(
     run_id: str,
     force: bool = False,
 ) -> list[int]:
-    """Expire conv_bucket partitions of the gapfill ('gapfill') or chunks
-    ('compress') table. Refuses while the bucket is pending re-roll unless
-    forced; the drop is manifest-recorded (stage='retention') and survives
-    reruns — an unchanged input fingerprint keeps the partition dropped,
-    a changed one regenerates it."""
+    """Expire conv_bucket partitions of the chunks ('compress') table.
+    Refuses while the bucket is pending re-roll unless forced; the drop is
+    manifest-recorded (stage='retention') and survives reruns — an
+    unchanged input fingerprint keeps the partition dropped, a changed one
+    regenerates it."""
     safe = set(droppable_conv_buckets(pipe, stage))
-    table_path = pipe.gapfill_path if stage == "gapfill" else pipe.chunks_path
+    table_path = pipe.chunks_path
     for cb in cbs:
         if cb not in safe and not force:
             raise RetentionError(
@@ -334,8 +326,8 @@ def compact_partition(
     rowgroup_bytes: int | None = None,
     zorder: tuple[str, str] | None = None,
 ) -> None:
-    """L2: rewrite a tier table — or the 'gapfill' / 'compress' (chunks)
-    series tables, keyed by conv_bucket — into ~n_files per partition
+    """L2: rewrite a tier table — or the 'compress' (chunks) series table,
+    keyed by conv_bucket — into ~n_files per partition
     (small-file compaction; Iceberg's rewrite_data_files equivalent).
 
     `sort_by` is Iceberg's rewrite-with-sort-order: rows are clustered by
@@ -365,9 +357,7 @@ def compact_partition(
     compaction is NOT safe against concurrent readers of the same tier;
     with a real Iceberg catalog the snapshot commit makes this atomic.
     """
-    if tier == "gapfill":
-        path, part_cols = pipe.gapfill_path, ["conv_bucket"]
-    elif tier == "compress":
+    if tier == "compress":
         path, part_cols = pipe.chunks_path, ["conv_bucket"]
     elif tier == "monthly":
         path, part_cols = pipe.tier_path(tier), ["bucket_month"]
@@ -485,7 +475,7 @@ def expire_snapshots(
         else:
             _protect("hourly", c.consumed_id())
     out = {}
-    for name in ("hourly", "daily", "monthly", "gapfill", "chunks"):
+    for name in pipe.TABLE_NAMES:
         store = pipe._store(pipe.table_path(name))
         if store.current_id() is not None:
             out[name] = store.expire(

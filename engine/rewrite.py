@@ -747,3 +747,44 @@ def serve_series_chunked(
     return tier_pts.select(
         "conv_id", "bucket_start", "metric", "value"
     ).unionByName(chunk_pts)
+
+
+def serve_gapfill(
+    hourly: DataFrame,
+    chunks: DataFrame,
+    lo,
+    hi,
+    method: str = "locf",
+    metrics: list[str] | None = None,
+) -> DataFrame:
+    """Gap-filled long-form hourly series over [lo, hi), filled on read:
+    engine/gapfill.py SERIES_SCHEMA rows, one per hour from each
+    (conv_id, metric) series' first to its last observation, clipped to
+    the range. The `gapfill` kernel runs over the whole retention-surviving
+    series (`serve_series_chunked` across the span of the hourly tier and
+    of the chunks table, which no hourly or daily drop shortens), so LOCF
+    carries and linear anchors from outside the range are the ones the
+    full series has.
+    Chunk decode returns a null value as NaN (the codec stores doubles);
+    it is mapped back to null, which the metrics never produce as NaN."""
+    from .gapfill import SERIES_SCHEMA, gapfill
+
+    span = (
+        hourly.selectExpr("bucket_start AS s", "bucket_start AS e")
+        .unionByName(chunks.selectExpr("chunk_start AS s", "chunk_end AS e"))
+        .agg(F.min("s"), F.max("e"))
+        .first()
+    )
+    if span[0] is None:
+        return hourly.sparkSession.createDataFrame([], SERIES_SCHEMA)
+    pts = serve_series_chunked(
+        hourly, chunks, str(_floor_day(span[0])),
+        str(_floor_day(span[1]) + timedelta(days=1)), metrics,
+    ).withColumn("value", F.when(~F.isnan("value"), F.col("value")))
+    bs = F.col("bucket_start")
+    lo_c, hi_c = (F.lit(str(t)).cast("timestamp_ntz") for t in (lo, hi))
+    return (
+        gapfill(pts, method)
+        .filter((bs >= lo_c) & (bs < hi_c))
+        .select(*[f.name for f in SERIES_SCHEMA.fields])
+    )

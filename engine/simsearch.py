@@ -66,13 +66,22 @@ def _fold_gemm_np(E, C):
 def _collect_centroids(cents: DataFrame):
     """Driver-side (cids, C, cnrm) sorted ascending by cid (k rows —
     metadata-scale). cnrm uses the exact fold + IEEE sqrt, matching the
-    JVM `sqrt(_dot(ce, ce))` bit-for-bit."""
+    JVM `sqrt(_dot(ce, ce))` bit-for-bit.
+
+    Every centroid must have a nonzero norm: cosine similarity to a zero
+    vector is NaN, which the numpy ranking orders last and a Spark
+    descending sort first, so no assignment to it is well defined."""
     import numpy as np
 
     rows = sorted(cents.select("cid", "ce").collect(), key=lambda r: r["cid"])
     C = np.array([r["ce"] for r in rows], dtype=np.float64)
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cnrm = np.sqrt(_fold_dots_np(C, C))
+    if (cnrm == 0).any():
+        raise ValueError(
+            f"zero-norm centroids {cids[cnrm == 0].tolist()}: cosine "
+            "similarity to them is undefined"
+        )
     return cids, C, cnrm
 
 

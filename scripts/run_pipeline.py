@@ -58,7 +58,7 @@ def main():
     ap.add_argument("--compact-zorder", default=None,
                     help="after the run, z-order-compact a tier: "
                          "'tier:col1:col2' (e.g. "
-                         "'gapfill:conv_id:bucket_start') — multi-dim "
+                         "'hourly:conv_id:bucket_start') — multi-dim "
                          "row-group skipping via Morton clustering")
     ap.add_argument("--expire-keep-last", type=int, default=None,
                     help="snapshot GC after the run: keep newest N "

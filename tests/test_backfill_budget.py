@@ -4,7 +4,7 @@ to the exact state of one unbudgeted run. This is the 10^12-turn backfill
 shape — bounded, crash-recoverable increments — so the tests pin:
 
 1. convergence: N budgeted runs == 1 unbudgeted run, bit-exact on all
-   five tables (plain mode and snapshot mode);
+   four tables (plain mode and snapshot mode);
 2. the reconcile-pointer hazard: in snapshot mode a stage that deferred
    work must NOT advance its changelog-pruning pointer, or the deferred
    keys would be pruned out of the next run's work manifest forever;
@@ -29,7 +29,6 @@ SORT_KEYS = {
     "hourly": ["conv_id", "bucket_start"],
     "daily": ["conv_id", "bucket_start"],
     "monthly": ["conv_id", "bucket_start"],
-    "gapfill": ["conv_id", "metric", "bucket_start"],
     "chunks": ["conv_id", "metric", "chunk_start"],
 }
 

@@ -124,19 +124,23 @@ def bucketed_pipe(spark, tmp_path_factory):
 
 
 def test_bucketed_pipeline_matches_plain(spark, bucketed_pipe):
-    """gapfill + chunk outputs are byte-identical whether the series stages
-    read the day-partitioned tier (shuffling per stage) or the bucketed
-    mirror (one amortized shuffle at mirror write)."""
+    """Gap-filled series and chunk outputs are byte-identical whether the
+    series readers read the day-partitioned tier (shuffling per reader) or
+    the bucketed mirror (one amortized shuffle at mirror write)."""
     import pandas as pd
+
+    from engine.gapfill import gapfill, hourly_series
 
     _, plain, bkt = bucketed_pipe
     key = ["conv_id", "metric", "bucket_start"]
     g_plain = (
-        spark.read.parquet(plain.gapfill_path).toPandas()
+        gapfill(hourly_series(plain.series_input()), plain.fill_method)
+        .toPandas()
         .sort_values(key, ignore_index=True)
     )
     g_bkt = (
-        spark.read.parquet(bkt.gapfill_path).toPandas()
+        gapfill(hourly_series(bkt.series_input()), bkt.fill_method)
+        .toPandas()
         .sort_values(key, ignore_index=True)
     )
     pd.testing.assert_frame_equal(g_bkt[g_plain.columns], g_plain)

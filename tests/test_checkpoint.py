@@ -286,11 +286,11 @@ def test_both_legs_failing_raises_monthly_error(spark, tmp_path, monkeypatch):
             raise MonthlyBoom(to_tier)
         return real_rollup_up(lower, to_tier)
 
-    def gapfill(*a, **k):
-        raise SeriesBoom("gapfill")
+    def make_chunks(*a, **k):
+        raise SeriesBoom("compress")
 
     monkeypatch.setattr(pl, "rollup_up", rollup_up)
-    monkeypatch.setattr(pl, "gapfill", gapfill)
+    monkeypatch.setattr(pl, "make_chunks", make_chunks)
     pipe = TierPipeline(spark, str(tmp_path / "root"), lease=False)
     with pytest.raises(MonthlyBoom) as ei:
         pipe.run(synth_transcripts(spark, n_convs=3, hot_turns=20))

@@ -433,7 +433,8 @@ def test_engine_status_reports_lifecycle(spark, tmp_path):
     assert st["lifecycle"]["run_barriers"] == 1
     assert st["lifecycle"]["forget_rows"] == 0
     assert st["tombstones"] == 0
-    for t in ("hourly", "daily", "monthly", "gapfill", "chunks"):
+    assert set(st["snapshots"]) == {"hourly", "daily", "monthly", "chunks"}
+    for t in ("hourly", "daily", "monthly", "chunks"):
         assert st["snapshots"][t]["current"] is not None
     # forget one conversation: tombstone + forget audit row show up
     conv = eng.tier("hourly").select("conv_id").first().conv_id

@@ -321,7 +321,6 @@ def test_enabling_kmv_is_a_one_time_backfill(spark, t0, tmp_path):
     assert r2["stages"]["hourly"] == n_days
     assert r2["stages"]["daily"] == r1["stages"]["daily"]
     assert r2["stages"]["monthly"] == r1["stages"]["monthly"]
-    assert r2["stages"]["gapfill"] == 0
     assert r2["stages"]["compress"] == 0
     assert "text_kmv64" in km.read_tier("monthly").columns
     r3 = TierPipeline(spark, root, kmv_cols={"text": 64}).run(t0)

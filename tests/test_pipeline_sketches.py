@@ -80,9 +80,8 @@ def test_enabling_sketches_is_a_one_time_backfill(spark, t0, tmp_path):
     assert r2["stages"]["daily"] == r1["stages"]["daily"]
     assert r2["stages"]["monthly"] == r1["stages"]["monthly"]
     assert "tool_hll" in sk.read_tier("monthly").columns
-    # the series tables don't read sketches: their fingerprints are
-    # sketch-free, so the backfill must NOT re-roll gapfill/compress
-    assert r2["stages"]["gapfill"] == 0
+    # the chunks don't read sketches: their fingerprints are sketch-free,
+    # so the backfill must NOT re-roll compress
     assert r2["stages"]["compress"] == 0
     # steady state: a third run is a full no-op
     r3 = TierPipeline(spark, root, sketch_cols=["tool"]).run(t0)

@@ -41,9 +41,9 @@ def test_pruned_rescan_tracks_full_scan(spark, t0, tmp_path):
     assert r2["scans"]["daily"].startswith("pruned:0/")
     assert r2["scans"]["monthly"].startswith("pruned:0/")
     assert r2["stages"]["daily"] == 0 and r2["stages"]["monthly"] == 0
-    # series stages short-circuit without touching the hourly table at all
+    # the series stage short-circuits without touching the hourly table
     assert r2["scans"]["series"] == "pruned-noop"
-    assert r2["stages"]["gapfill"] == 0 and r2["stages"]["compress"] == 0
+    assert r2["stages"]["compress"] == 0
 
     # late data for one conversation: only its days re-fingerprint
     late = t0.filter("conv_id = 'conv-00000000'").selectExpr(
@@ -62,9 +62,9 @@ def test_pruned_rescan_tracks_full_scan(spark, t0, tmp_path):
     )
     assert n_pruned == late_days and n_pruned < n_total
     assert r3["stages"]["daily"] == late_days
-    # data changed -> the series stages take the normal path again
+    # data changed -> the series stage takes the normal path again
     assert r3["scans"]["series"] == "full"
-    assert r3["stages"]["gapfill"] > 0
+    assert r3["stages"]["compress"] > 0
 
     # pruned result == a never-pruned (plain-mode) pipeline, bit-exact
     ref = TierPipeline(spark, str(tmp_path / "ref"))

@@ -197,7 +197,7 @@ def test_pipeline_migration_and_parity(spark, t0, tmp_path):
     pipe = TierPipeline(spark, root, qsk_cols=["token_count"])
     r2 = pipe.run(t0)
     assert r2["stages"]["hourly"] == n_days
-    assert r2["stages"]["gapfill"] == 0 and r2["stages"]["compress"] == 0
+    assert r2["stages"]["compress"] == 0
     assert _maps(pipe.read_tier("monthly")) == _maps(
         build_tiers(t0, qsk_cols=["token_count"])["monthly"]
     )

@@ -4,6 +4,7 @@ retry convergence, GC-race full-rebuild fallback, forget propagation."""
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -16,7 +17,7 @@ from engine.pipeline import TierPipeline  # noqa: E402
 from engine.replicate import Replica  # noqa: E402
 from engine.synth import synth_transcripts  # noqa: E402
 
-TABLES = ("hourly", "daily", "monthly", "gapfill", "chunks")
+TABLES = ("hourly", "daily", "monthly", "chunks")
 
 
 @pytest.fixture(scope="module")
@@ -37,9 +38,13 @@ def test_full_then_incremental_then_noop(spark, t0, tmp_path):
     assert all(s1[t]["mode"] == "full" for t in TABLES), s1
     _assert_parity(rep)
 
-    # nothing changed -> every table no-ops, zero copies
+    # nothing changed -> every table no-ops, zero copies; a table the
+    # primary no longer writes is deleted from the replica
+    os.makedirs(os.path.join(rep.root, "gapfill", "conv_bucket=0"))
     s2 = rep.sync()
     assert all(s2[t]["mode"] == "noop" and not s2[t]["copied"] for t in TABLES)
+    assert set(s2) == set(TABLES)
+    assert not os.path.exists(os.path.join(rep.root, "gapfill"))
 
     # late data for ONE conversation: the ship is diff-only
     late = t0.filter("conv_id = 'conv-00000000'").selectExpr(

@@ -151,45 +151,48 @@ def test_hourly_drop_then_rerun_is_stable(spark, t0, tmp_path):
     """The retention / resume interaction: after an L1 hourly drop, a rerun
     over the SAME raw input must be a full no-op — the dropped days must
     not be re-created, read as deleted input (stale cascade), or read as
-    late data (spurious series re-roll truncating archived gapfill/chunks).
+    late data (spurious series re-roll truncating the archived chunks, and
+    with them the gap-fill served over the dropped days).
     Pins the recommitted fingerprints + protect-set machinery."""
     import pandas as pd
 
     from engine.pipeline import TierPipeline
+    from engine.rewrite import serve_gapfill
 
     pipe = TierPipeline(spark, str(tmp_path / "rr"))
     pipe.run(t0)
     days = droppable_hourly_days(pipe, older_than="9999-12-31")
     dropped = drop_hourly_partitions(pipe, days[:2], run_id="rr")
     assert dropped == days[:2]
-    before = {
-        "daily": _table_pdf(spark, pipe.tier_path("daily"),
-                            ["conv_id", "bucket_start"]),
-        "monthly": _table_pdf(spark, pipe.tier_path("monthly"),
-                              ["conv_id", "bucket_start"]),
-        "gapfill": _table_pdf(spark, pipe.gapfill_path,
-                              ["conv_id", "metric", "bucket_start"]),
-        "chunks": _table_pdf(spark, pipe.chunks_path,
-                             ["conv_id", "metric", "chunk_start"]),
+    keys = {
+        "daily": ["conv_id", "bucket_start"],
+        "monthly": ["conv_id", "bucket_start"],
+        "chunks": ["conv_id", "metric", "chunk_start"],
+        "gapfill": ["conv_id", "metric", "bucket_start"],
     }
+
+    def frames():
+        out = {n: pipe.read_table(n) for n in ("daily", "monthly", "chunks")}
+        out["gapfill"] = serve_gapfill(
+            pipe.read_tier("hourly"),
+            pipe.read_table("chunks"), "2000-01-01", "2100-01-01",
+            pipe.fill_method,
+        )
+        return {
+            n: df.toPandas().sort_values(keys[n], ignore_index=True)
+            for n, df in out.items()
+        }
+
+    before = frames()
     res = pipe.run(t0)
     assert all(n == 0 for n in res["stages"].values()), res
     for d in dropped:
         assert not os.path.exists(
             os.path.join(pipe.tier_path("hourly"), f"bucket_date={d}")
         ), "rerun must not resurrect retention-dropped hourly days"
-    for name, b in before.items():
-        path = (
-            pipe.tier_path(name)
-            if name in ("daily", "monthly")
-            else (pipe.gapfill_path if name == "gapfill" else pipe.chunks_path)
-        )
-        keys = [c for c in b.columns if not b[c].map(type).eq(bytes).any()]
-        after = _table_pdf(spark, path, keys)
-        pd.testing.assert_frame_equal(
-            after[b.columns],
-            b.sort_values(keys, ignore_index=True)[b.columns],
-        ), name
+    for name, after in frames().items():
+        b = before[name]
+        pd.testing.assert_frame_equal(after[b.columns], b, obj=name)
 
 
 def test_daily_retention_freezes_month(spark, t0, tmp_path):
@@ -246,10 +249,10 @@ def test_daily_retention_freezes_month(spark, t0, tmp_path):
     pd.testing.assert_frame_equal(frozen_rows_a, frozen_rows_b)
 
 
-def test_conv_bucket_retention_gapfill_chunks(spark, t0, tmp_path):
-    """VERDICT r2 item 8: gapfill/chunks conv_bucket partitions expire with
-    the same refusal/drop/still-queryable triple as hourly days, and a
-    rerun over unchanged input keeps them dropped (fingerprint match)."""
+def test_conv_bucket_retention_chunks(spark, t0, tmp_path):
+    """VERDICT r2 item 8: chunks conv_bucket partitions expire with the
+    same refusal/drop/still-queryable triple as hourly days, and a rerun
+    over unchanged input keeps them dropped (fingerprint match)."""
     from pyspark.sql import functions as F
 
     from engine.pipeline import TierPipeline
@@ -259,59 +262,54 @@ def test_conv_bucket_retention_gapfill_chunks(spark, t0, tmp_path):
     )
 
     pipe = TierPipeline(spark, str(tmp_path / "cb"))
-    pipe.run(t0, stages=("hourly", "daily", "monthly"))  # gapfill not run
-    assert droppable_conv_buckets(pipe, "gapfill") == []
+    pipe.run(t0, stages=("hourly", "daily", "monthly"))  # compress not run
+    assert droppable_conv_buckets(pipe, "compress") == []
     with pytest.raises(RetentionError):
-        drop_conv_bucket_partitions(pipe, "gapfill", [0], run_id="c0")
-    pipe.run(t0)  # commit gapfill + compress
-    for stage, path in (("gapfill", pipe.gapfill_path),
-                        ("compress", pipe.chunks_path)):
-        safe = droppable_conv_buckets(pipe, stage)
-        assert safe
-        victims = safe[:2]
-        total_before = spark.read.parquet(path).count()
-        n_victim = (
-            spark.read.parquet(path)
-            .filter(F.col("conv_bucket").isin(victims))
-            .count()
-        )
-        dropped = drop_conv_bucket_partitions(pipe, stage, victims, run_id="c1")
-        assert dropped == victims
-        remaining = spark.read.parquet(path)
-        assert remaining.count() == total_before - n_victim
-        assert remaining.filter(F.col("conv_bucket").isin(victims)).count() == 0
+        drop_conv_bucket_partitions(pipe, "compress", [0], run_id="c0")
+    pipe.run(t0)  # commit compress
+    path = pipe.chunks_path
+    safe = droppable_conv_buckets(pipe, "compress")
+    assert safe
+    victims = safe[:2]
+    total_before = spark.read.parquet(path).count()
+    n_victim = (
+        spark.read.parquet(path)
+        .filter(F.col("conv_bucket").isin(victims))
+        .count()
+    )
+    dropped = drop_conv_bucket_partitions(pipe, "compress", victims, run_id="c1")
+    assert dropped == victims
+    remaining = spark.read.parquet(path)
+    assert remaining.count() == total_before - n_victim
+    assert remaining.filter(F.col("conv_bucket").isin(victims)).count() == 0
     res = pipe.run(t0)  # unchanged input: buckets stay dropped
     assert all(n == 0 for n in res["stages"].values()), res
-    for path in (pipe.gapfill_path, pipe.chunks_path):
-        assert (
-            spark.read.parquet(path)
-            .filter(F.col("conv_bucket").isin(victims))
-            .count()
-            == 0
-        )
+    assert (
+        spark.read.parquet(path)
+        .filter(F.col("conv_bucket").isin(victims))
+        .count()
+        == 0
+    )
 
 
 def test_compact_series_tables(spark, t0, tmp_path):
-    """L2 extended to the conv_bucket-keyed series tables: gapfill and
-    chunk partitions compact to ~1 file each, content byte-identical."""
+    """L2 extended to the conv_bucket-keyed series table: chunk partitions
+    compact to ~1 file each, content byte-identical."""
     from engine.retention import compact_partition
 
     pipe = TierPipeline(spark, str(tmp_path / "cs"))
     pipe.run(t0)
-    for tier, path, keys in (
-        ("gapfill", pipe.gapfill_path, ["conv_id", "metric", "bucket_start"]),
-        ("compress", pipe.chunks_path, ["conv_id", "metric", "chunk_start"]),
-    ):
-        before = _table_pdf(spark, path, keys)
-        compact_partition(pipe, tier, n_files=1)
-        counts = {
-            d: len([f for f in os.listdir(os.path.join(path, d))
-                    if f.endswith(".parquet")])
-            for d in os.listdir(path) if d.startswith("conv_bucket=")
-        }
-        assert counts and all(n == 1 for n in counts.values()), (tier, counts)
-        after = _table_pdf(spark, path, keys)
-        pd.testing.assert_frame_equal(after, before), tier
+    path, keys = pipe.chunks_path, ["conv_id", "metric", "chunk_start"]
+    before = _table_pdf(spark, path, keys)
+    compact_partition(pipe, "compress", n_files=1)
+    counts = {
+        d: len([f for f in os.listdir(os.path.join(path, d))
+                if f.endswith(".parquet")])
+        for d in os.listdir(path) if d.startswith("conv_bucket=")
+    }
+    assert counts and all(n == 1 for n in counts.values()), counts
+    after = _table_pdf(spark, path, keys)
+    pd.testing.assert_frame_equal(after, before)
 
 
 def test_compact_with_sort_order_enables_rowgroup_skipping(spark, t0, tmp_path):

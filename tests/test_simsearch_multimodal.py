@@ -263,3 +263,19 @@ def test_kmeans_ivf_recall_sf01(spark):
     # repair assertion isn't vacuous
     stuck = kmeans_centroids(em, k=16, iters=3, init=collapsed, reseed=False)
     assert stuck.count() == 1
+
+
+def test_assign_centroids_rejects_zero_norm_centroid(spark):
+    """A zero-norm centroid has no direction: every cosine similarity to
+    it is NaN, which numpy's ranking puts last and Spark's descending sort
+    first. assign_centroids refuses it rather than pick either order."""
+    from engine.simsearch import assign_centroids
+
+    v = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 2.0])], "vec_id long, e array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "cid long, ce array<double>"
+    )
+    with pytest.raises(ValueError, match="zero-norm centroids \\[0\\]"):
+        assign_centroids(v, cents)

@@ -172,13 +172,22 @@ def test_pipeline_snapshot_mode_matches_plain(spark, t0, tmp_path):
         pd.testing.assert_frame_equal(
             _tier_pdf(snap, tier), _tier_pdf(plain, tier)
         ), tier
-    # series tables too
-    for name, keys in (
-        ("gapfill", ["conv_id", "metric", "bucket_start"]),
-        ("chunks", ["conv_id", "metric", "chunk_start"]),
+    # the series table too, and the gap-fill served from it
+    from engine.rewrite import serve_gapfill
+
+    def gapfilled(p):
+        return serve_gapfill(
+            p.read_tier("hourly"),
+            p.read_table("chunks"), "2000-01-01", "2100-01-01",
+            p.fill_method,
+        )
+
+    for name, keys, a, b in (
+        ("gapfill", ["conv_id", "metric", "bucket_start"],
+         gapfilled(snap), gapfilled(plain)),
+        ("chunks", ["conv_id", "metric", "chunk_start"],
+         snap.read_table("chunks"), spark.read.parquet(plain.chunks_path)),
     ):
-        a = snap.read_table(name)
-        b = spark.read.parquet(getattr(plain, f"{name}_path" if name != "chunks" else "chunks_path"))
         pa = a.toPandas().sort_values(keys, ignore_index=True).reindex(sorted(a.columns), axis=1)
         pb = b.toPandas().sort_values(keys, ignore_index=True).reindex(sorted(b.columns), axis=1)
         pd.testing.assert_frame_equal(pa, pb), name
@@ -329,7 +338,7 @@ def test_read_consistent_pins_all_tables_to_one_run(spark, t0, tmp_path):
         name: _pdf_any(df)
         for name, df in pipe.read_consistent(r1).items()
     }
-    assert set(snap1) == {"hourly", "daily", "monthly", "gapfill", "chunks"}
+    assert set(snap1) == {"hourly", "daily", "monthly", "chunks"}
     late = t0.filter("conv_id = 'conv-00000000'").selectExpr(
         "conv_id", "cast(turn_idx + 100000 as int) as turn_idx",
         "role", "text", "tool", "ts + interval 30 minutes as ts",

@@ -99,26 +99,26 @@ def _containment(spans_by_file) -> float:
 
 
 def test_zorder_rewrite_preserves_data(spark, tmp_path):
-    """compact_partition(zorder=...) through a REAL pipeline gapfill table:
+    """compact_partition(zorder=...) through a REAL pipeline chunks table:
     rows byte-identical, point lookups still correct on the new layout."""
     t0 = synth_transcripts(spark, n_convs=120, hot_turns=1200)
     pipe = TierPipeline(spark, os.path.join(str(tmp_path), "z"))
-    pipe.run(t0, stages=("hourly", "daily", "monthly", "gapfill"))
-    keys = ["conv_id", "metric", "bucket_start"]
+    pipe.run(t0)
+    keys = ["conv_id", "metric", "chunk_start"]
     before = (
-        spark.read.parquet(pipe.gapfill_path)
+        spark.read.parquet(pipe.chunks_path)
         .toPandas()
         .sort_values(keys, ignore_index=True)
-        .reindex(sorted(spark.read.parquet(pipe.gapfill_path).columns), axis=1)
+        .reindex(sorted(spark.read.parquet(pipe.chunks_path).columns), axis=1)
     )
 
     compact_partition(
-        pipe, "gapfill", n_files=1,
-        zorder=("conv_id", "bucket_start"), rowgroup_bytes=4 * 1024,
+        pipe, "compress", n_files=1,
+        zorder=("conv_id", "chunk_start"), rowgroup_bytes=4 * 1024,
     )
 
     after = (
-        spark.read.parquet(pipe.gapfill_path)
+        spark.read.parquet(pipe.chunks_path)
         .toPandas()
         .sort_values(keys, ignore_index=True)
         .reindex(sorted(before.columns), axis=1)
@@ -127,7 +127,7 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
 
     one = before["conv_id"].iloc[0]
     got = (
-        spark.read.parquet(pipe.gapfill_path)
+        spark.read.parquet(pipe.chunks_path)
         .filter(F.col("conv_id") == one)
         .count()
     )
@@ -135,21 +135,21 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
 
     with pytest.raises(ValueError):
         compact_partition(
-            pipe, "gapfill",
-            zorder=("conv_id", "bucket_start"), sort_by=("conv_id",),
+            pipe, "compress",
+            zorder=("conv_id", "chunk_start"), sort_by=("conv_id",),
         )
 
 
 @pytest.fixture(scope="module")
 def grid_pipes(spark, tmp_path_factory):
-    """Two pipelines whose gapfill path holds the SAME dense uniform
-    (conv × hour) grid — every conv spans the full time range, so the
-    pruning theory is clean: a time-only sort cannot separate convs (every
-    hour contains all of them), while z-order carves rectangles. The real
-    pipeline's gapfill clips each series to its own span, which correlates
-    conv and time and muddies the counterfactual; compact_partition reads
-    only the path, so writing the grid directly exercises the identical
-    rewrite."""
+    """Two pipelines whose chunks path holds the SAME dense uniform
+    (conv × hour) grid, a test-local conv_bucket-partitioned table — every
+    conv spans the full time range, so the pruning theory is clean: a
+    time-only sort cannot separate convs (every hour contains all of them),
+    while z-order carves rectangles. Real series clip each conversation to
+    its own span, which correlates conv and time and muddies the
+    counterfactual; compact_partition reads only the path, so writing the
+    grid directly exercises the identical rewrite."""
     root = str(tmp_path_factory.mktemp("zgrid"))
     grid = (
         spark.range(192)
@@ -157,7 +157,7 @@ def grid_pipes(spark, tmp_path_factory):
                 F.pmod("id", F.lit(2)).cast("int").alias("conv_bucket"))
         .crossJoin(
             spark.range(240).select(
-                # NTZ like the real gapfill table — plain TIMESTAMP writes
+                # NTZ like the pipeline's tables — plain TIMESTAMP writes
                 # INT96 pages with NO row-group statistics
                 F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 3600)
                 .cast("timestamp_ntz")
@@ -170,7 +170,7 @@ def grid_pipes(spark, tmp_path_factory):
     paths = {}
     for name in ("z", "lin"):
         pipe = TierPipeline(spark, os.path.join(root, name))
-        grid.write.partitionBy("conv_bucket").parquet(pipe.gapfill_path)
+        grid.write.partitionBy("conv_bucket").parquet(pipe.chunks_path)
         paths[name] = pipe
     return paths["z"], paths["lin"]
 
@@ -178,20 +178,20 @@ def grid_pipes(spark, tmp_path_factory):
 def test_zorder_prunes_both_dimensions(spark, grid_pipes):
     pipe, lin = grid_pipes
     compact_partition(
-        pipe, "gapfill", n_files=1,
+        pipe, "compress", n_files=1,
         zorder=("conv_id", "bucket_start"), rowgroup_bytes=8 * 1024,
     )
     # counterfactual: time-only linear sort — a secondary conv key would
     # itself cluster convs inside each hour and muddy the comparison
     compact_partition(
-        lin, "gapfill", n_files=1,
+        lin, "compress", n_files=1,
         sort_by=("bucket_start",), rowgroup_bytes=8 * 1024,
     )
 
-    z_conv = _containment(_rg_spans(pipe.gapfill_path, "conv_id"))
-    z_time = _containment(_rg_spans(pipe.gapfill_path, "bucket_start"))
-    l_conv = _containment(_rg_spans(lin.gapfill_path, "conv_id"))
-    l_time = _containment(_rg_spans(lin.gapfill_path, "bucket_start"))
+    z_conv = _containment(_rg_spans(pipe.chunks_path, "conv_id"))
+    z_time = _containment(_rg_spans(pipe.chunks_path, "bucket_start"))
+    l_conv = _containment(_rg_spans(lin.chunks_path, "conv_id"))
+    l_time = _containment(_rg_spans(lin.chunks_path, "bucket_start"))
 
     # z-order: BOTH dimensions prune at footer level
     assert z_conv < 0.5, (z_conv, l_conv)

@@ -820,8 +820,11 @@ class TierEngine:
         """Serve `build()` through the result cache keyed on the pipeline
         tables' snapshot pointers: unchanged tables hit (provably identical
         to recomputation), any run/retention/compaction/rollback misses.
-        Outside snapshot mode every table fingerprints as '<none>', so a
-        key caches once and never invalidates — use snapshots=True."""
+        Requires snapshot mode: plain tables have no pointer to key on, so
+        an entry could never invalidate and would keep serving rows a
+        later run or `forget` replaced."""
+        if not self.pipeline.snapshots:
+            raise ValueError("cached requires TierPipeline(snapshots=True)")
         deps = ResultCache.deps_of(
             {
                 n: self.pipeline._store(self.pipeline.table_path(n))

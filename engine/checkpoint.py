@@ -63,6 +63,10 @@ class Manifest:
         os.makedirs(path, exist_ok=True)
         self._cache: tuple[tuple[str, ...], DataFrame] | None = None
         self._pdf_cache: tuple[tuple[str, ...], object] | None = None
+        # commit file name -> its arrow table; names are unique and files
+        # immutable, so a new commit costs one file read, not a re-read of
+        # the whole directory
+        self._tables: dict[str, pa.Table] = {}
 
     def read(self) -> DataFrame:
         """The manifest as a LOCAL relation, memoized on the exact commit-
@@ -104,10 +108,14 @@ class Manifest:
                 {f.name: pd.Series(dtype=object) for f in _ARROW_SCHEMA}
             )
         else:
+            self._tables = {
+                f: self._tables[f]
+                if f in self._tables
+                else pq.read_table(os.path.join(self.path, f))
+                for f in files
+            }
             pdf = (
-                pa.concat_tables(
-                    [pq.read_table(os.path.join(self.path, f)) for f in files]
-                )
+                pa.concat_tables([self._tables[f] for f in files])
                 .cast(_ARROW_SCHEMA)
                 .to_pandas()
             )
@@ -222,6 +230,7 @@ class Manifest:
             os.unlink(os.path.join(self.path, f))
         self._cache = None
         self._pdf_cache = None
+        self._tables = {}
         return {
             "files_before": len(files),
             "files_after": 1,

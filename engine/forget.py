@@ -166,10 +166,6 @@ def forget_sweep(pipe, run_id: str | None = None) -> dict:
     empty are dropped. Commits `stage='forget'` manifest rows recording the
     removed-row count per partition. Returns
     ``{table: {partition_key: rows_removed}}`` for the partitions touched.
-
-    The bucketed hourly mirror is NOT swept here: its content fingerprint
-    is over the hourly tier, so the next `run()` rebuilds it from the swept
-    hourly (`leftover_conversations` reports it until then).
     """
     from .checkpoint import new_run_id
 
@@ -274,12 +270,6 @@ def leftover_conversations(pipe) -> dict:
             continue
         out[name] = (
             pipe._read_path(path)
-            .join(F.broadcast(tomb), "conv_id", "left_semi")
-            .count()
-        )
-    if pipe.bucketed and pipe._mirror_current() is not None:
-        out["hourly_bucketed"] = (
-            pipe._mirror_read(pipe._mirror_current())
             .join(F.broadcast(tomb), "conv_id", "left_semi")
             .count()
         )

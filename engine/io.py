@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,14 +30,24 @@ from .bucket import T0_SCHEMA
 _CATALOG_KEY = re.compile(r"^spark\.sql\.catalog\.([A-Za-z0-9_]+)$")
 
 
+# SparkContext -> its catalog name. The context's conf is fixed at launch,
+# and reading it back costs one py4j round trip per entry; every tier read
+# and write asks.
+_CATALOG_BY_CONTEXT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def iceberg_catalog(spark: SparkSession, _conf_items=None) -> str | None:
     """Name of the configured Iceberg catalog, or None (parquet mode).
     `_conf_items` injects (key, value) pairs for config-level tests."""
-    items = (
-        _conf_items
-        if _conf_items is not None
-        else spark.sparkContext.getConf().getAll()
-    )
+    if _conf_items is not None:
+        return _catalog_in(_conf_items)
+    sc = spark.sparkContext
+    if sc not in _CATALOG_BY_CONTEXT:
+        _CATALOG_BY_CONTEXT[sc] = _catalog_in(sc.getConf().getAll())
+    return _CATALOG_BY_CONTEXT[sc]
+
+
+def _catalog_in(items) -> str | None:
     for k, _v in items:
         m = _CATALOG_KEY.match(k)
         if m:

@@ -19,9 +19,10 @@ Resume granularity per stage:
 
 Gap-fill (LOCF / linear) is not a stage: no read path needs a materialized
 filled series, so `TierEngine.serve_gapfill` fills the range it is asked
-for at read time (engine/rewrite.py serve_gapfill). Roots written before
-that still hold a `gapfill` table; the first run sealed on them, or the
-first `forget`, deletes it (`_drop_retired_tables`).
+for at read time (engine/rewrite.py serve_gapfill). Earlier versions also
+wrote a `gapfill` table and, optionally, a conv_id-bucketed copy of the
+hourly tier; the first run sealed on such a root, or the first `forget`,
+deletes both (`RETIRED_TABLES`).
 """
 
 from __future__ import annotations
@@ -80,8 +81,6 @@ class TierPipeline:
         auto_salt_opts: dict | None = None,
         fill_method: str = "locf",
         fill_tiers: bool = True,
-        bucketed: bool = False,
-        n_buckets: int = 64,
         snapshots: bool = False,
         sketch_cols: list[str] | None = None,
         hist_cols: dict | None = None,
@@ -117,10 +116,6 @@ class TierPipeline:
         #: write flagged intra-day LOCF rows into the hourly tier
         #: (SURVEY §1.2 filled/fill_method on tier rows)
         self.fill_tiers = fill_tiers
-        #: maintain a conv_id-bucketed mirror of the hourly tier so the
-        #: compress stage reads co-located series (zero Exchange)
-        self.bucketed = bucketed
-        self.n_buckets = n_buckets
         #: snapshot-versioned tables (engine/snapstore.py): every stage
         #: write / retention drop / compaction publishes an immutable CoW
         #: snapshot behind an atomic pointer — concurrent readers are never
@@ -163,7 +158,6 @@ class TierPipeline:
         self.lease_ttl_s = lease_ttl_s
         self._wap_active = False
         self._staged: dict[str, str] = {}
-        self._staged_mirror: str | None = None
         self._buffered_rows: list[dict] = []
         self.manifest = Manifest(spark, os.path.join(root, "_manifest"))
         #: right-to-be-forgotten tombstones (engine/forget.py): ingest
@@ -192,7 +186,7 @@ class TierPipeline:
         )
 
     def _tier_hash_cols(self) -> list:
-        """Fingerprint columns for tier-state inputs (daily/monthly/mirror):
+        """Fingerprint columns for tier-state inputs (daily/monthly):
         the state columns plus each enabled family's hash expressions
         (engine/rollup.py FAMILIES). The compress fingerprint deliberately
         stays family-free (_STATE_HASH_COLS): chunks don't read family
@@ -350,7 +344,7 @@ class TierPipeline:
     TABLE_NAMES = ("hourly", "daily", "monthly", "chunks")
     #: derived tables earlier versions wrote and no reader opens; a sealed
     #: run deletes them from the root (with their changelog pointers)
-    RETIRED_TABLES = ("gapfill",)
+    RETIRED_TABLES = ("gapfill", "tiers/hourly_bucketed")
 
     def _commit(self, rows: list[dict]) -> None:
         """Manifest commit, deferred to the seal inside a WAP run so a
@@ -365,27 +359,14 @@ class TierPipeline:
         # published snapshots), then start clean
         for name in self.TABLE_NAMES:
             self._store(self.table_path(name)).clean_stale_staging()
-        if self.bucketed:
-            self._mirror_sweep_staged()
         self._staged = {}
-        self._staged_mirror = None
         self._buffered_rows = []
         self._wap_active = True
 
     def _abort_wap(self) -> None:
         for path, sid in self._staged.items():
             self._store(path).abort(sid)
-        if self._staged_mirror is not None:
-            import shutil
-
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._mirror_tbl(self._staged_mirror)}"
-            )
-            shutil.rmtree(
-                self._mirror_ver_path(self._staged_mirror), ignore_errors=True
-            )
         self._staged = {}
-        self._staged_mirror = None
         self._buffered_rows = []
         self._wap_active = False
 
@@ -412,14 +393,10 @@ class TierPipeline:
             if self.wap_audit is not None:
                 self.wap_audit(self)  # raises to veto; staged state visible
             staged, buffered = self._staged, self._buffered_rows
-            staged_mirror = self._staged_mirror
             self._staged, self._buffered_rows = {}, []
-            self._staged_mirror = None
             self._wap_active = False
             for path, sid in staged.items():
                 self._store(path).publish(sid)
-            if staged_mirror is not None:
-                self._mirror_publish(staged_mirror)
             if buffered:
                 self.manifest.commit(buffered)
         if self.snapshots:
@@ -491,8 +468,6 @@ class TierPipeline:
     #: fingerprint, so every partition the undone runs had committed re-rolls
     ROLLED_BACK = "<rolled-back>"
 
-    _DATA_STAGES = ("hourly", "daily", "monthly", "compress", "hourly_bucketed")
-
     def rollback_run(self, run_id: str) -> dict[str, str]:
         """Restore every table to the snapshot ids sealed by `run_id` —
         pointer flips only, zero data IO (Iceberg `rollback_to_snapshot`,
@@ -530,7 +505,7 @@ class TierPipeline:
         undone = (
             m.filter(
                 (F.col("committed_at") > F.lit(barrier_ts).cast("timestamp_ntz"))
-                & F.col("stage").isin(*self._DATA_STAGES)
+                & F.col("stage").isin(*self.ALL_STAGES)
             )
             .select("stage", "partition_key")
             .distinct()
@@ -822,243 +797,6 @@ class TierPipeline:
         m = self.manifest.read_pandas()
         hit = (m["stage"] == "retention") & (m["lineage"] == lineage)
         return set(m.loc[hit, "partition_key"])
-
-    # -- bucketed hourly mirror (L5 scale path, VERDICT r2 item 3) ----------
-    def bucketed_table(self) -> str:
-        """Session-catalog name of the mirror, stable per pipeline root."""
-        import hashlib
-
-        return "tiers_hourly_b_" + hashlib.md5(self.root.encode()).hexdigest()[:10]
-
-    @property
-    def bucketed_path(self) -> str:
-        return os.path.join(self.root, "tiers", "hourly_bucketed")
-
-    # In snapshot mode the mirror is VERSIONED like every other table
-    # (ADVICE r3): each refresh writes a fresh `_v/<ver>` tree and flips an
-    # atomic `_CURRENT` pointer — no in-place saveAsTable overwrite, so
-    # concurrent readers are never torn. Inside a WAP run the freshly
-    # written version stays UNPUBLISHED (pointer untouched) until the seal;
-    # an audit veto or crash leaves the published mirror — like every other
-    # published table — byte-untouched, and `_begin_wap` sweeps the
-    # orphaned version dirs of a crashed run.
-    @property
-    def _mirror_versions_dir(self) -> str:
-        return os.path.join(self.bucketed_path, "_v")
-
-    @property
-    def _mirror_pointer(self) -> str:
-        return os.path.join(self.bucketed_path, "_CURRENT")
-
-    def _mirror_current(self) -> str | None:
-        try:
-            with open(self._mirror_pointer) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def _mirror_version_ids(self) -> list[str]:
-        try:
-            return sorted(
-                v
-                for v in os.listdir(self._mirror_versions_dir)
-                if not v.startswith(".")
-            )
-        except FileNotFoundError:
-            return []
-
-    def _mirror_new_ver(self) -> str:
-        import uuid
-
-        prefixes = [
-            int(v.split("_", 1)[0])
-            for v in self._mirror_version_ids()
-            if v.split("_", 1)[0].isdigit()
-        ]
-        nxt = (max(prefixes) + 1) if prefixes else 0
-        return f"{nxt:08d}_{uuid.uuid4().hex[:8]}"
-
-    def _mirror_tbl(self, ver: str) -> str:
-        return f"{self.bucketed_table()}_{ver}"
-
-    def _mirror_ver_path(self, ver: str) -> str:
-        return os.path.join(self._mirror_versions_dir, ver)
-
-    def _mirror_publish(self, ver: str) -> None:
-        import uuid
-
-        open(os.path.join(self._mirror_ver_path(ver), "_PUBLISHED"), "w").close()
-        tmp = self._mirror_pointer + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(ver)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._mirror_pointer)
-        # prune published versions older than the immediate predecessor
-        # (kept for readers pinned pre-flip); the mirror is a derived cache,
-        # never a rollback target, so deep history buys nothing
-        import shutil
-
-        published = [
-            v
-            for v in self._mirror_version_ids()
-            if os.path.exists(os.path.join(self._mirror_ver_path(v), "_PUBLISHED"))
-        ]
-        for v in published[:-2]:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._mirror_tbl(v)}")
-            shutil.rmtree(self._mirror_ver_path(v), ignore_errors=True)
-
-    def _mirror_sweep_staged(self) -> None:
-        """Delete mirror versions a crashed WAP run staged but never
-        published (no _PUBLISHED marker, not the pointer target)."""
-        import shutil
-
-        cur = self._mirror_current()
-        for v in self._mirror_version_ids():
-            if v != cur and not os.path.exists(
-                os.path.join(self._mirror_ver_path(v), "_PUBLISHED")
-            ):
-                self.spark.sql(f"DROP TABLE IF EXISTS {self._mirror_tbl(v)}")
-                shutil.rmtree(self._mirror_ver_path(v), ignore_errors=True)
-
-    def _mirror_read(self, ver: str) -> DataFrame:
-        """Catalog-backed read of one mirror version, re-registering the
-        bucketed table after a fresh-process resume (bucket metadata lives
-        in the in-memory session catalog; files + pointer survive)."""
-        from .bucketed import read_bucketed
-
-        tbl = self._mirror_tbl(ver)
-        if not self.spark.catalog.tableExists(tbl):
-            vpath = self._mirror_ver_path(ver)
-            ddl = self.spark.read.parquet(vpath)._jdf.schema().toDDL()
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING parquet "
-                f"CLUSTERED BY (conv_id) SORTED BY (conv_id, bucket_start) "
-                f"INTO {self.n_buckets} BUCKETS "
-                f"LOCATION '{vpath}'"
-            )
-        return read_bucketed(self.spark, tbl)
-
-    def series_input(self, run_id: str | None = None) -> DataFrame:
-        """Observed hourly state as the compress input.
-
-        Plain mode: the day-partitioned tier — the series-keyed stage then
-        pays its own conv_id shuffle. Bucketed mode: a bucketBy(conv_id)
-        mirror refreshed when the hourly tier's fingerprint changes — ONE
-        shuffle at mirror-write time, after which the chunk compressor's
-        aggregation (and any other (conv_id, …)-clustered reader, e.g. the
-        gap-fill kernels) plans with ZERO Exchange (the bucketed scan's
-        HashPartitioning(conv_id) satisfies every (conv_id, …)-clustered
-        requirement; asserted in tests/test_bucketed.py). Net at scale: the
-        per-run series shuffle becomes one amortized write that co-locates
-        every later conv-keyed reader too. With an Iceberg catalog the same
-        layout is `bucket(N, conv_id)` hidden partitioning.
-        """
-        hourly = observed_state(self.read_tier("hourly"))
-        if not self.bucketed:
-            return hourly
-        from .bucketed import read_bucketed, write_bucketed
-
-        work = work_manifest(
-            hourly.withColumn("_all", F.lit("all")),
-            F.col("_all"),
-            self._tier_hash_cols(),
-            "mirror",
-        )
-        pending = pending_rows(
-            work.collect(), self.manifest, "hourly_bucketed"
-        )
-        if self.snapshots:
-            out_ver = None
-            if pending:
-                ver = self._mirror_new_ver()
-                vpath = self._mirror_ver_path(ver)
-                os.makedirs(self._mirror_versions_dir, exist_ok=True)
-                write_bucketed(
-                    hourly,
-                    self._mirror_tbl(ver),
-                    n_buckets=self.n_buckets,
-                    bucket_col="conv_id",
-                    sort_cols=("conv_id", "bucket_start"),
-                    path=vpath,
-                )
-                self._commit(
-                    [
-                        {
-                            "run_id": run_id or new_run_id(),
-                            "stage": "hourly_bucketed",
-                            "partition_key": r["partition_key"],
-                            "rows_in": r["rows_in"],
-                            "rows_out": r["rows_in"],
-                            "lineage": "hourly",
-                            "input_snapshot_id": r["input_snapshot_id"],
-                            "output_snapshot_id": vpath,
-                        }
-                        for r in pending
-                    ]
-                )
-                if self._wap_active:
-                    # stays unpublished (pointer untouched) until the seal;
-                    # this run's later stages read the staged version below
-                    if self._staged_mirror is not None and self._staged_mirror != ver:
-                        import shutil
-
-                        self.spark.sql(
-                            f"DROP TABLE IF EXISTS {self._mirror_tbl(self._staged_mirror)}"
-                        )
-                        shutil.rmtree(
-                            self._mirror_ver_path(self._staged_mirror),
-                            ignore_errors=True,
-                        )
-                    self._staged_mirror = ver
-                else:
-                    self._mirror_publish(ver)
-                out_ver = ver
-            elif self._wap_active and self._staged_mirror:
-                out_ver = self._staged_mirror
-            else:
-                out_ver = self._mirror_current()
-            if out_ver is None:
-                # mirror never built and nothing pending (e.g. empty hourly)
-                return hourly
-            return self._mirror_read(out_ver)
-        tbl = self.bucketed_table()
-        if pending:
-            write_bucketed(
-                hourly,
-                tbl,
-                n_buckets=self.n_buckets,
-                bucket_col="conv_id",
-                sort_cols=("conv_id", "bucket_start"),
-                path=self.bucketed_path,
-            )
-            self._commit(
-                [
-                    {
-                        "run_id": run_id or new_run_id(),
-                        "stage": "hourly_bucketed",
-                        "partition_key": r["partition_key"],
-                        "rows_in": r["rows_in"],
-                        "rows_out": r["rows_in"],
-                        "lineage": "hourly",
-                        "input_snapshot_id": r["input_snapshot_id"],
-                        "output_snapshot_id": self.bucketed_path,
-                    }
-                    for r in pending
-                ]
-            )
-        elif not self.spark.catalog.tableExists(tbl):
-            # fresh-process resume: files + manifest survive, the in-memory
-            # session catalog does not — re-register the existing layout
-            # (no data rewrite; bucket metadata only)
-            ddl = self.spark.read.parquet(self.bucketed_path)._jdf.schema().toDDL()
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING parquet "
-                f"CLUSTERED BY (conv_id) SORTED BY (conv_id, bucket_start) "
-                f"INTO {self.n_buckets} BUCKETS "
-                f"LOCATION '{self.bucketed_path}'"
-            )
-        return read_bucketed(self.spark, tbl)
 
     # -- stages --------------------------------------------------------------
     ALL_STAGES = ("hourly", "daily", "monthly", "compress")
@@ -1373,22 +1111,20 @@ class TierPipeline:
             return self._finish_run(run_id, done, scans, left)
 
         # 4. compress, keyed by conv_bucket (series must stay whole;
-        # observed rows only). In bucketed mode the input is the
-        # conv_id-bucketed mirror and the stage plans with zero Exchange
-        # (series_input).
+        # observed rows only).
         # Series-stage short-circuit (snapshot mode): when the hourly
         # snapshot is inode-identical to what compress last reconciled, its
         # full-bucket fingerprints cannot have changed and no stale
-        # transition is possible — skip the scan, the mirror touch, and the
-        # stage outright. (Per-bucket partial pruning is deliberately not
-        # attempted: a bucket's fingerprint spans its every day, and
-        # layout-1 hourly cannot dir-prune on conv_bucket.)
+        # transition is possible — skip the scan and the stage outright.
+        # (Per-bucket partial pruning is deliberately not attempted: a
+        # bucket's fingerprint spans its every day, and layout-1 hourly
+        # cannot dir-prune on conv_bucket.)
         def series_stage() -> dict:
             if self._changed_upstream_days("compress", "hourly") == []:
                 scans["series"] = "pruned-noop"
                 return {"compress": 0}
             scans["series"] = "full"
-            hourly = self.series_input(run_id)
+            hourly = observed_state(self.read_tier("hourly"))
             cb_work = work_manifest(
                 hourly, F.col("conv_bucket").cast("string"),
                 _STATE_HASH_COLS, "cb",
@@ -1421,7 +1157,7 @@ class TierPipeline:
         # commits are one-immutable-file-per-commit, done/scans/left
         # writes touch disjoint keys, and the tables/stores are disjoint
         # paths. WAP runs keep the serial order: staged-snapshot
-        # bookkeeping (_staged/_buffered_rows/_staged_mirror) is
+        # bookkeeping (_staged/_buffered_rows) is
         # deliberately not made concurrent.
         if self.wap:
             done["monthly"] = monthly_stage()

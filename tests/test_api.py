@@ -8,6 +8,7 @@ import os
 import sys
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -127,6 +128,27 @@ def test_engine_forget_front_door(spark, tmp_path):
     assert all(v == 0 for v in eng.forgotten_leftovers().values())
     for tier in ("hourly", "daily", "monthly"):
         assert eng.tier(tier).filter(F.col("conv_id").isin(doomed)).count() == 0
+
+
+def test_cached_refuses_plain_mode(spark, tmp_path):
+    """A plain-mode root has no snapshot pointer to key results on: a cached
+    entry would never invalidate and, after a forget, would keep serving
+    the erased conversation's rows. cached refuses instead, before and
+    after the forget, like rollback and replication do."""
+    t0 = synth_transcripts(spark, n_convs=6, hot_turns=40).localCheckpoint()
+    eng = TierEngine(spark, str(tmp_path / "plain"))
+    eng.run(t0)
+    doomed = ["conv-00000005"]
+
+    def build():
+        return eng.tier("hourly").filter(F.col("conv_id").isin(doomed))
+
+    with pytest.raises(ValueError, match=r"snapshots=True"):
+        eng.cached("doomed_rows", build)
+    eng.forget(doomed, t0=t0)
+    assert build().count() == 0
+    with pytest.raises(ValueError, match=r"snapshots=True"):
+        eng.cached("doomed_rows", build)
 
 
 def test_time_travel_sql_pins_a_sealed_run(spark, tmp_path):

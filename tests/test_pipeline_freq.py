@@ -124,8 +124,8 @@ def test_freq_enable_is_one_time_migration(spark, t0, tmp_path):
 
 def test_freq_composes_with_all_modes(spark, t0, tmp_path):
     """freq state rides the full mode stack (salted × sketches × snapshots
-    × WAP × bucketed) — maps equal the plain+freq reference as entry
-    multisets at every tier."""
+    × WAP) — maps equal the plain+freq reference as entry multisets at
+    every tier."""
     pipe = TierPipeline(
         spark,
         str(tmp_path / "six"),
@@ -134,7 +134,6 @@ def test_freq_composes_with_all_modes(spark, t0, tmp_path):
         freq_cols=["tool", "role"],
         snapshots=True,
         wap=True,
-        bucketed=True,
     )
     pipe.run(t0)
     ref = TierPipeline(

@@ -129,10 +129,9 @@ def test_sketches_compose_with_snapshots_and_salting(spark, t0, tmp_path):
 
 
 def test_all_five_modes_compose(spark, t0, tmp_path):
-    """salted leaf agg × HLL sketch state × snapshot storage × WAP staging
-    × bucketed series mirror, one run — equal to the plain+sketch
-    reference on every tier (non-sketch columns bit-exact, sketch columns
-    estimate-exact)."""
+    """salted leaf agg × HLL sketch state × snapshot storage × WAP staging,
+    one run — equal to the plain+sketch reference on every tier
+    (non-sketch columns bit-exact, sketch columns estimate-exact)."""
     pipe = TierPipeline(
         spark,
         str(tmp_path / "five"),
@@ -140,7 +139,6 @@ def test_all_five_modes_compose(spark, t0, tmp_path):
         sketch_cols=["tool"],
         snapshots=True,
         wap=True,
-        bucketed=True,
     )
     pipe.run(t0)
     ref = TierPipeline(spark, str(tmp_path / "fref"), sketch_cols=["tool"])

@@ -38,13 +38,15 @@ def test_full_then_incremental_then_noop(spark, t0, tmp_path):
     assert all(s1[t]["mode"] == "full" for t in TABLES), s1
     _assert_parity(rep)
 
-    # nothing changed -> every table no-ops, zero copies; a table the
-    # primary no longer writes is deleted from the replica
+    # nothing changed -> every table no-ops, zero copies; tables the
+    # primary no longer writes are deleted from the replica
     os.makedirs(os.path.join(rep.root, "gapfill", "conv_bucket=0"))
+    os.makedirs(os.path.join(rep.root, "tiers", "hourly_bucketed", "_v", "0"))
     s2 = rep.sync()
     assert all(s2[t]["mode"] == "noop" and not s2[t]["copied"] for t in TABLES)
     assert set(s2) == set(TABLES)
     assert not os.path.exists(os.path.join(rep.root, "gapfill"))
+    assert not os.path.exists(os.path.join(rep.root, "tiers", "hourly_bucketed"))
 
     # late data for ONE conversation: the ship is diff-only
     late = t0.filter("conv_id = 'conv-00000000'").selectExpr(

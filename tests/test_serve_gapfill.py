@@ -242,10 +242,14 @@ def test_metrics_filter_and_gap_range(spark, lifecycle):
 def test_root_with_gapfill_table_migrates(spark, tmp_path):
     """A root written while gap-fill was a pipeline stage holds a `gapfill`
     snapshot table, its changelog pointer, `gapfill` manifest rows and a
-    `table=gapfill` run-barrier row. The next sealed run deletes the table
-    and the pointer and leaves the tiers as they were; the old run's
-    barrier still reads (`read_consistent`) and rolls back. A forget
-    without the raw input deletes a retired table too."""
+    `table=gapfill` run-barrier row. A root written with the bucketed
+    hourly mirror holds `tiers/hourly_bucketed`: a `_v/<ver>` parquet tree
+    of observed hourly rows marked `_PUBLISHED`, a `_CURRENT` pointer to
+    it and `hourly_bucketed` manifest rows. The next sealed run deletes
+    both tables and the pointer and leaves the tiers as they were; the old
+    run's barrier still reads (`read_consistent`) and rolls back. A forget
+    without the raw input deletes retired tables too: the mirror holds
+    copies of the erased conversations' hourly rows."""
     from engine.api import TierEngine
     from engine.forget import leftover_conversations
     from engine.gapfill import hourly_series
@@ -261,6 +265,8 @@ def test_root_with_gapfill_table_migrates(spark, tmp_path):
 
     store = SnapStore(os.path.join(root, "gapfill"))
     progress = os.path.join(root, "_progress", "gapfill.upstream")
+    mirror = os.path.join(root, "tiers", "hourly_bucketed")
+    mirror_ver = "00000000_0a1b2c3d"
 
     def plant():
         """The table and changelog pointer the gapfill stage left behind."""
@@ -274,7 +280,17 @@ def test_root_with_gapfill_table_migrates(spark, tmp_path):
             f.write(SnapStore(pipe.tier_path("hourly")).current_id() + " ")
         return store.current_id()
 
+    def plant_mirror():
+        """The versioned mirror tree the bucketed mode left behind."""
+        vpath = os.path.join(mirror, "_v", mirror_ver)
+        observed_state(eng.tier("hourly")).write.parquet(vpath)
+        open(os.path.join(vpath, "_PUBLISHED"), "w").close()
+        with open(os.path.join(mirror, "_CURRENT"), "w") as f:
+            f.write(mirror_ver)
+        return spark.read.parquet(vpath)
+
     sid = plant()
+    mirrored = plant_mirror()
     compress = pipe.manifest.read_pandas()
     compress = compress[compress["stage"] == "compress"]
     pipe.manifest.commit(
@@ -302,6 +318,19 @@ def test_root_with_gapfill_table_migrates(spark, tmp_path):
                 "lineage": "run-barrier",
             }
         ]
+        + [
+            {
+                "run_id": "r1",
+                "stage": "hourly_bucketed",
+                "partition_key": "mirror=all",
+                "rows_in": mirrored.count(),
+                "rows_out": mirrored.count(),
+                "lineage": "hourly",
+                # work_manifest's rows_in:xor-hash:sum-hash fingerprint
+                "input_snapshot_id": f"{mirrored.count()}:1:2",
+                "output_snapshot_id": os.path.join(mirror, "_v", mirror_ver),
+            }
+        ]
     )
 
     def tables(views):
@@ -321,6 +350,9 @@ def test_root_with_gapfill_table_migrates(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "gapfill"))
     assert not os.path.exists(progress)
     assert "gapfill" not in eng.status()["snapshots"]
+    assert sorted(os.listdir(os.path.join(root, "tiers"))) == [
+        "daily", "hourly", "monthly"
+    ]
     now = tables({n: pipe.read_table(n) for n in pipe.TABLE_NAMES})
     for n, df in tables(pipe.read_consistent("r1")).items():
         pd.testing.assert_frame_equal(df, r1[n], obj=f"r1 {n}")
@@ -328,12 +360,15 @@ def test_root_with_gapfill_table_migrates(spark, tmp_path):
 
     assert set(pipe.rollback_run("r1")) == {"hourly", "daily", "monthly", "chunks"}
     assert not os.path.exists(os.path.join(root, "gapfill"))
+    assert not os.path.exists(mirror)
 
-    # an erasure without the raw input (no run, so no seal) still removes a
-    # retired table with every erased conversation's series in it
+    # an erasure without the raw input (no run, so no seal) still removes
+    # retired tables with every erased conversation's rows in them
     plant()
+    assert plant_mirror().filter(F.col("conv_id").isin(FORGET)).count() > 0
     assert os.path.exists(os.path.join(root, "gapfill"))
     eng.forget(FORGET)
     assert not os.path.exists(os.path.join(root, "gapfill"))
     assert not os.path.exists(progress)
+    assert not os.path.exists(mirror)
     assert leftover_conversations(pipe) == {n: 0 for n in pipe.TABLE_NAMES}

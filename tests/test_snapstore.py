@@ -587,91 +587,6 @@ def test_expire_protects_barriers_and_consumers(spark, t0, tmp_path):
     assert set(hourly_ids) <= protected | {hourly_ids[-1]}
 
 
-def test_wap_bucketed_mirror_stays_staged_until_seal(spark, t0, tmp_path):
-    """ADVICE r3: with wap=True + bucketed=True the conv_id mirror must NOT
-    publish before the seal. An audit veto leaves the published mirror
-    byte-untouched; a successful seal publishes it; a crashed run's staged
-    version dirs are swept by the next run."""
-    from engine.pipeline import TierPipeline
-
-    root = str(tmp_path / "wapb")
-
-    def mk(audit=None):
-        return TierPipeline(
-            spark, root, snapshots=True, wap=True, bucketed=True,
-            n_buckets=4, wap_audit=audit,
-        )
-
-    seed = mk()
-    seed.run(t0)
-    before = _pdf_any(seed.series_input())
-    ver_before = seed._mirror_current()
-    assert ver_before is not None
-
-    class Veto(RuntimeError):
-        pass
-
-    def audit(p):
-        raise Veto("no")
-
-    late = t0.limit(40).selectExpr(
-        "conv_id", "cast(turn_idx + 80000 as int) as turn_idx",
-        "role", "text", "tool", "ts + interval 11 minutes as ts",
-    )
-    t2 = t0.unionByName(late)
-    with pytest.raises(Veto):
-        mk(audit).run(t2)
-    # pointer untouched, mirror content identical, no orphan version dirs
-    after_veto = mk()
-    assert after_veto._mirror_current() == ver_before
-    pd.testing.assert_frame_equal(_pdf_any(after_veto.series_input()), before)
-    for v in after_veto._mirror_version_ids():
-        assert os.path.exists(
-            os.path.join(after_veto._mirror_ver_path(v), "_PUBLISHED")
-        )
-    # successful seal publishes a NEW version whose content includes the
-    # late rows (mirror rebuilt from the sealed hourly)
-    ok = mk()
-    ok.run(t2)
-    assert ok._mirror_current() != ver_before
-    assert len(_pdf_any(ok.series_input())) >= len(before)
-    # crash-sweep: a staged-never-published version dir left by a dead run
-    # is removed when the next WAP run begins
-    ghost = ok._mirror_ver_path("99999999_deadbeef")
-    os.makedirs(ghost)
-    fresh = mk()
-    fresh.run(t2)  # no-op resume, but _begin_wap sweeps first
-    assert not os.path.exists(ghost)
-
-
-def _pdf_any_cols(df):
-    return df.toPandas().reindex(sorted(df.columns), axis=1)
-
-
-def test_snapshot_bucketed_refresh_never_tears_pinned_reader(spark, t0, tmp_path):
-    """snapshot mode (non-WAP) + bucketed: a reader holding the mirror keeps
-    a consistent view across a refresh — versioned dirs, no in-place
-    overwrite (the r3 mirror overwrote bucketed_path in place)."""
-    from engine.pipeline import TierPipeline
-
-    root = str(tmp_path / "snapb")
-    pipe = TierPipeline(spark, root, snapshots=True, bucketed=True, n_buckets=4)
-    pipe.run(t0)
-    reader = pipe.series_input()  # plan pinned to version 1's files
-    pinned = _pdf_any(reader)
-    late = t0.limit(30).selectExpr(
-        "conv_id", "cast(turn_idx + 70000 as int) as turn_idx",
-        "role", "text", "tool", "ts + interval 13 minutes as ts",
-    )
-    pipe2 = TierPipeline(spark, root, snapshots=True, bucketed=True, n_buckets=4)
-    pipe2.run(t0.unionByName(late))
-    # the pre-refresh reader still answers bit-identically
-    pd.testing.assert_frame_equal(_pdf_any(reader), pinned)
-    # and the new mirror includes the late hour rewrites
-    assert pipe2._mirror_current() != pipe._mirror_current() or True
-    assert len(_pdf_any(pipe2.series_input())) >= len(pinned)
-
-
 def test_tags_pin_snapshots_and_survive_expire(spark, store):
     """Iceberg-style tag refs: a named pin reads by name, survives expire
     at any keep_last, and re-tagging/untagging is atomic."""

@@ -77,6 +77,7 @@ class TierEngine:
     def drop_hourly_before(self, older_than: str, run_id: str = "retention"):
         from .retention import drop_hourly_partitions, droppable_hourly_days
 
+        self.pipeline._migrate_chunks(run_id)
         days = droppable_hourly_days(self.pipeline, older_than)
         return drop_hourly_partitions(self.pipeline, days, run_id=run_id)
 
@@ -99,7 +100,7 @@ class TierEngine:
         """
         from .checkpoint import Manifest
 
-        pdf = self.pipeline.manifest.read().toPandas()
+        pdf = self.pipeline.manifest.read_pandas()
         stages: dict = {}
         data = pdf[~pdf.stage.isin(Manifest.PRESERVED_STAGES)]
         for stage, g in data.groupby("stage"):
@@ -767,8 +768,9 @@ class TierEngine:
 
     def serve_chunk_range(self, lo: datetime, hi: datetime) -> DataFrame:
         """The compressed-store range read: decode ONLY the T4 chunk blobs
-        whose span overlaps [lo, hi) (row-group-stat pruned on
-        chunk_start/chunk_end before the Python boundary), clipped exactly.
+        whose span overlaps [lo, hi) (the month directories overlapping the
+        range, then row-group stats on chunk_start/chunk_end, before the
+        Python boundary), clipped exactly.
         Serves historical series after raw/hourly retention drops."""
         from .codec.chunks import read_chunk_range
 

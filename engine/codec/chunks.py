@@ -142,12 +142,24 @@ def read_chunk_range(chunks: DataFrame, lo, hi) -> tuple[DataFrame, DataFrame]:
     stats) BEFORE any blob bytes cross the Python boundary. At 100 TB the
     decode UDF is the expensive stage; a one-day query over a year of
     month-chunked series pays for ~1/12 of the blobs, not all of them.
+    On the pipeline's chunks table, partitioned by `chunk_month`, the scan
+    first prunes to the month directories overlapping [lo, hi): a range
+    inside one month opens one file. A table without that column (an
+    in-memory make_chunks frame, or a root not yet re-keyed by month) is
+    read whole.
     Returns (points, bad_crc_chunks) like decode_chunks."""
     lo_c = F.lit(lo).cast("timestamp_ntz")
     hi_c = F.lit(hi).cast("timestamp_ntz")
     pruned = chunks.filter(
         (F.col("chunk_end") >= lo_c) & (F.col("chunk_start") < hi_c)
     )
+    if "chunk_month" in chunks.columns:
+        pruned = pruned.filter(
+            F.col("chunk_month").between(
+                F.date_format(lo_c, "yyyy-MM"),
+                F.date_format(hi_c - F.expr("INTERVAL 1 MICROSECOND"), "yyyy-MM"),
+            )
+        )
     decoded, bad = decode_chunks(pruned)
     return (
         decoded.filter(

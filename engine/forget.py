@@ -141,11 +141,13 @@ class TombstoneStore:
 
 def _swept_tables(pipe) -> list[tuple[str, str, list[str]]]:
     """(name, path, partition_cols) for every conv-keyed engine table."""
+    from .pipeline import CHUNK_PART
+
     return [
         ("hourly", pipe.tier_path("hourly"), pipe.hourly_partition_cols()),
         ("daily", pipe.tier_path("daily"), ["bucket_date"]),
         ("monthly", pipe.tier_path("monthly"), ["bucket_month"]),
-        ("chunks", pipe.chunks_path, ["conv_bucket"]),
+        ("chunks", pipe.chunks_path, [CHUNK_PART]),
     ]
 
 
@@ -179,6 +181,7 @@ def forget_sweep(pipe, run_id: str | None = None) -> dict:
 def _sweep_locked(pipe, run_id: str) -> dict:
     # a retired table is not swept: it goes, with every row it holds
     pipe._drop_retired_tables()
+    pipe._migrate_chunks(run_id)
     tomb = pipe.tombstones.read(pipe.spark)
     report: dict = {}
     for name, path, part_cols in _swept_tables(pipe):

@@ -9,13 +9,19 @@ reference's write-GeoTIFF-then-skip-on-rerun checkpoint idiom generalized to
 mutable inputs: a rerun recomputes a partition iff it is uncommitted OR its
 input fingerprint changed (late/backfilled rows — J4). Because each stage
 fingerprints its own input tier, one late raw row cascades exactly the
-affected day → its month → the touched conv_buckets, and nothing else.
+affected day → its month in the monthly tier and in the chunks, and
+nothing else.
 
 Resume granularity per stage:
     hourly/daily  -> bucket_date (day)      key 'day=YYYY-MM-DD'
     monthly       -> month                   key 'month=YYYY-MM'
-    compress      -> conv_bucket             key 'cb=<n>'   (series must be
-                     whole per conversation: chunks span months)
+    compress      -> chunk_month (month)     key 'month=YYYY-MM'   (a chunk
+                     is one month of one conversation's metric series, so
+                     a month's chunks read only that month's hourly rows;
+                     one task writes each month directory)
+
+Roots of earlier versions keyed the chunks by conv_bucket (manifest keys
+'cb=<n>'); the first write-side operation re-keys them (`_migrate_chunks`).
 
 Gap-fill (LOCF / linear) is not a stage: no read path needs a materialized
 filled series, so `TierEngine.serve_gapfill` fills the range it is asked
@@ -59,6 +65,19 @@ N_CONV_BUCKETS = 64
 
 #: hourly/daily tier-state content columns hashed into stage fingerprints
 _STATE_HASH_COLS = ["conv_id", "bucket_start", *STATE_COLS]
+
+#: the chunks table's partition column: the month of `chunk_start`
+CHUNK_PART = "chunk_month"
+
+
+def _chunk_month():
+    return F.date_format("chunk_start", "yyyy-MM")
+
+
+def _day_month():
+    """An hourly row's month, from its bucket_date partition column (a
+    month filter then prunes hourly day directories)."""
+    return F.date_format("bucket_date", "yyyy-MM")
 
 
 def _conv_bucket(col="conv_id", n=N_CONV_BUCKETS):
@@ -259,26 +278,26 @@ class TierPipeline:
         return eio.read_tier(self.spark, self.tier_path(tier))
 
     @staticmethod
-    def _tree_partition_depth(root: str) -> int | None:
-        """Nesting depth of k=v partition dirs in an existing parquet tree
-        (None when absent/empty). Detects a partition-SPEC mismatch between
-        what is on disk and what this pipeline is configured to write."""
-        try:
-            entries = [
-                d
-                for d in os.listdir(root)
-                if "=" in d and os.path.isdir(os.path.join(root, d))
-            ]
-        except FileNotFoundError:
-            return None
-        if not entries:
-            return None
-        sub = os.path.join(root, entries[0])
-        has_sub = any(
-            "=" in d and os.path.isdir(os.path.join(sub, d))
-            for d in os.listdir(sub)
-        )
-        return 2 if has_sub else 1
+    def _tree_partition_cols(root: str) -> list[str] | None:
+        """Partition column names of an existing parquet tree, outermost
+        first, read along its first k=v directory path (None when absent or
+        empty). Detects a partition-SPEC mismatch between what is on disk
+        and what this pipeline is configured to write — a change of column
+        at the same depth as well as a change of depth."""
+        cols: list[str] = []
+        d = root
+        while True:
+            try:
+                sub = sorted(
+                    e for e in os.listdir(d)
+                    if "=" in e and os.path.isdir(os.path.join(d, e))
+                )
+            except FileNotFoundError:
+                return None
+            if not sub:
+                return cols or None
+            cols.append(sub[0].split("=", 1)[0])
+            d = os.path.join(d, sub[0])
 
     @staticmethod
     def _clear_partition_dirs(root: str) -> None:
@@ -293,12 +312,13 @@ class TierPipeline:
     ) -> None:
         if not self.snapshots:
             # partition-spec evolution (plain mode): dynamic overwrite only
-            # replaces the LEAF partitions the new data touches, so a
-            # depth change would leave old-layout files mixed into the same
-            # day dirs — clear the tree first (every partition re-rolls on
-            # a spec change anyway: the layout token is in the fingerprint)
-            depth = self._tree_partition_depth(path)
-            if depth is not None and depth != len(partition_cols):
+            # replaces the LEAF partitions the new data touches, so a spec
+            # change would leave old-layout directories mixed into the table
+            # (Spark refuses to read conflicting partition columns) — clear
+            # the tree first (every partition re-rolls on a spec change
+            # anyway: the layout token is in the fingerprint)
+            cols = self._tree_partition_cols(path)
+            if cols is not None and cols != list(partition_cols):
                 self._clear_partition_dirs(path)
             _write(df, path, partition_cols)
             return
@@ -318,11 +338,11 @@ class TierPipeline:
         try:
             # spec evolution (snapshot mode): the staged CoW tree inherits
             # the OLD layout's files — clear them so the new snapshot is
-            # homogeneous at the new depth; prior snapshots keep the old
+            # homogeneous under the new spec; prior snapshots keep the old
             # layout and stay readable via time travel
             snap = store.snapshot_path(sid)
-            depth = self._tree_partition_depth(snap)
-            if depth is not None and depth != len(partition_cols):
+            cols = self._tree_partition_cols(snap)
+            if cols is not None and cols != list(partition_cols):
                 self._clear_partition_dirs(snap)
             (
                 eio.spread_partitions(out, partition_cols)
@@ -436,6 +456,112 @@ class TierPipeline:
                 os.remove(self._progress_file(name))
             except FileNotFoundError:
                 pass
+
+    def _chunks_dir(self) -> str | None:
+        """The directory holding the chunks table's current files (the
+        published snapshot in snapshot mode); None when there is none."""
+        if not self.snapshots:
+            return self.chunks_path
+        store = self._store(self.chunks_path)
+        cur = store.current_id()
+        return None if cur is None else store.snapshot_path(cur)
+
+    def _migrate_chunks(self, run_id: str | None = None) -> None:
+        """Re-key the chunks table of an earlier version, partitioned by
+        conv_bucket with 'cb=<n>' compress keys, by month. Every write-side
+        operation (run, forget, retention, compaction) calls this first;
+        once done it costs a directory listing and a manifest lookup.
+
+        The old chunk rows are rewritten under the month key, not rebuilt
+        from hourly, so the archived series of retention-dropped days
+        survive. One manifest commit then closes every live 'cb=' key with
+        a DELETED row and commits each hourly month's current fingerprint,
+        so the next run builds nothing. If a conv_bucket was pending a
+        re-roll, the months stay uncommitted and the next run rebuilds
+        them from hourly, as it would have rebuilt that bucket. Months only
+        the chunks still hold (every hourly day retention-dropped) get the
+        DELETED archive row that keeps them out of stale detection. Each
+        step is idempotent: a crash anywhere resumes on the next call."""
+        import shutil
+
+        from .retention import recover_compaction
+
+        path = self.chunks_path
+        if not self.snapshots:
+            recover_compaction(path)
+        d = self._chunks_dir()
+        if d is not None and self._tree_partition_cols(d) == ["conv_bucket"]:
+            out = (
+                self.read_table("chunks")
+                .drop("conv_bucket")
+                .withColumn(CHUNK_PART, _chunk_month())
+            )
+            if self.snapshots:
+                self._write_table(out, path, [CHUNK_PART])
+            else:
+                # plain mode reads the directory it replaces: write beside
+                # it, then swap the two as compaction does
+                _write(out, path + "__migrate", [CHUNK_PART])
+                os.rename(path, path + "__old")
+                os.rename(path + "__migrate", path)
+                shutil.rmtree(path + "__old")
+        old_keys = sorted(
+            k
+            for k, s in self.manifest.latest_map("compress").items()
+            if k.startswith("cb=") and s != DELETED_SNAPSHOT
+        )
+        if not old_keys:
+            return
+        run_id = run_id or new_run_id()
+        hourly = observed_state(self.read_tier("hourly"))
+        cb_work = work_manifest(
+            hourly, F.col("conv_bucket").cast("string"), _STATE_HASH_COLS, "cb"
+        ).collect()
+        current = not pending_rows(cb_work, self.manifest, "compress") and not (
+            stale_keys({r["partition_key"] for r in cb_work}, self.manifest,
+                       "compress")
+        )
+        work = work_manifest(
+            hourly, _day_month(), _STATE_HASH_COLS, "month"
+        ).collect()
+        d = self._chunks_dir()
+        held = sorted(
+            e.split("=", 1)[1] for e in os.listdir(d)
+            if e.startswith(f"{CHUNK_PART}=")
+        ) if d is not None and os.path.isdir(d) else []
+        rows_out = self._rows_out(path, CHUNK_PART, held)
+        rows = [
+            {"run_id": run_id, "stage": "compress", "partition_key": k,
+             "lineage": "chunks-migration",
+             "input_snapshot_id": DELETED_SNAPSHOT}
+            for k in old_keys
+        ]
+        if current:
+            rows += [
+                {"run_id": run_id, "stage": "compress",
+                 "partition_key": r["partition_key"],
+                 "rows_in": r["rows_in"],
+                 "rows_out": rows_out.get(r["partition_key"][6:], 0),
+                 "lineage": "chunks-migration",
+                 "input_snapshot_id": r["input_snapshot_id"],
+                 "output_snapshot_id": path}
+                for r in work
+            ]
+        live = {r["partition_key"] for r in work}
+        rows += [
+            {"run_id": run_id, "stage": "compress", "partition_key": f"month={m}",
+             "lineage": "hourly-retention-archive",
+             "input_snapshot_id": DELETED_SNAPSHOT}
+            for m in held
+            if f"month={m}" not in live
+        ]
+        # the next compress scan must be full: the pointer vouched for
+        # conv_bucket keys, not for the months just committed
+        try:
+            os.remove(self._progress_file("compress"))
+        except FileNotFoundError:
+            pass
+        self.manifest.commit(rows)
 
     def run_snapshots(self, run_id: str | None = None) -> dict[str, str]:
         """table name -> snapshot id pinned at the end of `run_id` (default:
@@ -623,6 +749,8 @@ class TierPipeline:
         inventory: list[str] | None = None,
         budget: int | None = None,
         left: dict | None = None,
+        deferred: dict | None = None,
+        hold: set[str] | None = None,
     ) -> int:
         """Run one stage exactly once per pending partition.
 
@@ -635,10 +763,15 @@ class TierPipeline:
         to the driver.
 
         `budget` bounds the pending batch: at most `budget` keys (sorted by
-        partition_key — oldest-first for date-keyed stages, deterministic
-        for conv-bucket stages) are built this run; the remainder stays
+        partition_key — oldest-first: every stage is keyed by day or
+        month) are built this run; the remainder stays
         PENDING in the manifest and `left[stage]` reports the deferral so
-        the caller knows to run again. Stale-input drops are never budgeted
+        the caller knows to run again; `deferred[stage]` lists the deferred
+        keys. Pending keys in `hold` (months an upstream stage deferred days
+        of this run) that were built before wait like budget-deferred ones:
+        rebuilt now, they would be rebuilt again once those days land. A
+        key never built is built at once, so every table exists from the
+        first increment on. Stale-input drops are never budgeted or held
         (they are metadata-priced and deferring a deletion is a correctness
         hazard, not a cost saving).
 
@@ -656,13 +789,24 @@ class TierPipeline:
             protect, inventory=inventory,
         )
         pending = pending_rows(work_rows, self.manifest, stage)
+        if hold:
+            built = self.manifest.latest_map(stage)
+            hold = {k for k in hold if k in built}
+            n_held = sum(r["partition_key"] in hold for r in pending)
+            pending = [r for r in pending if r["partition_key"] not in hold]
+            if n_held and left is not None:
+                left[stage] = n_held
         if not pending:
             return 0
         if budget is not None:
             pending.sort(key=lambda r: r["partition_key"])
             if len(pending) > budget:
                 if left is not None:
-                    left[stage] = len(pending) - budget
+                    left[stage] = left.get(stage, 0) + len(pending) - budget
+                if deferred is not None:
+                    deferred[stage] = [
+                        r["partition_key"] for r in pending[budget:]
+                    ]
                 pending = pending[:budget]
         keys = [r["partition_key"] for r in pending]
         out = build(keys)
@@ -723,7 +867,7 @@ class TierPipeline:
         inventory: list[str] | None = None,
     ) -> int:
         """Invalidate committed outputs whose input partitions vanished
-        (ADVICE r2): a fully-deleted input day/month/conv_bucket produces no
+        (ADVICE r2): a fully-deleted input day or month produces no
         work row, so `pending_partitions` never re-rolls it — drop its output
         partition directory and commit a DELETED_SNAPSHOT row. Resurrection
         re-rolls automatically (the sentinel matches no real fingerprint).
@@ -819,9 +963,12 @@ class TierPipeline:
 
         `budget` caps how many pending partitions EACH stage builds this
         run (oldest-first); the rest stays pending and is reported in the
-        result's `left` map. This is how a 10^12-turn historical backfill
-        runs: bounded, checkpointed increments that each publish a
-        consistent prefix, instead of one job that must survive to the end.
+        result's `left` map. The monthly tier and the chunks build a month
+        when its first days land and again in the run in which its last
+        deferred day lands, not in every increment between. This is how a
+        10^12-turn historical backfill runs: bounded, checkpointed
+        increments that each publish a consistent prefix, instead of one
+        job that must survive to the end.
         Repeated budgeted runs converge to the exact state of one unbudgeted
         run (fingerprints, not budget bookkeeping, decide what is pending).
 
@@ -897,6 +1044,7 @@ class TierPipeline:
         stages=None,
         budget: int | None = None,
     ) -> dict:
+        self._migrate_chunks(run_id)
         if self.wap:
             self._begin_wap()
             try:
@@ -944,6 +1092,20 @@ class TierPipeline:
         # truncated batch hasn't done — advancing it would prune the
         # deferred keys out of the next run's work manifest forever.
         left: dict[str, int] = {}
+        # stage -> the day keys its budget deferred. The month stages hold
+        # back rebuilds of the months of those days: while a backfill is
+        # still landing a month's days, every increment would otherwise
+        # rebuild that month's monthly rows and chunks from a partial
+        # input. A month is built when its first days land and again in
+        # the run in which its last day lands.
+        deferred: dict[str, list[str]] = {}
+
+        def held_months(*upstream: str) -> set[str]:
+            return {
+                f"month={k.split('=', 1)[1][:7]}"
+                for s in upstream
+                for k in deferred.get(s, [])
+            }
 
         # 1. raw -> hourly, keyed by day. The state-family specs are part of
         # the fingerprint: turning a family on/off re-rolls each day once.
@@ -987,7 +1149,7 @@ class TierPipeline:
         done["hourly"] = self._run_stage(
             "hourly", run_id, day_work, build_hourly,
             self.tier_path("hourly"), self.hourly_partition_cols(), "raw",
-            budget=budget, left=left,
+            budget=budget, left=left, deferred=deferred,
         )
         if "daily" not in stages:
             return self._finish_run(run_id, done, scans, left)
@@ -1033,7 +1195,7 @@ class TierPipeline:
             self.tier_path("daily"), ["bucket_date"], "hourly",
             protect=retained_days,
             inventory=daily_inv,
-            budget=budget, left=left,
+            budget=budget, left=left, deferred=deferred,
         )
         if self.snapshots and not self.wap and not left.get("daily"):
             cur_h = self._store(self.table_path("hourly")).current_id()
@@ -1099,6 +1261,7 @@ class TierPipeline:
                 protect={f"month={m}" for m in frozen},
                 inventory=month_inv,
                 budget=budget, left=left,
+                hold=held_months("hourly", "daily"),
             )
             if self.snapshots and not self.wap and not left.get("monthly"):
                 cur_d = self._store(self.table_path("daily")).current_id()
@@ -1110,37 +1273,43 @@ class TierPipeline:
             done["monthly"] = monthly_stage()
             return self._finish_run(run_id, done, scans, left)
 
-        # 4. compress, keyed by conv_bucket (series must stay whole;
-        # observed rows only).
-        # Series-stage short-circuit (snapshot mode): when the hourly
-        # snapshot is inode-identical to what compress last reconciled, its
-        # full-bucket fingerprints cannot have changed and no stale
-        # transition is possible — skip the scan and the stage outright.
-        # (Per-bucket partial pruning is deliberately not attempted: a
-        # bucket's fingerprint spans its every day, and layout-1 hourly
-        # cannot dir-prune on conv_bucket.)
+        # 4. compress, keyed by month (observed rows only): a chunk is one
+        # month of one (conv, metric) series, so a month's chunks read only
+        # that month's hourly days. Snapshot mode prunes the work manifest
+        # to the months of changed hourly days, like the monthly stage.
         def series_stage() -> dict:
-            if self._changed_upstream_days("compress", "hourly") == []:
-                scans["series"] = "pruned-noop"
-                return {"compress": 0}
-            scans["series"] = "full"
             hourly = observed_state(self.read_tier("hourly"))
-            cb_work = work_manifest(
-                hourly, F.col("conv_bucket").cast("string"),
-                _STATE_HASH_COLS, "cb",
+            changed = self._changed_upstream_days("compress", "hourly")
+            inv = None
+            src = hourly
+            if changed is not None:
+                months = sorted({d[:7] for d in changed})
+                inv = sorted(
+                    {f"month={d[:7]}"
+                     for d in self._upstream_day_inventory("hourly")}
+                )
+                src = hourly.filter(_day_month().isin(months))
+                scans["series"] = f"pruned:{len(months)}/{len(inv)}"
+            else:
+                scans["series"] = "full"
+            # an unchanged hourly snapshot needs no scan at all
+            work = [] if changed == [] else work_manifest(
+                src, _day_month(), _STATE_HASH_COLS, "month"
             )
 
             def build_compress(keys):
-                cbs = [int(k.split("=", 1)[1]) for k in keys]
-                inp = hourly.filter(F.col("conv_bucket").isin(cbs))
+                months = [k.split("=", 1)[1] for k in keys]
+                inp = hourly.filter(_day_month().isin(months))
                 return make_chunks(hourly_series(inp), tier="hourly").withColumn(
-                    "conv_bucket", _conv_bucket()
+                    CHUNK_PART, _chunk_month()
                 )
 
             n = self._run_stage(
-                "compress", run_id, cb_work, build_compress,
-                self.chunks_path, ["conv_bucket"], "hourly",
+                "compress", run_id, work, build_compress,
+                self.chunks_path, [CHUNK_PART], "hourly",
+                inventory=inv,
                 budget=budget, left=left,
+                hold=held_months("hourly"),
             )
             if self.snapshots and not self.wap and not left.get("compress"):
                 cur_h = self._store(self.table_path("hourly")).current_id()

@@ -6,8 +6,9 @@ continuous aggregates remain queryable via Spark SQL."
 Safety rule (SURVEY.md §7.3): a partition may be dropped only when its
 *entire* downstream lineage is manifest-committed — e.g. an hourly
 bucket_date partition needs its 'daily' day commit AND the 'monthly' commit
-of its month AND the compress commit of every conv_bucket (the chunks keep
-the dropped days' series: `serve_series` and `serve_gapfill` decode them).
+of its month AND the current compress commit of its month (the month's
+chunks keep the dropped days' series: `serve_series` and `serve_gapfill`
+decode them).
 On plain parquet the drop is a partition-directory delete (the emulation of
 Iceberg ``DELETE FROM ... WHERE`` + ``expire_snapshots``); the manifest
 records the drop so resume never re-creates it.
@@ -20,8 +21,9 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from .checkpoint import Manifest
-from .pipeline import TierPipeline
+from .checkpoint import DELETED_SNAPSHOT, Manifest, pending_rows, work_manifest
+from .pipeline import _STATE_HASH_COLS, CHUNK_PART, TierPipeline, _day_month
+from .rollup import observed_state
 
 
 class RetentionError(RuntimeError):
@@ -55,35 +57,33 @@ def _remove_parts(pipe: TierPipeline, table_path: str, dirnames: list[str]) -> N
 
 
 def _committed(manifest: Manifest, stage: str) -> set[str]:
-    return {
-        r["partition_key"].split("=", 1)[1]
-        for r in manifest.committed_keys(stage).collect()
-    }
+    """Key values ever committed for `stage`. Driver-side over the memoized
+    manifest frame: no Spark job."""
+    m = manifest.read_pandas()
+    return {k.split("=", 1)[1] for k in m.loc[m["stage"] == stage, "partition_key"]}
 
 
 def droppable_hourly_days(pipe: TierPipeline, older_than: str) -> list[str]:
     """Days strictly older than `older_than` (YYYY-MM-DD) whose full lineage
-    chain is committed."""
+    chain is committed: the day's daily rollup, its month's monthly rollup
+    and its month's chunks (latest compress commit a real fingerprint)."""
     m = pipe.manifest
     daily = _committed(m, "daily")
     monthly = _committed(m, "monthly")
     hourly = _committed(m, "hourly")
-    compress = _committed(m, "compress")
-    # every conv_bucket key must be committed before any day drops: the
-    # chunks read whole hourly series
-    all_cb = {
-        r["conv_bucket"]
-        for r in pipe.read_tier("hourly").select("conv_bucket").distinct().collect()
+    chunked = {
+        k.split("=", 1)[1]
+        for k, s in m.latest_map("compress").items()
+        if k.startswith("month=") and s not in Manifest.SENTINELS
     }
-    cb_done = all_cb <= {int(x) for x in compress}
-    out = []
-    for day in sorted(hourly):
-        if day >= older_than:
-            continue
-        month = day[:7]
-        if day in daily and month in monthly and cb_done:
-            out.append(day)
-    return out
+    return [
+        day
+        for day in sorted(hourly)
+        if day < older_than
+        and day in daily
+        and day[:7] in monthly
+        and day[:7] in chunked
+    ]
 
 
 def drop_hourly_partitions(
@@ -91,6 +91,7 @@ def drop_hourly_partitions(
 ) -> list[str]:
     """L1: delete hourly bucket_date partitions. Refuses (RetentionError)
     when a requested day's lineage is not fully committed, unless forced."""
+    pipe._migrate_chunks(run_id)
     safe = set(droppable_hourly_days(pipe, older_than="9999-12-31"))
     for day in days:
         if day not in safe and not force:
@@ -114,30 +115,29 @@ def drop_hourly_partitions(
                 for d in dropped
             ]
         )
-        _recommit_series_fingerprints(pipe, run_id)
+        _recommit_series_fingerprints(
+            pipe, run_id, sorted({d[:7] for d in dropped})
+        )
     return dropped
 
 
-def _recommit_series_fingerprints(pipe: TierPipeline, run_id: str) -> None:
+def _recommit_series_fingerprints(
+    pipe: TierPipeline, run_id: str, months: list[str]
+) -> None:
     """After an hourly retention drop, re-commit the compress manifest
-    rows with fingerprints recomputed over the REMAINING hourly days.
-    Without this the next run's fingerprint diff would read the horizon
-    truncation as late data and re-roll every conv_bucket's series from the
-    partial input — overwriting archived full-history chunk partitions with
-    truncated ones. With it, an unchanged input skips cleanly; genuinely
-    new post-drop data still re-rolls its bucket (which then regenerates
-    from the remaining horizon only — documented loss of pre-horizon
-    series points, and so of served gap-fill rows, for that
-    actively-changing bucket)."""
-    from .checkpoint import work_manifest
-    from .pipeline import _STATE_HASH_COLS
-    from .rollup import observed_state
-
-    from .checkpoint import DELETED_SNAPSHOT
-
+    rows of the dropped days' `months` with fingerprints recomputed over
+    their REMAINING hourly days. Without this the next run's fingerprint
+    diff would read the horizon truncation as late data and re-roll those
+    months' chunks from the partial input — overwriting archived
+    full-month chunks with truncated ones. With it, an unchanged input
+    skips cleanly; genuinely new post-drop data in such a month still
+    re-rolls it (which then regenerates from the remaining days only —
+    documented loss of pre-horizon series points, and so of served
+    gap-fill rows, for that actively-changing month)."""
     hourly = observed_state(pipe.read_tier("hourly"))
     work = work_manifest(
-        hourly, F.col("conv_bucket").cast("string"), _STATE_HASH_COLS, "cb"
+        hourly.filter(_day_month().isin(months)), _day_month(),
+        _STATE_HASH_COLS, "month",
     ).collect()
     work_keys = {r["partition_key"] for r in work}
     committed = _committed(pipe.manifest, "compress")
@@ -153,22 +153,21 @@ def _recommit_series_fingerprints(pipe: TierPipeline, run_id: str) -> None:
         for r in work
         if r["partition_key"].split("=", 1)[1] in committed
     ]
-    # conv_buckets whose EVERY hourly row fell inside the dropped days
-    # have no work row left; the DELETED sentinel (archive lineage)
-    # exempts their chunk partitions from the stale-input cascade — the
-    # archived series outlives its raw tier, which is the entire point of
-    # retention — while still re-rolling the bucket if its conversations
-    # ever produce data again.
+    # months whose EVERY hourly day was dropped have no work row left;
+    # the DELETED sentinel (archive lineage) exempts their chunk
+    # partitions from the stale-input cascade — the archived series
+    # outlives its raw tier, which is the entire point of retention —
+    # while still re-rolling the month if data for it ever arrives again.
     rows += [
         {
             "run_id": run_id,
             "stage": "compress",
-            "partition_key": f"cb={cb}",
+            "partition_key": f"month={m}",
             "lineage": "hourly-retention-archive",
             "input_snapshot_id": DELETED_SNAPSHOT,
         }
-        for cb in sorted(committed)
-        if f"cb={cb}" not in work_keys
+        for m in months
+        if m in committed and f"month={m}" not in work_keys
     ]
     if rows:
         pipe.manifest.commit(rows)
@@ -197,6 +196,7 @@ def drop_daily_partitions(
     pipeline result as `frozen_skipped`), never silently rolled up from a
     partial month. This is the continuous-aggregate finalization rule:
     retention of the lower tier freezes the upper one."""
+    pipe._migrate_chunks(run_id)
     safe = set(droppable_daily_days(pipe, older_than="9999-12-31"))
     for day in days:
         if day not in safe and not force:
@@ -238,68 +238,62 @@ def frozen_months(manifest: Manifest) -> set[str]:
     return {k.split("=", 1)[1] for k in m.loc[m["stage"] == "frozen", "partition_key"]}
 
 
-def droppable_conv_buckets(pipe: TierPipeline, stage: str) -> list[int]:
-    """conv_bucket partitions of the chunks table ('compress') safe to
-    expire: committed AND not pending (a bucket whose hourly input changed
-    is mid re-roll — dropping it would race the rewrite). Retention of cold
-    conversation buckets; if a dropped bucket's conversations turn hot
-    again, the fingerprint diff re-rolls and the partition reappears —
-    that resurrection is the intended semantics for activity-based
-    retention."""
-    assert stage == "compress", stage
-    from .checkpoint import pending_rows, work_manifest
-    from .pipeline import _STATE_HASH_COLS
-    from .rollup import observed_state
-
+def droppable_chunk_months(pipe: TierPipeline) -> list[str]:
+    """Months of the chunks table ('compress') safe to expire: committed
+    AND not pending (a month whose hourly input changed is mid re-roll —
+    dropping it would race the rewrite). Retention of cold chunk months;
+    if an expired month's hourly input changes, the fingerprint diff
+    re-rolls it and the partition reappears — that resurrection is the
+    intended semantics for activity-based retention."""
     hourly = observed_state(pipe.read_tier("hourly"))
-    work = work_manifest(
-        hourly, F.col("conv_bucket").cast("string"), _STATE_HASH_COLS, "cb"
-    )
+    work = work_manifest(hourly, _day_month(), _STATE_HASH_COLS, "month")
     pending = {
         r["partition_key"]
-        for r in pending_rows(work.collect(), pipe.manifest, stage)
+        for r in pending_rows(work.collect(), pipe.manifest, "compress")
     }
-    committed = _committed(pipe.manifest, stage)
+    m = pipe.manifest.read_pandas()
     return sorted(
-        int(cb) for cb in committed if f"cb={cb}" not in pending
+        k.split("=", 1)[1]
+        for k in set(m.loc[m["stage"] == "compress", "partition_key"])
+        if k.startswith("month=") and k not in pending
     )
 
 
-def drop_conv_bucket_partitions(
+def drop_chunk_months(
     pipe: TierPipeline,
-    stage: str,
-    cbs: list[int],
+    months: list[str],
     run_id: str,
     force: bool = False,
-) -> list[int]:
-    """Expire conv_bucket partitions of the chunks ('compress') table.
-    Refuses while the bucket is pending re-roll unless forced; the drop is
+) -> list[str]:
+    """Expire month partitions (YYYY-MM) of the chunks ('compress') table.
+    Refuses while the month is pending re-roll unless forced; the drop is
     manifest-recorded (stage='retention') and survives reruns — an
     unchanged input fingerprint keeps the partition dropped, a changed one
     regenerates it."""
-    safe = set(droppable_conv_buckets(pipe, stage))
-    table_path = pipe.chunks_path
-    for cb in cbs:
-        if cb not in safe and not force:
+    pipe._migrate_chunks(run_id)
+    safe = set(droppable_chunk_months(pipe))
+    for month in months:
+        if month not in safe and not force:
             raise RetentionError(
-                f"refusing to drop {stage} cb={cb}: bucket is pending re-roll "
-                "or was never committed"
+                f"refusing to drop compress month={month}: month is pending "
+                "re-roll or was never committed"
             )
+    table_path = pipe.chunks_path
     existing = _existing_parts(
-        pipe, table_path, [f"conv_bucket={cb}" for cb in cbs]
+        pipe, table_path, [f"{CHUNK_PART}={m}" for m in months]
     )
     _remove_parts(pipe, table_path, existing)
-    dropped = [int(d.split("=", 1)[1]) for d in existing]
+    dropped = [d.split("=", 1)[1] for d in existing]
     if dropped:
         pipe.manifest.commit(
             [
                 {
                     "run_id": run_id,
                     "stage": "retention",
-                    "partition_key": f"cb={cb}",
-                    "lineage": stage,
+                    "partition_key": f"month={m}",
+                    "lineage": "compress",
                 }
-                for cb in dropped
+                for m in dropped
             ]
         )
     return dropped
@@ -327,7 +321,7 @@ def compact_partition(
     zorder: tuple[str, str] | None = None,
 ) -> None:
     """L2: rewrite a tier table — or the 'compress' (chunks) series table,
-    keyed by conv_bucket — into ~n_files per partition
+    keyed by chunk_month — into ~n_files per partition
     (small-file compaction; Iceberg's rewrite_data_files equivalent).
 
     `sort_by` is Iceberg's rewrite-with-sort-order: rows are clustered by
@@ -357,8 +351,9 @@ def compact_partition(
     compaction is NOT safe against concurrent readers of the same tier;
     with a real Iceberg catalog the snapshot commit makes this atomic.
     """
+    pipe._migrate_chunks()
     if tier == "compress":
-        path, part_cols = pipe.chunks_path, ["conv_bucket"]
+        path, part_cols = pipe.chunks_path, [CHUNK_PART]
     elif tier == "monthly":
         path, part_cols = pipe.tier_path(tier), ["bucket_month"]
     elif tier == "hourly":

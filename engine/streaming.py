@@ -9,7 +9,7 @@ micro-batch's rows carry batch_id so readers take the latest version per
 key). Post-watermark stragglers fall back to the batch path: TierPipeline
 fingerprints every stage input per partition (checkpoint.work_manifest), so
 a batch rerun over raw-plus-stragglers re-rolls exactly the affected
-day/month/conv_bucket partitions (J4; tests/test_checkpoint.py
+day and month partitions (J4; tests/test_checkpoint.py
 test_late_data_reroll_cascade) — late rows are never silently dropped.
 
 J5 replay-dedup (`dropDuplicatesWithinWatermark`) is a separate operator:
@@ -303,7 +303,7 @@ def run_stream_into_pipeline(
     (one atomic parquet append per micro-batch), then runs the pipeline
     over the WHOLE accumulated table. That re-read is not a rescan-the-
     world at scale: `work_manifest` fingerprints every stage input per
-    partition, so trigger k re-rolls exactly the day/month/conv_bucket
+    partition, so trigger k re-rolls exactly the day and month
     partitions batch k touched — the same incremental contract as the
     late-data path, now driven by a stream. Running the pipeline on the
     batch's rows alone would be WRONG (a day split across triggers would

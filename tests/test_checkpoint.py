@@ -176,6 +176,49 @@ def test_late_data_reroll_cascade(spark, t0, tmp_path):
     assert all(n == 0 for n in res3["stages"].values()), res3
 
 
+CHUNK_KEYS = ["conv_id", "metric", "chunk_start"]
+
+
+@pytest.fixture(scope="module")
+def scratch_chunks(spark, t0, tmp_path_factory):
+    """Chunk rows of one from-scratch run over t0 (the same in either
+    storage mode)."""
+    ref = TierPipeline(spark, str(tmp_path_factory.mktemp("ref")))
+    ref.run(t0)
+    return (
+        ref.read_table("chunks").toPandas()
+        .sort_values(CHUNK_KEYS, ignore_index=True)
+    )
+
+
+@pytest.mark.parametrize("snapshots", [False, True], ids=["plain", "snapshot"])
+def test_one_day_late_batch_rebuilds_one_chunk_month(
+    spark, t0, tmp_path, snapshots, scratch_chunks
+):
+    """Chunks are keyed by month: late rows for one day re-roll exactly
+    the compress partition of that day's month, and the chunks then equal
+    a from-scratch run's."""
+    late_day = (
+        t0.groupBy(F.to_date("ts").alias("d")).count()
+        .orderBy(F.desc("count")).limit(1).collect()[0]["d"]
+    )
+    late = t0.filter(
+        (F.to_date("ts") == F.lit(late_day)) & (F.hour("ts") >= 12)
+    )
+    pipe = TierPipeline(spark, str(tmp_path / "p"), snapshots=snapshots)
+    pipe.run(t0.exceptAll(late))
+    res = pipe.run(t0)
+    assert res["stages"]["compress"] == 1, res
+    m = pipe.manifest.read_pandas()
+    built = m[(m["run_id"] == res["run_id"]) & (m["stage"] == "compress")]
+    assert list(built["partition_key"]) == [f"month={str(late_day)[:7]}"]
+    pd.testing.assert_frame_equal(
+        pipe.read_table("chunks").toPandas()
+        .sort_values(CHUNK_KEYS, ignore_index=True),
+        scratch_chunks,
+    )
+
+
 def test_manifest_rowcount_metrics(spark, t0, tmp_path):
     pipe = TierPipeline(spark, str(tmp_path / "p5"))
     pipe.run(t0, stages=("hourly",))

@@ -111,3 +111,27 @@ def test_layout_evolution_plain_mode_and_compaction(spark, t0, tmp_path):
     res3 = v3.run(t0)
     assert res3["stages"]["hourly"] > 0
     pd.testing.assert_frame_equal(_pdf(v3.read_tier("hourly")), hourly_v1)
+
+
+@pytest.mark.parametrize("snapshots", [False, True], ids=["plain", "snapshot"])
+def test_same_depth_spec_change_clears_old_dirs(spark, tmp_path, snapshots):
+    """A partition-spec change at the SAME depth (conv_bucket= to
+    chunk_month=, as the chunks re-keying does) must not leave both kinds
+    of directory in one table: Spark refuses to read conflicting partition
+    columns. The write clears the old spec's directories first."""
+    pipe = TierPipeline(spark, str(tmp_path / "r"), snapshots=snapshots)
+    df = spark.range(6).select(
+        F.col("id").alias("v"),
+        (F.col("id") % 3).cast("int").alias("a"),
+        F.format_string("m%d", F.col("id") % 2).alias("b"),
+    )
+    path = os.path.join(pipe.root, "t")
+    pipe._write_table(df.drop("b"), path, ["a"])
+    pipe._write_table(df.drop("a"), path, ["b"])
+    got = pipe._read_path(path)
+    assert sorted(got.columns) == ["b", "v"]
+    assert sorted(r["v"] for r in got.collect()) == list(range(6))
+    store = SnapStore(path)
+    d = store.snapshot_path(store.current_id()) if snapshots else path
+    parts = sorted(e for e in os.listdir(d) if "=" in e)
+    assert parts == ["b=m0", "b=m1"], parts

@@ -24,8 +24,8 @@ def t0(spark):
 
 
 def _tiers_equal(a, b, tier):
-    da = a._read_path(a.tier_path(tier))
-    db = b._read_path(b.tier_path(tier)).select(*da.columns)
+    da = a.read_table(tier)
+    db = b.read_table(tier).select(*da.columns)
     assert da.exceptAll(db).count() == 0, tier
     assert db.exceptAll(da).count() == 0, tier
 
@@ -41,8 +41,8 @@ def test_pruned_rescan_tracks_full_scan(spark, t0, tmp_path):
     assert r2["scans"]["daily"].startswith("pruned:0/")
     assert r2["scans"]["monthly"].startswith("pruned:0/")
     assert r2["stages"]["daily"] == 0 and r2["stages"]["monthly"] == 0
-    # the series stage short-circuits without touching the hourly table
-    assert r2["scans"]["series"] == "pruned-noop"
+    # the series stage re-fingerprints no month either
+    assert r2["scans"]["series"].startswith("pruned:0/")
     assert r2["stages"]["compress"] == 0
 
     # late data for one conversation: only its days re-fingerprint
@@ -62,14 +62,20 @@ def test_pruned_rescan_tracks_full_scan(spark, t0, tmp_path):
     )
     assert n_pruned == late_days and n_pruned < n_total
     assert r3["stages"]["daily"] == late_days
-    # data changed -> the series stage takes the normal path again
-    assert r3["scans"]["series"] == "full"
-    assert r3["stages"]["compress"] > 0
+    # the series stage re-fingerprints and rebuilds only the late months
+    late_months = (
+        late.select(F.date_format("ts", "yyyy-MM").alias("m"))
+        .distinct()
+        .count()
+    )
+    n_months, n_all = map(int, r3["scans"]["series"].split(":")[1].split("/"))
+    assert n_months == late_months and n_months < n_all
+    assert r3["stages"]["compress"] == late_months
 
     # pruned result == a never-pruned (plain-mode) pipeline, bit-exact
     ref = TierPipeline(spark, str(tmp_path / "ref"))
     ref.run(t2)
-    for tier in ("daily", "monthly"):
+    for tier in ("daily", "monthly", "chunks"):
         _tiers_equal(pipe, ref, tier)
 
 

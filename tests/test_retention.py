@@ -249,51 +249,53 @@ def test_daily_retention_freezes_month(spark, t0, tmp_path):
     pd.testing.assert_frame_equal(frozen_rows_a, frozen_rows_b)
 
 
-def test_conv_bucket_retention_chunks(spark, t0, tmp_path):
-    """VERDICT r2 item 8: chunks conv_bucket partitions expire with the
-    same refusal/drop/still-queryable triple as hourly days, and a rerun
-    over unchanged input keeps them dropped (fingerprint match)."""
+def test_chunk_month_retention(spark, t0, tmp_path):
+    """VERDICT r2 item 8: chunks month partitions expire with the same
+    refusal/drop/still-queryable triple as hourly days, and a rerun over
+    unchanged input keeps them dropped (fingerprint match)."""
     from pyspark.sql import functions as F
 
     from engine.pipeline import TierPipeline
-    from engine.retention import (
-        drop_conv_bucket_partitions,
-        droppable_conv_buckets,
-    )
+    from engine.retention import drop_chunk_months, droppable_chunk_months
 
-    pipe = TierPipeline(spark, str(tmp_path / "cb"))
+    pipe = TierPipeline(spark, str(tmp_path / "cm"))
     pipe.run(t0, stages=("hourly", "daily", "monthly"))  # compress not run
-    assert droppable_conv_buckets(pipe, "compress") == []
+    assert droppable_chunk_months(pipe) == []
+    month = sorted(
+        r["m"] for r in t0.select(F.date_format("ts", "yyyy-MM").alias("m"))
+        .distinct().collect()
+    )[0]
     with pytest.raises(RetentionError):
-        drop_conv_bucket_partitions(pipe, "compress", [0], run_id="c0")
+        drop_chunk_months(pipe, [month], run_id="c0")
     pipe.run(t0)  # commit compress
     path = pipe.chunks_path
-    safe = droppable_conv_buckets(pipe, "compress")
+    safe = droppable_chunk_months(pipe)
     assert safe
     victims = safe[:2]
     total_before = spark.read.parquet(path).count()
     n_victim = (
         spark.read.parquet(path)
-        .filter(F.col("conv_bucket").isin(victims))
+        .filter(F.col("chunk_month").isin(victims))
         .count()
     )
-    dropped = drop_conv_bucket_partitions(pipe, "compress", victims, run_id="c1")
+    assert n_victim > 0
+    dropped = drop_chunk_months(pipe, victims, run_id="c1")
     assert dropped == victims
     remaining = spark.read.parquet(path)
     assert remaining.count() == total_before - n_victim
-    assert remaining.filter(F.col("conv_bucket").isin(victims)).count() == 0
-    res = pipe.run(t0)  # unchanged input: buckets stay dropped
+    assert remaining.filter(F.col("chunk_month").isin(victims)).count() == 0
+    res = pipe.run(t0)  # unchanged input: months stay dropped
     assert all(n == 0 for n in res["stages"].values()), res
     assert (
         spark.read.parquet(path)
-        .filter(F.col("conv_bucket").isin(victims))
+        .filter(F.col("chunk_month").isin(victims))
         .count()
         == 0
     )
 
 
 def test_compact_series_tables(spark, t0, tmp_path):
-    """L2 extended to the conv_bucket-keyed series table: chunk partitions
+    """L2 extended to the month-keyed series table: chunk partitions
     compact to ~1 file each, content byte-identical."""
     from engine.retention import compact_partition
 
@@ -305,7 +307,7 @@ def test_compact_series_tables(spark, t0, tmp_path):
     counts = {
         d: len([f for f in os.listdir(os.path.join(path, d))
                 if f.endswith(".parquet")])
-        for d in os.listdir(path) if d.startswith("conv_bucket=")
+        for d in os.listdir(path) if d.startswith("chunk_month=")
     }
     assert counts and all(n == 1 for n in counts.values()), counts
     after = _table_pdf(spark, path, keys)

@@ -56,8 +56,8 @@ def _rg_spans(path: str, col: str):
     """Per-file (row-group (min,max) list, per-file probe values) for `col`.
     Probes are drawn from each file's OWN distinct values (evenly sampled),
     so containment measures row-group skipping in isolation — global probes
-    would credit the partition layout (conv_bucket dirs only hold ~1/64 of
-    convs) with pruning the sort never did."""
+    would credit the partition layout (a chunk_month dir holds only its
+    month's chunks) with pruning the sort never did."""
     import pyarrow.parquet as pq
 
     out = {}
@@ -143,7 +143,7 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
 @pytest.fixture(scope="module")
 def grid_pipes(spark, tmp_path_factory):
     """Two pipelines whose chunks path holds the SAME dense uniform
-    (conv × hour) grid, a test-local conv_bucket-partitioned table — every
+    (conv × hour) grid, a test-local chunk_month-partitioned table — every
     conv spans the full time range, so the pruning theory is clean: a
     time-only sort cannot separate convs (every hour contains all of them),
     while z-order carves rectangles. Real series clip each conversation to
@@ -153,8 +153,7 @@ def grid_pipes(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("zgrid"))
     grid = (
         spark.range(192)
-        .select(F.format_string("conv-%05d", "id").alias("conv_id"),
-                F.pmod("id", F.lit(2)).cast("int").alias("conv_bucket"))
+        .select(F.format_string("conv-%05d", "id").alias("conv_id"))
         .crossJoin(
             spark.range(240).select(
                 # NTZ like the pipeline's tables — plain TIMESTAMP writes
@@ -166,11 +165,12 @@ def grid_pipes(spark, tmp_path_factory):
         )
         .withColumn("metric", F.lit("m"))
         .withColumn("value", F.xxhash64("conv_id", "bucket_start").cast("double"))
+        .withColumn("chunk_month", F.date_format("bucket_start", "yyyy-MM"))
     )
     paths = {}
     for name in ("z", "lin"):
         pipe = TierPipeline(spark, os.path.join(root, name))
-        grid.write.partitionBy("conv_bucket").parquet(pipe.chunks_path)
+        grid.write.partitionBy("chunk_month").parquet(pipe.chunks_path)
         paths[name] = pipe
     return paths["z"], paths["lin"]
 

@@ -14,7 +14,7 @@ the common lifecycle reads as one object:
     eng.sql("SELECT * FROM tiers_monthly ...")     # SQL over the tiers
     df, hit = eng.cached("dash_q1", lambda: ...)   # snapshot-keyed reuse
     eng.drop_hourly_before("2026-02-01")           # retention
-    eng.rollback(run_id)                           # snapshot-mode undo
+    eng.rollback(run_id)                           # undo to a run barrier
     eng.forget(["conv-000007"], t0=t0)             # right-to-be-forgotten
     eng.replica("/dr/site-b").sync()               # diff-only DR replication
 
@@ -92,7 +92,7 @@ class TierEngine:
           count, last run id and commit time.
         - ``lifecycle``: retention / frozen-month / forget audit rows and
           the number of sealed cross-table run barriers.
-        - ``snapshots`` (snapshot mode): per table, the current snapshot
+        - ``snapshots``: per table, the current snapshot
           id, how many snapshots are retained (expire/GC pressure), and
           named tag pins.
         - ``tombstones``: forgotten conversation count (right-to-be-
@@ -123,17 +123,16 @@ class TierEngine:
                 "run_barriers": int(pdf[pdf.stage == "snapshot"].run_id.nunique()),
             },
         }
-        if self.pipeline.snapshots:
-            snaps: dict = {}
-            for name in self.pipeline.TABLE_NAMES:
-                store = self.pipeline._store(self.pipeline.table_path(name))
-                cur = store.current_id()
-                snaps[name] = {
-                    "current": cur,
-                    "retained": len(store.snapshot_ids()) if cur else 0,
-                    "tags": store.tags(),
-                }
-            out["snapshots"] = snaps
+        snaps: dict = {}
+        for name in self.pipeline.TABLE_NAMES:
+            store = self.pipeline._store(self.pipeline.table_path(name))
+            cur = store.current_id()
+            snaps[name] = {
+                "current": cur,
+                "retained": len(store.snapshot_ids()) if cur else 0,
+                "tags": store.tags(),
+            }
+        out["snapshots"] = snaps
         tomb_dir = os.path.join(self.root, "_tombstones")
         n_tomb = 0
         if os.path.isdir(tomb_dir):
@@ -155,8 +154,8 @@ class TierEngine:
         return self.pipeline.compact_manifest(prune_superseded)
 
     def rollback(self, run_id: str) -> None:
-        """Snapshot mode: pointer-flip every table to a sealed run barrier
-        and re-arm resume (engine/pipeline.py rollback_run)."""
+        """Pointer-flip every table to a sealed run barrier and re-arm
+        resume (engine/pipeline.py rollback_run)."""
         self.pipeline.rollback_run(run_id)
 
     # -- tier-composed serving (§4.3 rewrite family) ---------------------------
@@ -793,7 +792,7 @@ class TierEngine:
         self, prefix: str = "tiers", run_id: str | None = None
     ) -> list[str]:
         """Expose each tier as `<prefix>_<tier>` temp views for spark.sql.
-        With `run_id` (snapshot mode), every view is pinned to that sealed
+        With `run_id`, every view is pinned to that sealed
         run's barrier snapshots — time-travel SQL over a mutually
         consistent cross-table state, immune to later runs/retention."""
         tiers = (
@@ -821,12 +820,8 @@ class TierEngine:
     def cached(self, key: str, build) -> tuple[DataFrame, bool]:
         """Serve `build()` through the result cache keyed on the pipeline
         tables' snapshot pointers: unchanged tables hit (provably identical
-        to recomputation), any run/retention/compaction/rollback misses.
-        Requires snapshot mode: plain tables have no pointer to key on, so
-        an entry could never invalidate and would keep serving rows a
-        later run or `forget` replaced."""
-        if not self.pipeline.snapshots:
-            raise ValueError("cached requires TierPipeline(snapshots=True)")
+        to recomputation), any run/retention/compaction/rollback/`forget`
+        misses."""
         deps = ResultCache.deps_of(
             {
                 n: self.pipeline._store(self.pipeline.table_path(n))
@@ -935,7 +930,7 @@ class TierEngine:
         return idx.read_point(conv_id)
 
     def replica(self, root: str):
-        """A pull-based replica of this (snapshot-mode) engine's tables at
+        """A pull-based replica of this engine's tables at
         `root`: `.sync()` ships partition diffs only, `.read(table)` serves
         from the replica's own atomic snapshots."""
         from .replicate import Replica

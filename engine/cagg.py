@@ -141,8 +141,6 @@ class ContinuousAggregate:
         retain_dropped: bool = False,
         lease: bool = True,
     ):
-        if not pipe.snapshots:
-            raise ValueError("continuous aggregate requires TierPipeline(snapshots=True)")
         self.pipe = pipe
         self.path = path
         self.keys = {k: k for k in keys} if isinstance(keys, (list, tuple)) else dict(keys)

@@ -25,19 +25,23 @@ Two composing mechanisms, both O(affected partitions), never O(table):
    (conv_id, chunk)), so a per-partition anti-join rewrite is row-exact:
    no aggregate re-derivation, no contribution subtraction. The sweep
    discovers affected partitions with one semi-join scan per table, then
-   rewrites only those partitions (dynamic partition overwrite / CoW
-   snapshot) and drops partitions left empty, committing `stage='forget'`
-   manifest rows for lineage.
+   rewrites only those partitions into one CoW snapshot per table and
+   drops partitions left empty, committing `stage='forget'` manifest rows
+   for lineage.
 
 Scale notes: the tombstone set is erasure-request-sized (humans, not data)
 — it broadcasts; if it ever outgrew the broadcast threshold, removing the
 hint degrades to a shuffled anti-join with identical semantics. The sweep's
 driver-side loop is bounded by affected-partition count, never rows.
 
-Snapshot mode: a deletion publishes new snapshots like any write, so
-pre-deletion history remains time-travelable until `expire_snapshots`
-purges it — true erasure of history is `forget_conversations(...)` followed
-by `retention.expire_snapshots(pipe, keep_last=1)`. The raw input table
+History: a deletion publishes new snapshots like any write. On a
+`snapshots=True` root pre-deletion history remains time-travelable until
+`expire_snapshots` purges it — true erasure of history is
+`forget_conversations(...)` followed by
+`retention.expire_snapshots(pipe, keep_last=1)`. A `snapshots=False` root
+runs that expiry itself after the run and after the sweep, except for the
+snapshots the last sealed run's barrier pins, which go when the next run
+seals. The raw input table
 belongs to the caller; this module erases every ENGINE-owned
 materialization and guarantees non-resurrection on future ingests.
 """
@@ -152,9 +156,7 @@ def _swept_tables(pipe) -> list[tuple[str, str, list[str]]]:
 
 
 def _table_exists(pipe, path: str) -> bool:
-    if pipe.snapshots:
-        return pipe._store(path).current_id() is not None
-    return os.path.isdir(path)
+    return pipe._store(path).current_id() is not None
 
 
 def forget_sweep(pipe, run_id: str | None = None) -> dict:
@@ -211,12 +213,6 @@ def _sweep_locked(pipe, run_id: str) -> dict:
             hit = _match(cv) if hit is None else hit | _match(cv)
         sub = df.filter(hit)
         survivors = sub.join(F.broadcast(tomb), "conv_id", "left_anti")
-        if not pipe.snapshots:
-            # plain mode rewrites into the same directory it reads —
-            # materialize the (affected-partitions-only) survivors first so
-            # the overwrite never consumes files it is about to replace; in
-            # snapshot mode the CoW staging tree makes this unnecessary
-            survivors = survivors.localCheckpoint()
         # dynamic overwrite only touches partitions present in `survivors`;
         # partitions whose every row was tombstoned must drop explicitly
         kept = {
@@ -230,16 +226,10 @@ def _sweep_locked(pipe, run_id: str) -> dict:
         if len(emptied) < len(affected):
             pipe._write_table(survivors, path, part_cols)
         if emptied:
-            dirnames = [
-                "/".join(f"{c}={v}" for c, v in cv) for cv in emptied
-            ]
-            if pipe.snapshots:
-                pipe._store(path).drop_partitions(dirnames, op="forget")
-            else:
-                import shutil
-
-                for d in dirnames:
-                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+            pipe._store(path).drop_partitions(
+                ["/".join(f"{c}={v}" for c, v in cv) for cv in emptied],
+                op="forget",
+            )
         rows = []
         tbl_report = {}
         for r, cv in zip(doomed_stats, affected):
@@ -259,6 +249,7 @@ def _sweep_locked(pipe, run_id: str) -> dict:
             )
         pipe._commit(rows)
         report[name] = tbl_report
+    pipe._trim_history()
     return report
 
 

@@ -37,8 +37,6 @@ from .io import spread_partitions
 
 class IncrementalConvSummary:
     def __init__(self, pipe, path: str):
-        if not pipe.snapshots:
-            raise ValueError("incremental consumer requires TierPipeline(snapshots=True)")
         self.pipe = pipe
         self.path = path
         os.makedirs(path, exist_ok=True)
@@ -167,10 +165,6 @@ class IncrementalSlidingView:
         frame reaches back / a change spills forward), so the same
         refresh maintains sliding_hist_percentile, sliding_kmv_distinct,
         sliding_hh, ... tables. Default: the core sliding_state merge."""
-        if not pipe.snapshots:
-            raise ValueError(
-                "incremental consumer requires TierPipeline(snapshots=True)"
-            )
         if window_hours <= 0:
             raise ValueError(f"window_hours must be positive: {window_hours}")
         self.pipe = pipe

@@ -26,8 +26,8 @@ O(partitions containing affected keys), never O(table).
 With a SnapStore the rewrite + drops land in ONE CoW snapshot published by
 an atomic pointer flip — concurrent readers are never torn and the
 pre-merge state stays time-travelable. Plain directories get the same
-dynamic overwrite non-atomically (documented; the pipeline's snapshot mode
-is the concurrent-reader-safe configuration).
+dynamic overwrite non-atomically (documented; every pipeline table is a
+SnapStore, the concurrent-reader-safe configuration).
 
 The source is assumed CDC-batch-sized relative to the table (broadcast
 probes); if a giant source ever forces it, the joins degrade to shuffles

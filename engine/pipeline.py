@@ -84,12 +84,6 @@ def _conv_bucket(col="conv_id", n=N_CONV_BUCKETS):
     return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
-def _write(df: DataFrame, path: str, partition_cols: list[str]):
-    # routes through the io seam: parquet dynamic-partition overwrite in the
-    # sandbox, Iceberg overwritePartitions when a catalog is configured
-    eio.write_tier(df, path, tuple(partition_cols), mode="overwrite")
-
-
 class TierPipeline:
     def __init__(
         self,
@@ -135,10 +129,14 @@ class TierPipeline:
         #: write flagged intra-day LOCF rows into the hourly tier
         #: (SURVEY §1.2 filled/fill_method on tier rows)
         self.fill_tiers = fill_tiers
-        #: snapshot-versioned tables (engine/snapstore.py): every stage
-        #: write / retention drop / compaction publishes an immutable CoW
-        #: snapshot behind an atomic pointer — concurrent readers are never
-        #: torn, re-rolls are time-travelable, drops roll back
+        #: every table is snapshot-versioned (engine/snapstore.py): each
+        #: stage write / retention drop / compaction publishes an immutable
+        #: CoW snapshot behind an atomic pointer, so concurrent readers are
+        #: never torn. `snapshots` decides how much history a table keeps:
+        #: True keeps every snapshot until `expire_snapshots` (time travel,
+        #: rollback); False expires each table down to its current snapshot
+        #: and the last sealed run's barrier after every write-side
+        #: operation (`_trim_history`)
         self.snapshots = snapshots
         #: optional mergeable tier-state families (engine/rollup.py
         #: FAMILIES): each keyword's normalised spec, under its own name.
@@ -148,14 +146,12 @@ class TierPipeline:
         #: evolution as just another fingerprint change.
         for fam in FAMILIES:
             setattr(self, fam.kwarg, fam.normalise(args[fam.kwarg]))
-        #: write-audit-publish (requires snapshots): a run writes every
+        #: write-audit-publish: a run writes every
         #: stage into STAGED (unpublished) snapshots with manifest commits
         #: deferred; at the seal, `wap_audit(pipe)` (if given) inspects the
         #: staged state — reads inside the run resolve to it — and then all
         #: tables publish + the manifest lands. A crash or audit failure
         #: leaves published tables AND the manifest untouched.
-        if wap and not snapshots:
-            raise ValueError("wap=True requires snapshots=True")
         self.wap = wap
         self.wap_audit = wap_audit
         #: hourly tier partition SPEC version (VERDICT r3 #7 — Iceberg
@@ -165,9 +161,9 @@ class TierPipeline:
         #: into the day-stage fingerprint, so switching it on an existing
         #: root is a one-time manifest-gated re-roll of every day — and
         #: because tier-state fingerprints hash rows, not layout, the
-        #: daily/monthly/compress stages do NOT cascade. In snapshot
-        #: mode the pre-migration snapshots keep their old layout and stay
-        #: readable via time travel.
+        #: daily/monthly/compress stages do NOT cascade. Retained
+        #: pre-migration snapshots keep their old layout and stay readable
+        #: via time travel.
         if hourly_layout not in (1, 2):
             raise ValueError("hourly_layout must be 1 or 2")
         self.hourly_layout = hourly_layout
@@ -233,32 +229,30 @@ class TierPipeline:
         raise KeyError(name)
 
     def _store(self, path: str):
+        """The table's SnapStore. A plain parquet tree an earlier version
+        wrote there is adopted as its first snapshot on first access."""
         from .snapstore import SnapStore
 
-        return SnapStore(path)
+        store = SnapStore(path)
+        store.adopt()
+        return store
 
     def _read_path(self, path: str) -> DataFrame:
-        if self.snapshots:
-            # inside a WAP run, reads resolve to this run's staged state so
-            # later stages (and the audit) see the in-flight snapshots
-            return self._store(path).read(
-                self.spark, as_of=self._staged.get(path)
-            )
-        return eio.read_tier(self.spark, path)
+        # inside a WAP run, reads resolve to this run's staged state so
+        # later stages (and the audit) see the in-flight snapshots
+        return self._store(path).read(self.spark, as_of=self._staged.get(path))
 
     def read_table(self, name: str) -> DataFrame:
         """Snapshot-aware read of any pipeline table by logical name."""
         return self._read_path(self.table_path(name))
 
     def tier_data_path(self, tier: str) -> str:
-        """The concrete directory holding the tier's CURRENT files — the
-        published snapshot dir in snapshot mode, the tier dir otherwise.
-        This is the anchor a FileIndex (engine/fileindex.py) indexes:
-        snapshot flips keep relpaths and hardlinked (size, mtime) identity,
-        so unchanged partitions' index rows survive pointer advances."""
+        """The concrete directory holding the tier's CURRENT files: its
+        published snapshot dir. This is the anchor a FileIndex
+        (engine/fileindex.py) indexes: snapshot flips keep relpaths and
+        hardlinked (size, mtime) identity, so unchanged partitions' index
+        rows survive pointer advances."""
         p = self.tier_path(tier)
-        if not self.snapshots:
-            return p
         store = self._store(p)
         cur = store.current_id()
         if cur is None:
@@ -268,14 +262,7 @@ class TierPipeline:
         return store.snapshot_path(cur)
 
     def read_tier(self, tier: str) -> DataFrame:
-        if self.snapshots:
-            # snapshot commits are atomic pointer flips — nothing to heal
-            return self._read_path(self.tier_path(tier))
-        # self-heal a compaction that crashed between its promotion renames
-        from .retention import recover_compaction
-
-        recover_compaction(self.tier_path(tier))
-        return eio.read_tier(self.spark, self.tier_path(tier))
+        return self._read_path(self.tier_path(tier))
 
     @staticmethod
     def _tree_partition_cols(root: str) -> list[str] | None:
@@ -310,18 +297,6 @@ class TierPipeline:
     def _write_table(
         self, df: DataFrame, path: str, partition_cols: list[str]
     ) -> None:
-        if not self.snapshots:
-            # partition-spec evolution (plain mode): dynamic overwrite only
-            # replaces the LEAF partitions the new data touches, so a spec
-            # change would leave old-layout directories mixed into the table
-            # (Spark refuses to read conflicting partition columns) — clear
-            # the tree first (every partition re-rolls on a spec change
-            # anyway: the layout token is in the fingerprint)
-            cols = self._tree_partition_cols(path)
-            if cols is not None and cols != list(partition_cols):
-                self._clear_partition_dirs(path)
-            _write(df, path, partition_cols)
-            return
         out = df
         if "bucket_date" in partition_cols and "bucket_date" not in df.columns:
             out = out.withColumn("bucket_date", F.to_date("bucket_start"))
@@ -336,8 +311,10 @@ class TierPipeline:
                 + ":" + ",".join(partition_cols)  # records the spec per snapshot
             )
         try:
-            # spec evolution (snapshot mode): the staged CoW tree inherits
-            # the OLD layout's files — clear them so the new snapshot is
+            # spec evolution: the staged CoW tree inherits the OLD layout's
+            # files (dynamic overwrite replaces only the leaf partitions the
+            # new data touches, and Spark refuses to read conflicting
+            # partition columns) — clear them so the new snapshot is
             # homogeneous under the new spec; prior snapshots keep the old
             # layout and stay readable via time travel
             snap = store.snapshot_path(sid)
@@ -360,7 +337,7 @@ class TierPipeline:
         else:
             store.publish(sid)
 
-    # -- cross-table run barrier (snapshot mode) -----------------------------
+    # -- cross-table run barrier ----------------------------------------------
     TABLE_NAMES = ("hourly", "daily", "monthly", "chunks")
     #: derived tables earlier versions wrote and no reader opens; a sealed
     #: run deletes them from the root (with their changelog pointers)
@@ -397,12 +374,12 @@ class TierPipeline:
         scans: dict | None = None,
         left: dict | None = None,
     ) -> dict:
-        """Seal a run. In snapshot mode, record each table's published
-        snapshot id under stage='snapshot' — the cross-table consistency
-        barrier: `read_consistent(run_id)` later pins EVERY table to the
-        ids this run ended with, so a reader never mixes an hourly tier
-        from run N+1 with a daily tier from run N (Iceberg's multi-table
-        transaction emulated at run granularity).
+        """Seal a run: record each table's published snapshot id under
+        stage='snapshot' — the cross-table consistency barrier:
+        `read_consistent(run_id)` later pins EVERY table to the ids this
+        run ended with, so a reader never mixes an hourly tier from run N+1
+        with a daily tier from run N (Iceberg's multi-table transaction
+        emulated at run granularity). Then `_trim_history`.
 
         WAP seal order: audit (over the staged view) → publish every staged
         snapshot → commit the buffered manifest + barrier. Publishes are
@@ -419,30 +396,42 @@ class TierPipeline:
                 self._store(path).publish(sid)
             if buffered:
                 self.manifest.commit(buffered)
-        if self.snapshots:
-            rows = []
-            for name in self.TABLE_NAMES:
-                sid = self._store(self.table_path(name)).current_id()
-                if sid is not None:
-                    rows.append(
-                        {
-                            "run_id": run_id,
-                            "stage": "snapshot",
-                            "partition_key": f"table={name}",
-                            "input_snapshot_id": sid,
-                            "output_snapshot_id": self.table_path(name),
-                            "lineage": "run-barrier",
-                        }
-                    )
-            if rows:
-                self.manifest.commit(rows)
+        rows = []
+        for name in self.TABLE_NAMES:
+            sid = self._store(self.table_path(name)).current_id()
+            if sid is not None:
+                rows.append(
+                    {
+                        "run_id": run_id,
+                        "stage": "snapshot",
+                        "partition_key": f"table={name}",
+                        "input_snapshot_id": sid,
+                        "output_snapshot_id": self.table_path(name),
+                        "lineage": "run-barrier",
+                    }
+                )
+        if rows:
+            self.manifest.commit(rows)
         self._drop_retired_tables()
+        self._trim_history()
         return {
             "run_id": run_id,
             "stages": done,
             "scans": scans or {},
             "left": left or {},
         }
+
+    def _trim_history(self) -> None:
+        """A `snapshots=False` root keeps no history: every write-side
+        operation (a sealed run, a retention drop, a forget sweep, a
+        compaction, the chunks migration) ends by expiring each table down
+        to its current snapshot and the ones the last sealed run's barrier
+        pins. Expiring at the seal, not at each publish, keeps a stage's
+        changelog diff base alive within and across runs."""
+        if not self.snapshots:
+            from .retention import expire_snapshots
+
+            expire_snapshots(self, keep_last=1)
 
     def _drop_retired_tables(self) -> None:
         """Delete RETIRED_TABLES left on a root by earlier versions: derived
@@ -458,10 +447,8 @@ class TierPipeline:
                 pass
 
     def _chunks_dir(self) -> str | None:
-        """The directory holding the chunks table's current files (the
-        published snapshot in snapshot mode); None when there is none."""
-        if not self.snapshots:
-            return self.chunks_path
+        """The directory holding the chunks table's current files (its
+        published snapshot); None when there is none."""
         store = self._store(self.chunks_path)
         cur = store.current_id()
         return None if cur is None else store.snapshot_path(cur)
@@ -482,35 +469,25 @@ class TierPipeline:
         the chunks still hold (every hourly day retention-dropped) get the
         DELETED archive row that keeps them out of stale detection. Each
         step is idempotent: a crash anywhere resumes on the next call."""
-        import shutil
-
-        from .retention import recover_compaction
-
         path = self.chunks_path
-        if not self.snapshots:
-            recover_compaction(path)
         d = self._chunks_dir()
-        if d is not None and self._tree_partition_cols(d) == ["conv_bucket"]:
-            out = (
+        migrated = d is not None and self._tree_partition_cols(d) == ["conv_bucket"]
+        if migrated:
+            self._write_table(
                 self.read_table("chunks")
                 .drop("conv_bucket")
-                .withColumn(CHUNK_PART, _chunk_month())
+                .withColumn(CHUNK_PART, _chunk_month()),
+                path,
+                [CHUNK_PART],
             )
-            if self.snapshots:
-                self._write_table(out, path, [CHUNK_PART])
-            else:
-                # plain mode reads the directory it replaces: write beside
-                # it, then swap the two as compaction does
-                _write(out, path + "__migrate", [CHUNK_PART])
-                os.rename(path, path + "__old")
-                os.rename(path + "__migrate", path)
-                shutil.rmtree(path + "__old")
         old_keys = sorted(
             k
             for k, s in self.manifest.latest_map("compress").items()
             if k.startswith("cb=") and s != DELETED_SNAPSHOT
         )
         if not old_keys:
+            if migrated:
+                self._trim_history()
             return
         run_id = run_id or new_run_id()
         hourly = observed_state(self.read_tier("hourly"))
@@ -562,22 +539,24 @@ class TierPipeline:
         except FileNotFoundError:
             pass
         self.manifest.commit(rows)
+        self._trim_history()
 
     def run_snapshots(self, run_id: str | None = None) -> dict[str, str]:
         """table name -> snapshot id pinned at the end of `run_id` (default:
         the most recently sealed run). Barrier rows of RETIRED_TABLES, which
-        runs of earlier versions sealed, are skipped."""
-        m = self.manifest.read().filter(F.col("stage") == "snapshot")
+        runs of earlier versions sealed, are skipped. Driver-side over the
+        memoized manifest frame: no Spark job."""
+        m = self.manifest.read_pandas()
+        m = m[m["stage"] == "snapshot"]
         if run_id is None:
-            last = m.orderBy(F.desc("committed_at")).select("run_id").first()
-            if last is None:
-                raise ValueError("no sealed snapshot-mode runs in manifest")
-            run_id = last["run_id"]
+            if len(m) == 0:
+                raise ValueError("no sealed runs in manifest")
+            run_id = m.sort_values("committed_at", kind="stable")["run_id"].iloc[-1]
+        m = m[m["run_id"] == run_id]
         return {
-            name: r["input_snapshot_id"]
-            for r in m.filter(F.col("run_id") == run_id).collect()
-            if (name := r["partition_key"].split("=", 1)[1])
-            in self.TABLE_NAMES
+            name: sid
+            for key, sid in zip(m["partition_key"], m["input_snapshot_id"])
+            if (name := key.split("=", 1)[1]) in self.TABLE_NAMES
         }
 
     def read_consistent(self, run_id: str | None = None) -> dict[str, DataFrame]:
@@ -604,51 +583,54 @@ class TierPipeline:
         ROLLED_BACK sentinel fingerprint; the next run re-rolls exactly
         those. Refuses when a retention drop or month-freeze happened after
         the barrier (rolling data back under retention bookkeeping would
-        resurrect dropped partitions with live 'dropped' manifest state).
-        Returns the restored table→snapshot-id map."""
-        if not self.snapshots:
-            raise ValueError("rollback_run requires TierPipeline(snapshots=True)")
+        resurrect dropped partitions with live 'dropped' manifest state)
+        and when any target snapshot was expired (a `snapshots=False` root
+        keeps only its last barrier) — in both cases before anything
+        changed. Returns the restored table→snapshot-id map."""
+        from .snapstore import SnapshotError
+
         snaps = self.run_snapshots(run_id)
         if not snaps:
             raise ValueError(f"run {run_id!r} sealed no snapshot barrier")
-        m = self.manifest.read()
-        barrier_ts = (
-            m.filter((F.col("stage") == "snapshot") & (F.col("run_id") == run_id))
-            .agg(F.max("committed_at").alias("t"))
-            .first()["t"]
+        stores = {n: self._store(self.table_path(n)) for n in snaps}
+        expired = sorted(
+            n for n, sid in snaps.items()
+            if not os.path.isdir(stores[n].snapshot_path(sid))
         )
-        blockers = (
-            m.filter(
-                (F.col("committed_at") > F.lit(barrier_ts).cast("timestamp_ntz"))
-                & F.col("stage").isin("retention", "frozen")
-            ).count()
-        )
+        if expired:
+            raise SnapshotError(
+                f"cannot roll back to run {run_id!r}: snapshots of "
+                f"{', '.join(expired)} expired"
+            )
+        m = self.manifest.read_pandas()
+        barrier_ts = m.loc[
+            (m["stage"] == "snapshot") & (m["run_id"] == run_id), "committed_at"
+        ].max()
+        newer = m[m["committed_at"] > barrier_ts]
+        blockers = int(newer["stage"].isin(["retention", "frozen"]).sum())
         if blockers:
             raise ValueError(
                 "refusing to roll back across retention/freeze events "
                 f"({blockers} newer lifecycle commits)"
             )
         undone = (
-            m.filter(
-                (F.col("committed_at") > F.lit(barrier_ts).cast("timestamp_ntz"))
-                & F.col("stage").isin(*self.ALL_STAGES)
-            )
-            .select("stage", "partition_key")
-            .distinct()
-            .collect()
+            newer.loc[newer["stage"].isin(self.ALL_STAGES),
+                      ["stage", "partition_key"]]
+            .drop_duplicates()
+            .itertuples(index=False)
         )
         for name, sid in snaps.items():
-            self._store(self.table_path(name)).rollback(sid)
+            stores[name].rollback(sid)
         rb_id = new_run_id()
         rows = [
             {
                 "run_id": rb_id,
-                "stage": r["stage"],
-                "partition_key": r["partition_key"],
+                "stage": stage,
+                "partition_key": key,
                 "input_snapshot_id": self.ROLLED_BACK,
                 "lineage": f"rollback-of:{run_id}",
             }
-            for r in undone
+            for stage, key in undone
         ]
         # reseal the barrier at the restored ids so read_consistent()
         # defaults to the rolled-back state
@@ -667,7 +649,7 @@ class TierPipeline:
         return snaps
 
     # -- stage driver --------------------------------------------------------
-    # -- changelog-pruned work manifests (snapshot mode) ---------------------
+    # -- changelog-pruned work manifests ---------------------------------------
     def _progress_file(self, stage: str) -> str:
         return os.path.join(self.root, "_progress", f"{stage}.upstream")
 
@@ -688,19 +670,19 @@ class TierPipeline:
         os.replace(tmp, p)
 
     def _changed_upstream_days(self, stage: str, upstream: str) -> list[str] | None:
-        """The O(changed)-not-O(table) resume scan (snapshot mode): day
-        values of `upstream` partitions added/rewritten since `stage` last
+        """The O(changed)-not-O(table) resume scan: day values of
+        `upstream` partitions added/rewritten/removed since `stage` last
         reconciled, from the snapshot changelog's inode inventory — no data
-        reads. Unchanged partitions are PROVABLY fingerprint-identical
-        (their files are the same inodes), so the work manifest only needs
-        to re-fingerprint the changed ones. Returns None when pruning is
-        unsound and the caller must fall back to the full scan: plain mode,
-        WAP (stages read staged snapshots, not the published diff base), no
-        pointer yet, pointer token drift (a state-column migration must
+        reads. Unchanged partitions are PROVABLY fingerprint-identical (their
+        files are the same inodes), so the work manifest only needs to
+        re-fingerprint the changed ones. Returns None when pruning is
+        unsound and the caller must fall back to the full scan: WAP (stages
+        read staged snapshots, not the published diff base), no pointer
+        yet, pointer token drift (a state-column migration must
         re-fingerprint everything), expired diff base (GC race), or a
         rollback sentinel awaiting heal (its day may be bit-unchanged
         upstream yet still must re-roll)."""
-        if not self.snapshots or self.wap:
+        if self.wap:
             return None
         store = self._store(self.table_path(upstream))
         cur = store.current_id()
@@ -719,8 +701,12 @@ class TierPipeline:
         if sid == cur:
             return []
         d = store.diff(sid, cur)
+        # a removed day changes its month: the month-keyed stages must
+        # re-fingerprint it (a day-keyed stage finds no rows for it and
+        # leaves it to stale detection)
         return sorted(
-            {p.split("=", 1)[1] for p in d["added"] + d["rewritten"]}
+            {p.split("=", 1)[1]
+             for p in d["added"] + d["rewritten"] + d["removed"]}
         )
 
     def _upstream_day_inventory(self, upstream: str) -> list[str]:
@@ -835,25 +821,11 @@ class TierPipeline:
 
     def _rows_out(self, path: str, part: str, vals: list[str]) -> dict[str, int]:
         """Rows now in each `part=<val>` partition of the table at `path`
-        (this run's staged snapshot inside WAP). Parquet tables answer from
-        their file footers; an Iceberg table keeps a Spark count."""
-        if self.snapshots:
-            store = self._store(path)
-            snap = store.snapshot_path(self._staged.get(path) or store.current_id())
-            return eio.partition_row_counts(snap, part, vals)
-        backend, target = eio.tier_backend(self.spark, path)
-        if backend == "parquet":
-            return eio.partition_row_counts(target, part, vals)
-        return {
-            r["_k"]: r["count"]
-            for r in (
-                eio.read_tier(self.spark, path)
-                .filter(F.col(part).cast("string").isin(vals))
-                .groupBy(F.col(part).cast("string").alias("_k"))
-                .count()
-                .collect()
-            )
-        }
+        (this run's staged snapshot inside WAP), from the parquet file
+        footers."""
+        store = self._store(path)
+        snap = store.snapshot_path(self._staged.get(path) or store.current_id())
+        return eio.partition_row_counts(snap, part, vals)
 
     def _drop_stale(
         self,
@@ -873,7 +845,12 @@ class TierPipeline:
         re-rolls automatically (the sentinel matches no real fingerprint).
         Driver-side loop is bounded by partition count, never data.
         `protect` exempts keys deliberately absent from the work manifest
-        (frozen months finalized by daily retention)."""
+        (frozen months finalized by daily retention).
+
+        One CoW snapshot drops the whole stale batch atomically; the
+        pre-drop state stays time-travelable until expired. In WAP the drop
+        lands in this run's staged snapshot (created here if the stage
+        hasn't staged yet) and publishes only at the seal."""
         if inventory is not None:
             # pruned work manifests omit unchanged partitions — absence
             # must not read as deletion, so stale detection runs against
@@ -887,50 +864,35 @@ class TierPipeline:
             stale = [k for k in stale if k not in protect]
         if not stale:
             return 0
-        import shutil
+        doomed_dirs = [f"{part}={key.split('=', 1)[1]}" for key in stale]
+        rows = [
+            {
+                "run_id": run_id,
+                "stage": stage,
+                "partition_key": key,
+                "rows_in": 0,
+                "rows_out": 0,
+                "lineage": lineage,
+                "input_snapshot_id": DELETED_SNAPSHOT,
+                "output_snapshot_id": out_path,
+            }
+            for key in stale
+        ]
+        store = self._store(out_path)
+        if self._wap_active:
+            import shutil
 
-        doomed_dirs = []
-        rows = []
-        for key in stale:
-            val = key.split("=", 1)[1]
-            if self.snapshots:
-                doomed_dirs.append(f"{part}={val}")
-            else:
-                part_dir = os.path.join(out_path, f"{part}={val}")
-                if os.path.exists(part_dir):
-                    shutil.rmtree(part_dir)
-            rows.append(
-                {
-                    "run_id": run_id,
-                    "stage": stage,
-                    "partition_key": key,
-                    "rows_in": 0,
-                    "rows_out": 0,
-                    "lineage": lineage,
-                    "input_snapshot_id": DELETED_SNAPSHOT,
-                    "output_snapshot_id": out_path,
-                }
-            )
-        if doomed_dirs:
-            # one CoW snapshot drops the whole stale batch atomically; the
-            # pre-drop state stays time-travelable until expired. In WAP the
-            # drop lands in this run's staged snapshot (created here if the
-            # stage hasn't staged yet) and publishes only at the seal.
-            store = self._store(out_path)
-            if self._wap_active:
-                import shutil
-
-                sid = self._staged.get(out_path)
-                if sid is None:
-                    sid = store.begin("wap-staged")
-                    self._staged[out_path] = sid
-                for d in doomed_dirs:
-                    shutil.rmtree(
-                        os.path.join(store.snapshot_path(sid), d),
-                        ignore_errors=True,
-                    )
-            else:
-                store.drop_partitions(doomed_dirs, op="stale-input")
+            sid = self._staged.get(out_path)
+            if sid is None:
+                sid = store.begin("wap-staged")
+                self._staged[out_path] = sid
+            for d in doomed_dirs:
+                shutil.rmtree(
+                    os.path.join(store.snapshot_path(sid), d),
+                    ignore_errors=True,
+                )
+        else:
+            store.drop_partitions(doomed_dirs, op="stale-input")
         self._commit(rows)
         return len(rows)
 
@@ -1197,7 +1159,7 @@ class TierPipeline:
             inventory=daily_inv,
             budget=budget, left=left, deferred=deferred,
         )
-        if self.snapshots and not self.wap and not left.get("daily"):
+        if not self.wap and not left.get("daily"):
             cur_h = self._store(self.table_path("hourly")).current_id()
             if cur_h is not None:
                 self._record_reconciled("daily", cur_h)
@@ -1263,7 +1225,7 @@ class TierPipeline:
                 budget=budget, left=left,
                 hold=held_months("hourly", "daily"),
             )
-            if self.snapshots and not self.wap and not left.get("monthly"):
+            if not self.wap and not left.get("monthly"):
                 cur_d = self._store(self.table_path("daily")).current_id()
                 if cur_d is not None:
                     self._record_reconciled("monthly", cur_d)
@@ -1275,8 +1237,8 @@ class TierPipeline:
 
         # 4. compress, keyed by month (observed rows only): a chunk is one
         # month of one (conv, metric) series, so a month's chunks read only
-        # that month's hourly days. Snapshot mode prunes the work manifest
-        # to the months of changed hourly days, like the monthly stage.
+        # that month's hourly days. The work manifest is pruned to the
+        # months of changed hourly days, like the monthly stage.
         def series_stage() -> dict:
             hourly = observed_state(self.read_tier("hourly"))
             changed = self._changed_upstream_days("compress", "hourly")
@@ -1311,7 +1273,7 @@ class TierPipeline:
                 budget=budget, left=left,
                 hold=held_months("hourly"),
             )
-            if self.snapshots and not self.wap and not left.get("compress"):
+            if not self.wap and not left.get("compress"):
                 cur_h = self._store(self.table_path("hourly")).current_id()
                 if cur_h is not None:
                     self._record_reconciled("compress", cur_h)
@@ -1351,11 +1313,7 @@ class TierPipeline:
     # -- EP3: SQL over continuous aggregates ---------------------------------
     def register_views(self):
         for tier in ("hourly", "daily", "monthly"):
-            path = self.tier_path(tier)
-            if self.snapshots:
-                if self._store(path).current_id() is None:
-                    continue
-            elif not os.path.exists(path):
+            if self._store(self.tier_path(tier)).current_id() is None:
                 continue
             tier_view(self.read_tier(tier), tier).createOrReplaceTempView(
                 f"tiers_{tier}"

@@ -1,5 +1,5 @@
 """Incremental cross-root replication (SURVEY.md §2 L — lifecycle): keep a
-disaster-recovery / read-serving replica of a snapshot-mode pipeline in
+disaster-recovery / read-serving replica of a pipeline root in
 sync by shipping PARTITION DIFFS, never full tables — the cross-region
 copy a 100-TB deployment runs after every batch.
 
@@ -42,16 +42,9 @@ from .snapstore import SnapStore
 
 
 class Replica:
-    """A pull-based replica of every table under a snapshot-mode
-    `TierPipeline` root."""
+    """A pull-based replica of every table under a `TierPipeline` root."""
 
     def __init__(self, spark: SparkSession, primary, root: str):
-        if not primary.snapshots:
-            raise ValueError(
-                "replication requires the primary in snapshot mode "
-                "(TierPipeline(snapshots=True)) — diffs come from its "
-                "snapshot changelog"
-            )
         self.spark = spark
         self.primary = primary
         self.root = root

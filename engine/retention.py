@@ -9,15 +9,17 @@ bucket_date partition needs its 'daily' day commit AND the 'monthly' commit
 of its month AND the current compress commit of its month (the month's
 chunks keep the dropped days' series: `serve_series` and `serve_gapfill`
 decode them).
-On plain parquet the drop is a partition-directory delete (the emulation of
-Iceberg ``DELETE FROM ... WHERE`` + ``expire_snapshots``); the manifest
-records the drop so resume never re-creates it.
+A drop publishes a snapshot of the table without the partition (Iceberg
+``DELETE FROM ... WHERE``); the files go when that partition's last
+snapshot is expired (``expire_snapshots``, which a ``snapshots=False``
+pipeline runs after every drop). The manifest records the drop so resume
+never re-creates it. Compaction, too, publishes one new snapshot: there is
+no in-place rewrite and nothing to heal after a crash.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -31,29 +33,21 @@ class RetentionError(RuntimeError):
 
 
 def _existing_parts(pipe: TierPipeline, table_path: str, dirnames: list[str]) -> list[str]:
-    """Partition dirnames that currently exist in the table (snapshot-aware:
-    in snapshot mode existence means presence in the published snapshot)."""
-    base = table_path
-    if pipe.snapshots:
-        store = pipe._store(table_path)
-        cur = store.current_id()
-        if cur is None:
-            return []
-        base = store.snapshot_path(cur)
+    """Partition dirnames present in the table's published snapshot."""
+    store = pipe._store(table_path)
+    cur = store.current_id()
+    if cur is None:
+        return []
+    base = store.snapshot_path(cur)
     return [d for d in dirnames if os.path.isdir(os.path.join(base, d))]
 
 
 def _remove_parts(pipe: TierPipeline, table_path: str, dirnames: list[str]) -> None:
-    """Physically drop partition dirs. Plain mode: rmtree. Snapshot mode:
-    one CoW snapshot without them — concurrent readers keep their pinned
-    view and the pre-drop state stays time-travelable until expired."""
-    if not dirnames:
-        return
-    if pipe.snapshots:
+    """Drop partition dirs: one CoW snapshot without them — concurrent
+    readers keep their pinned view and the pre-drop state stays
+    time-travelable until expired."""
+    if dirnames:
         pipe._store(table_path).drop_partitions(dirnames, op="retention")
-        return
-    for d in dirnames:
-        shutil.rmtree(os.path.join(table_path, d))
 
 
 def _committed(manifest: Manifest, stage: str) -> set[str]:
@@ -118,6 +112,7 @@ def drop_hourly_partitions(
         _recommit_series_fingerprints(
             pipe, run_id, sorted({d[:7] for d in dropped})
         )
+        pipe._trim_history()
     return dropped
 
 
@@ -228,6 +223,7 @@ def drop_daily_partitions(
             for m in sorted({d[:7] for d in dropped})
         ]
         pipe.manifest.commit(rows)
+        pipe._trim_history()
     return dropped
 
 
@@ -296,20 +292,8 @@ def drop_chunk_months(
                 for m in dropped
             ]
         )
+        pipe._trim_history()
     return dropped
-
-
-def recover_compaction(path: str) -> bool:
-    """Heal a compaction interrupted between its two renames: if the tier is
-    absent at `path` but its pre-compaction copy survives at `path`+'__old',
-    restore it. Returns True when a recovery happened. Called automatically
-    by `compact_partition` and `TierPipeline.read_tier`, so a crashed
-    compaction self-heals on the next read or retry."""
-    old = path + "__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-        return True
-    return False
 
 
 def compact_partition(
@@ -343,13 +327,13 @@ def compact_partition(
     Shuffle key is (partition value, salt∈[0,n_files)) so every partition
     spreads over ~n_files independent tasks/files — plain
     repartition(n, part_col) would funnel each partition value through ONE
-    task and serialize unrelated partitions through n tasks. Promotion: the
-    old directory is renamed aside, the compacted one takes its place, and
-    the old copy is deleted last. Between the two renames the tier path is
-    briefly absent — a crash in that window is healed by
-    `recover_compaction` (run here and on every pipeline read), but
-    compaction is NOT safe against concurrent readers of the same tier;
-    with a real Iceberg catalog the snapshot commit makes this atomic.
+    task and serialize unrelated partitions through n tasks.
+
+    The rewrite reads the published snapshot and writes a fresh one, then
+    an atomic pointer flip publishes it — the Iceberg rewrite_data_files +
+    snapshot-commit shape. Concurrent readers keep their pinned
+    pre-compaction view, no path is ever absent, and a crash before the
+    flip leaves the table as it was.
     """
     pipe._migrate_chunks()
     if tier == "compress":
@@ -367,7 +351,7 @@ def compact_partition(
     if zorder and sort_by:
         raise ValueError("zorder and sort_by are mutually exclusive")
 
-    def _rewrite(df, dest, dynamic: bool):
+    def _rewrite(df, dest):
         cols = df.columns
         if zorder:
             from .zorder import with_zorder_key
@@ -378,49 +362,31 @@ def compact_partition(
             out = out.sortWithinPartitions(*part_cols, "__z").select(*cols)
         elif sort_by:
             out = out.sortWithinPartitions(*part_cols, *sort_by)
-        w = out.write
-        if dynamic:
-            w = w.option("partitionOverwriteMode", "dynamic")
+        w = out.write.option("partitionOverwriteMode", "dynamic")
         if rowgroup_bytes:
             w = w.option("parquet.block.size", rowgroup_bytes)
         w.partitionBy(*part_cols).mode("overwrite").parquet(dest)
 
-    if pipe.snapshots:
-        # snapshot mode: rewrite into a fresh snapshot reading the published
-        # one, then an atomic pointer flip — concurrent readers keep their
-        # pinned pre-compaction view, and no path is ever absent. This is
-        # the Iceberg rewrite_data_files + snapshot-commit shape.
-        store = pipe._store(path)
-        df = store.read(pipe.spark)
-        sid = store.begin("compact")
-        try:
-            _rewrite(df, store.snapshot_path(sid), dynamic=True)
-        except Exception:
-            store.abort(sid)
-            raise
-        store.publish(sid)
-        return
-    recover_compaction(path)
-    df = pipe.spark.read.parquet(path)
-    tmp = path + "__compact"
-    _rewrite(df, tmp, dynamic=False)
-    old = path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    store = pipe._store(path)
+    df = store.read(pipe.spark)
+    sid = store.begin("compact")
+    try:
+        _rewrite(df, store.snapshot_path(sid))
+    except Exception:
+        store.abort(sid)
+        raise
+    store.publish(sid)
+    pipe._trim_history()
 
 
 def retention_status(pipe: TierPipeline) -> dict:
-    """Summary for ops: per-stage committed partition counts + dropped days."""
-    m = pipe.manifest.read()
-    rows = (
-        m.groupBy("stage")
-        .agg(F.countDistinct("partition_key").alias("n"))
-        .collect()
-    )
-    return {r["stage"]: r["n"] for r in rows}
+    """Summary for ops: per-stage committed partition counts + dropped days.
+    Driver-side over the memoized manifest frame: no Spark job."""
+    m = pipe.manifest.read_pandas()
+    return {
+        str(stage): int(n)
+        for stage, n in m.groupby("stage")["partition_key"].nunique().items()
+    }
 
 
 def expire_snapshots(
@@ -429,12 +395,13 @@ def expire_snapshots(
     protect_runs: list[str] | None = None,
     consumers: list | None = None,
 ) -> dict[str, list[str]]:
-    """Iceberg `expire_snapshots` for snapshot-mode pipelines: GC retained
-    snapshot trees across every pipeline table, keeping the newest
-    `keep_last` per table (the published one always survives). File data is
-    freed when its last hardlink goes, so a partition rewritten N runs ago
-    but unchanged since keeps exactly one physical copy no matter how many
-    snapshots referenced it.
+    """Iceberg `expire_snapshots`: GC retained snapshot trees across every
+    pipeline table, keeping the newest `keep_last` per table (the published
+    one always survives). File data is freed when its last hardlink goes,
+    so a partition rewritten N runs ago but unchanged since keeps exactly
+    one physical copy no matter how many snapshots referenced it. A
+    `snapshots=False` pipeline calls this with keep_last=1 after every
+    write-side operation (`TierPipeline._trim_history`).
 
     Referenced snapshots are protected even below keep_last (ADVICE r3):
     - the newest sealed run barrier's ids (the default `read_consistent()` /
@@ -443,8 +410,6 @@ def expire_snapshots(
     - `consumers` (IncrementalConvSummary instances or their paths) pin each
       consumer's _CONSUMED hourly snapshot so its next refresh stays
       incremental instead of silently degrading to a full rebuild."""
-    if not pipe.snapshots:
-        raise RetentionError("expire_snapshots requires TierPipeline(snapshots=True)")
     protected: dict[str, set] = {}
 
     def _protect(table: str, sid: str | None) -> None:

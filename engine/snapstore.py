@@ -1,12 +1,15 @@
 """Snapshot-versioned parquet table store — the Iceberg-semantics half of
-the io seam (SURVEY.md §7.1) that the parquet emulation was missing.
+the io seam (SURVEY.md §7.1) that the parquet emulation was missing, and
+the one storage path of every pipeline table.
 
-The plain parquet backend overwrites partition directories in place, which
-has two honest gaps called out in VERDICT/ADVICE r2: compaction briefly
-removes the table path (unsafe against concurrent readers), and there is no
-time travel — a re-roll destroys the previous state of the partition. A real
-Iceberg catalog fixes both with snapshot commits; this module provides the
-same guarantees on a plain filesystem, cheaply:
+Earlier versions also had a plain parquet mode that overwrote partition
+directories in place: compaction briefly removed the table path (unsafe
+against concurrent readers) and a re-roll destroyed the previous state of
+the partition. A real Iceberg catalog avoids both with snapshot commits;
+this module provides the same guarantees on a plain filesystem, cheaply.
+A table such a version left behind is adopted as its first snapshot
+(`adopt`); `TierPipeline(snapshots=False)` now only means "keep one
+snapshot per table".
 
 Layout::
 
@@ -203,11 +206,56 @@ class SnapStore:
         doomed = [
             s
             for s in self.snapshot_ids()
-            if s != cur and not self.meta(s).get("published")
+            if s != cur
+            and not (m := self.meta(s)).get("published")
+            and m.get("op") != "adopt"  # holds the only copy of its data
         ]
         for s in doomed:
             shutil.rmtree(self.snapshot_path(s))
         return doomed
+
+    def adopt(self) -> str | None:
+        """Make a plain partitioned parquet tree at the table root (the
+        `k=v/part-*.parquet` layout earlier versions wrote in place) this
+        table's first snapshot: each partition directory is renamed into a
+        snapshot with op 'adopt', which then publishes. No data is copied.
+        A table root without such a tree while `<root>__old` holds one (a
+        plain in-place compaction that crashed between its two renames) is
+        adopted from `<root>__old`.
+
+        Crash-resumable: the unpublished adopt snapshot records its source,
+        a retry moves the remaining directories into it, and
+        `clean_stale_staging` never sweeps it. Returns the published id, or
+        None when the table already has a snapshot or nothing to adopt."""
+        if self.current_id() is not None:
+            return None
+        pending = [s for s in self.snapshot_ids() if self.meta(s).get("op") == "adopt"]
+        if pending:
+            sid = pending[-1]
+            src = self.root + self.meta(sid)["source"]
+        else:
+            src = next(
+                (d for d in (self.root, self.root + "__old") if _partition_dirs(d)),
+                None,
+            )
+            if src is None:
+                return None
+            sid = self._new_id()
+            # meta.json first, in a hidden dir, so a crash never leaves a
+            # snapshot without its meta
+            tmp = os.path.join(self.root, _SNAPS, f".adopt-{sid}")
+            os.makedirs(tmp)
+            with open(os.path.join(tmp, "meta.json"), "w") as f:
+                json.dump({"id": sid, "parent": None, "op": "adopt",
+                           "source": src[len(self.root):]}, f)
+            os.rename(tmp, self.snapshot_path(sid))
+        dst = self.snapshot_path(sid)
+        for d in _partition_dirs(src):
+            os.rename(os.path.join(src, d), os.path.join(dst, d))
+        self.publish(sid)
+        if src != self.root:
+            shutil.rmtree(src)
+        return sid
 
     def abort(self, snap_id: str) -> None:
         """Discard an unpublished staging snapshot."""
@@ -320,6 +368,16 @@ def _data_dirs(snap_path: str) -> list[str]:
         if os.path.isdir(os.path.join(snap_path, d))
     ]
     return dirs or [snap_path]  # empty snapshot: let Spark raise its usual error
+
+
+def _partition_dirs(path: str) -> list[str]:
+    """The `k=v` partition directory names directly under `path`."""
+    try:
+        return sorted(
+            e.name for e in os.scandir(path) if "=" in e.name and e.is_dir()
+        )
+    except FileNotFoundError:
+        return []
 
 
 def _hardlink_tree(src: str, dst: str) -> None:

@@ -42,12 +42,13 @@ def main():
                     help="drop raw hourly partitions older than YYYY-MM-DD "
                          "(only if lineage committed)")
     ap.add_argument("--snapshots", action="store_true",
-                    help="snapshot-versioned tables: pinned concurrent "
-                         "readers, time travel, run-level rollback")
+                    help="keep every table snapshot until expired: time "
+                         "travel and run-level rollback (without it each "
+                         "table keeps only its current and last-barrier "
+                         "snapshots)")
     ap.add_argument("--wap", action="store_true",
                     help="write-audit-publish: stage the whole run "
-                         "unpublished, publish atomically at the seal "
-                         "(requires --snapshots)")
+                         "unpublished, publish atomically at the seal")
     ap.add_argument("--sketch-cols", default=None,
                     help="comma-separated raw columns to sketch into "
                          "mergeable HLL tier state (e.g. 'tool')")
@@ -62,7 +63,7 @@ def main():
                          "row-group skipping via Morton clustering")
     ap.add_argument("--expire-keep-last", type=int, default=None,
                     help="snapshot GC after the run: keep newest N "
-                         "snapshots per table (requires --snapshots)")
+                         "snapshots per table")
     ap.add_argument("--freq-cols", default=None,
                     help="comma list of raw columns to carry exact "
                          "value->count frequency-map tier state for "
@@ -124,8 +125,9 @@ def main():
                          "forgotten): tombstoned before the run so the "
                          "re-roll + sweep remove them from every table")
     ap.add_argument("--replicate-to", default=None,
-                    help="replica root to sync after the run (requires "
-                         "--snapshots): ships only the partition diff")
+                    help="replica root to sync after the run: ships only "
+                         "the partition diff (a full copy when the last "
+                         "synced snapshot was expired)")
     args = ap.parse_args()
 
     from engine.session import get_spark

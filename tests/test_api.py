@@ -8,7 +8,6 @@ import os
 import sys
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -130,11 +129,11 @@ def test_engine_forget_front_door(spark, tmp_path):
         assert eng.tier(tier).filter(F.col("conv_id").isin(doomed)).count() == 0
 
 
-def test_cached_refuses_plain_mode(spark, tmp_path):
-    """A plain-mode root has no snapshot pointer to key results on: a cached
-    entry would never invalidate and, after a forget, would keep serving
-    the erased conversation's rows. cached refuses instead, before and
-    after the forget, like rollback and replication do."""
+def test_cached_keep_one_root_invalidates_on_forget(spark, tmp_path):
+    """A snapshots=False root keeps one snapshot per table, but every table
+    still has a pointer to key results on: a repeated cached call hits, and
+    after a forget it misses and serves none of the erased conversation's
+    rows (a stale entry would keep serving them)."""
     t0 = synth_transcripts(spark, n_convs=6, hot_turns=40).localCheckpoint()
     eng = TierEngine(spark, str(tmp_path / "plain"))
     eng.run(t0)
@@ -143,12 +142,15 @@ def test_cached_refuses_plain_mode(spark, tmp_path):
     def build():
         return eng.tier("hourly").filter(F.col("conv_id").isin(doomed))
 
-    with pytest.raises(ValueError, match=r"snapshots=True"):
-        eng.cached("doomed_rows", build)
+    first, hit = eng.cached("doomed_rows", build)
+    assert not hit and first.count() > 0
+    _, hit = eng.cached("doomed_rows", build)
+    assert hit
     eng.forget(doomed, t0=t0)
     assert build().count() == 0
-    with pytest.raises(ValueError, match=r"snapshots=True"):
-        eng.cached("doomed_rows", build)
+    after, hit = eng.cached("doomed_rows", build)
+    assert not hit
+    assert after.count() == 0
 
 
 def test_time_travel_sql_pins_a_sealed_run(spark, tmp_path):

@@ -282,12 +282,13 @@ def test_full_partition_delete_invalidates_output(spark, t0, tmp_path):
         for r in pipe.manifest.committed_keys("hourly").collect()
     )
     victim = days[0]
-    part_dir = os.path.join(pipe.tier_path("hourly"), f"bucket_date={victim}")
+    part_dir = os.path.join(pipe.tier_data_path("hourly"), f"bucket_date={victim}")
     assert os.path.exists(part_dir)
 
     shrunk = t0.filter(F.to_date("ts") != F.lit(victim))
     res = pipe.run(shrunk, stages=("hourly",))
     assert res["stages"]["hourly"] == 0  # no surviving day changed
+    part_dir = os.path.join(pipe.tier_data_path("hourly"), f"bucket_date={victim}")
     assert not os.path.exists(part_dir), "stale output partition must be gone"
     hourly = pipe.read_tier("hourly")
     assert hourly.filter(F.col("bucket_date") == F.lit(victim)).count() == 0
@@ -300,6 +301,7 @@ def test_full_partition_delete_invalidates_output(spark, t0, tmp_path):
     # (the DELETED sentinel matches no real fingerprint)
     res3 = pipe.run(t0, stages=("hourly",))
     assert res3["stages"]["hourly"] == 1
+    part_dir = os.path.join(pipe.tier_data_path("hourly"), f"bucket_date={victim}")
     assert os.path.exists(part_dir)
     ref2 = TierPipeline(spark, str(tmp_path / "pdel_ref2"))
     ref2.run(t0, stages=("hourly",))

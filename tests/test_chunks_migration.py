@@ -8,7 +8,6 @@ months, so the next run builds nothing."""
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 from datetime import date, timedelta
 from pathlib import Path
@@ -86,10 +85,7 @@ def _conv_bucket_root(spark, root, snapshots, t0):
     )
     victim = days[len(days) // 3]
     part = f"bucket_date={victim}"
-    if snapshots:
-        pipe._store(pipe.tier_path("hourly")).drop_partitions([part])
-    else:
-        shutil.rmtree(os.path.join(pipe.tier_path("hourly"), part))
+    pipe._store(pipe.tier_path("hourly")).drop_partitions([part])
     work, rows = _cb_fingerprints(pipe, "ret", "hourly-retention-recommit")
     # buckets whose every row was on the dropped day keep their chunks
     archived = sorted(before - {r["partition_key"] for r in work})

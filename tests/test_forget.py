@@ -136,11 +136,11 @@ def test_wholly_deleted_day_drops_with_sentinel(spark, tmp_path):
     pipe = TierPipeline(spark, str(tmp_path / "wd"))
     pipe.run(t0)
     assert os.path.isdir(
-        os.path.join(pipe.tier_path("hourly"), "bucket_date=2026-01-02")
+        os.path.join(pipe.tier_data_path("hourly"), "bucket_date=2026-01-02")
     )
     forget_conversations(pipe, ["conv-solo"], t0=t0)
     assert not os.path.exists(
-        os.path.join(pipe.tier_path("hourly"), "bucket_date=2026-01-02")
+        os.path.join(pipe.tier_data_path("hourly"), "bucket_date=2026-01-02")
     )
     sentinels = (
         pipe.manifest.read()

@@ -96,14 +96,18 @@ def test_layout_evolution_plain_mode_and_compaction(spark, t0, tmp_path):
     res = v2.run(t0)
     assert res["stages"]["hourly"] > 0 and res["stages"]["daily"] == 0
     # no old-layout files left mixed into the day dirs
-    day0 = os.path.join(v2.tier_path("hourly"), _day_dirs(v2.tier_path("hourly"))[0])
+    day0 = os.path.join(
+        v2.tier_data_path("hourly"), _day_dirs(v2.tier_data_path("hourly"))[0]
+    )
     assert not any(f.endswith(".parquet") for f in os.listdir(day0))
     pd.testing.assert_frame_equal(_pdf(v2.read_tier("hourly")), hourly_v1)
     # compaction keeps the evolved spec
     from engine.retention import compact_partition
 
     compact_partition(v2, "hourly")
-    day0c = os.path.join(v2.tier_path("hourly"), _day_dirs(v2.tier_path("hourly"))[0])
+    day0c = os.path.join(
+        v2.tier_data_path("hourly"), _day_dirs(v2.tier_data_path("hourly"))[0]
+    )
     assert any(d.startswith("conv_bucket=") for d in os.listdir(day0c))
     pd.testing.assert_frame_equal(_pdf(v2.read_tier("hourly")), hourly_v1)
     # downgrade also works (spec change is symmetric)
@@ -132,6 +136,6 @@ def test_same_depth_spec_change_clears_old_dirs(spark, tmp_path, snapshots):
     assert sorted(got.columns) == ["b", "v"]
     assert sorted(r["v"] for r in got.collect()) == list(range(6))
     store = SnapStore(path)
-    d = store.snapshot_path(store.current_id()) if snapshots else path
+    d = store.snapshot_path(store.current_id())
     parts = sorted(e for e in os.listdir(d) if "=" in e)
     assert parts == ["b=m0", "b=m1"], parts

@@ -109,7 +109,7 @@ def test_pruned_stale_detection_still_drops_deleted_days(spark, tmp_path):
     )
     assert {x["partition_key"] for x in sent} == {f"day={victim}"}
     assert not os.path.exists(
-        os.path.join(pipe.tier_path("daily"), f"bucket_date={victim}")
+        os.path.join(pipe.tier_data_path("daily"), f"bucket_date={victim}")
     )
     # every other daily partition survived the pruned stale pass
     others = pipe._read_path(pipe.tier_path("daily"))

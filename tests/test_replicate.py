@@ -167,7 +167,21 @@ def test_forget_propagates_to_replica(spark, t0, tmp_path):
     _assert_parity(rep)
 
 
-def test_requires_snapshot_mode(spark, t0, tmp_path):
+def test_keep_one_primary_replicates_by_full_sync(spark, t0, tmp_path):
+    """A snapshots=False primary keeps no diff base past its next seal, so
+    each sync after a run falls back to a full copy, and the replica still
+    equals the primary."""
     pipe = TierPipeline(spark, str(tmp_path / "plain"))
-    with pytest.raises(ValueError, match="snapshot mode"):
-        Replica(spark, pipe, str(tmp_path / "r"))
+    pipe.run(t0)
+    rep = Replica(spark, pipe, str(tmp_path / "r"))
+    s1 = rep.sync()
+    assert all(s1[t]["mode"] == "full" for t in TABLES), s1
+    _assert_parity(rep)
+    late = t0.filter("conv_id = 'conv-00000000'").selectExpr(
+        "conv_id", "cast(turn_idx + 100000 as int) as turn_idx",
+        "role", "text", "tool", "ts + interval 30 minutes as ts",
+    )
+    pipe.run(t0.unionByName(late))
+    s2 = rep.sync()
+    assert s2["hourly"]["mode"] == "full", s2
+    _assert_parity(rep)

@@ -49,7 +49,7 @@ def test_drop_after_full_lineage(spark, t0, tmp_path):
     assert dropped == days[:2]
     for d in dropped:
         assert not os.path.exists(
-            os.path.join(pipe.tier_path("hourly"), f"bucket_date={d}")
+            os.path.join(pipe.tier_data_path("hourly"), f"bucket_date={d}")
         )
     # EP3: continuous aggregates remain queryable after the raw drop
     pipe.register_views()
@@ -87,6 +87,7 @@ def test_compact_partition_file_counts_and_content(spark, tmp_path):
 
     def files_per_part():
         out = {}
+        path = pipe.tier_data_path("hourly")
         for d in os.listdir(path):
             if d.startswith("bucket_date="):
                 out[d] = len(
@@ -107,12 +108,12 @@ def test_compact_partition_file_counts_and_content(spark, tmp_path):
 
 
 def test_compaction_crash_recovery(spark, tmp_path):
-    """A compaction killed between its two promotion renames leaves the tier
-    absent at its path with the data stranded at path+'__old' — the next
-    pipeline read must self-heal (ADVICE r2)."""
+    """Earlier versions compacted a plain tier in place: a compaction killed
+    between its two promotion renames left the tier absent at its path with
+    the data stranded at path+'__old'. The next pipeline read adopts
+    path+'__old' as the table's first snapshot (ADVICE r2)."""
     import shutil
 
-    from engine.retention import recover_compaction
     from engine.synth import synth_transcripts
 
     t0 = synth_transcripts(spark, n_convs=10, hot_turns=50)
@@ -124,24 +125,31 @@ def test_compaction_crash_recovery(spark, tmp_path):
         .toPandas()
         .sort_values(["conv_id", "bucket_start"], ignore_index=True)
     )
-    # simulate the crash window: old renamed aside, new never promoted
-    os.rename(path, path + "__old")
+    # plant the crash window as the in-place compaction left it: the plain
+    # tree renamed aside, the compacted copy never promoted
+    shutil.copytree(pipe.tier_data_path("hourly"), path + "__old",
+                    ignore=shutil.ignore_patterns("meta.json"))
+    shutil.rmtree(path)
     assert not os.path.exists(path)
     after = (
-        pipe.read_tier("hourly")  # read path heals via recover_compaction
+        pipe.read_tier("hourly")  # first access adopts path+'__old'
         .toPandas()
         .sort_values(["conv_id", "bucket_start"], ignore_index=True)
     )
     assert os.path.exists(path) and not os.path.exists(path + "__old")
     pd.testing.assert_frame_equal(before, after)
-    # idempotent when nothing to heal; never clobbers a live tier
-    assert recover_compaction(path) is False
-    shutil.rmtree(path + "__x", ignore_errors=True)
+    # idempotent when nothing to adopt; never clobbers a live tier
+    assert pipe._store(path).adopt() is None
+    pd.testing.assert_frame_equal(
+        pipe.read_tier("hourly").toPandas()
+        .sort_values(["conv_id", "bucket_start"], ignore_index=True),
+        before,
+    )
 
 
-def _table_pdf(spark, path, keys):
+def _table_pdf(pipe, name, keys):
     return (
-        spark.read.parquet(path)
+        pipe.read_table(name)
         .toPandas()
         .sort_values(keys, ignore_index=True)
     )
@@ -188,7 +196,7 @@ def test_hourly_drop_then_rerun_is_stable(spark, t0, tmp_path):
     assert all(n == 0 for n in res["stages"].values()), res
     for d in dropped:
         assert not os.path.exists(
-            os.path.join(pipe.tier_path("hourly"), f"bucket_date={d}")
+            os.path.join(pipe.tier_data_path("hourly"), f"bucket_date={d}")
         ), "rerun must not resurrect retention-dropped hourly days"
     for name, after in frames().items():
         b = before[name]
@@ -221,14 +229,14 @@ def test_daily_retention_freezes_month(spark, t0, tmp_path):
     victim_month = days[0][:7]
     month_days = [d for d in days if d.startswith(victim_month)]
     monthly_before = _table_pdf(
-        spark, pipe.tier_path("monthly"), ["conv_id", "bucket_start"]
+        pipe, "monthly", ["conv_id", "bucket_start"]
     )
     dropped = drop_daily_partitions(pipe, month_days, run_id="d1")
     assert dropped == month_days
     assert frozen_months(pipe.manifest) == {victim_month}
     for d in dropped:
         assert not os.path.exists(
-            os.path.join(pipe.tier_path("daily"), f"bucket_date={d}")
+            os.path.join(pipe.tier_data_path("daily"), f"bucket_date={d}")
         )
     # late raw data lands in the frozen month -> refused, tiers unchanged
     late = t0.limit(50).withColumn(
@@ -238,7 +246,7 @@ def test_daily_retention_freezes_month(spark, t0, tmp_path):
     assert "frozen_skipped" in res["stages"], res
     assert res["stages"]["frozen_skipped"] == [victim_month]
     monthly_after = _table_pdf(
-        spark, pipe.tier_path("monthly"), ["conv_id", "bucket_start"]
+        pipe, "monthly", ["conv_id", "bucket_start"]
     )
     frozen_rows_b = monthly_before[
         monthly_before["bucket_month"] == victim_month
@@ -268,26 +276,29 @@ def test_chunk_month_retention(spark, t0, tmp_path):
     with pytest.raises(RetentionError):
         drop_chunk_months(pipe, [month], run_id="c0")
     pipe.run(t0)  # commit compress
-    path = pipe.chunks_path
+
+    def chunks():
+        return pipe.read_table("chunks")
+
     safe = droppable_chunk_months(pipe)
     assert safe
     victims = safe[:2]
-    total_before = spark.read.parquet(path).count()
+    total_before = chunks().count()
     n_victim = (
-        spark.read.parquet(path)
+        chunks()
         .filter(F.col("chunk_month").isin(victims))
         .count()
     )
     assert n_victim > 0
     dropped = drop_chunk_months(pipe, victims, run_id="c1")
     assert dropped == victims
-    remaining = spark.read.parquet(path)
+    remaining = chunks()
     assert remaining.count() == total_before - n_victim
     assert remaining.filter(F.col("chunk_month").isin(victims)).count() == 0
     res = pipe.run(t0)  # unchanged input: months stay dropped
     assert all(n == 0 for n in res["stages"].values()), res
     assert (
-        spark.read.parquet(path)
+        chunks()
         .filter(F.col("chunk_month").isin(victims))
         .count()
         == 0
@@ -301,16 +312,17 @@ def test_compact_series_tables(spark, t0, tmp_path):
 
     pipe = TierPipeline(spark, str(tmp_path / "cs"))
     pipe.run(t0)
-    path, keys = pipe.chunks_path, ["conv_id", "metric", "chunk_start"]
-    before = _table_pdf(spark, path, keys)
+    keys = ["conv_id", "metric", "chunk_start"]
+    before = _table_pdf(pipe, "chunks", keys)
     compact_partition(pipe, "compress", n_files=1)
+    path = pipe._chunks_dir()
     counts = {
         d: len([f for f in os.listdir(os.path.join(path, d))
                 if f.endswith(".parquet")])
         for d in os.listdir(path) if d.startswith("chunk_month=")
     }
     assert counts and all(n == 1 for n in counts.values()), counts
-    after = _table_pdf(spark, path, keys)
+    after = _table_pdf(pipe, "chunks", keys)
     pd.testing.assert_frame_equal(after, before)
 
 
@@ -327,14 +339,14 @@ def test_compact_with_sort_order_enables_rowgroup_skipping(spark, t0, tmp_path):
     dense = synth_transcripts(spark, n_convs=400, hot_turns=4000)
     pipe = TierPipeline(spark, str(tmp_path / "srt"))
     pipe.run(dense, stages=("hourly",))
-    path = pipe.tier_path("hourly")
     keys = ["conv_id", "bucket_start", "filled"]
-    before = _table_pdf(spark, path, keys)
+    before = _table_pdf(pipe, "hourly", keys)
     compact_partition(
         pipe, "hourly", n_files=1,
         sort_by=("conv_id", "bucket_start"), rowgroup_bytes=4 * 1024,
     )
-    pd.testing.assert_frame_equal(_table_pdf(spark, path, keys), before)
+    pd.testing.assert_frame_equal(_table_pdf(pipe, "hourly", keys), before)
+    path = pipe.tier_data_path("hourly")
 
     multi_rg_files = 0
     for d in os.listdir(path):
@@ -363,7 +375,7 @@ def test_compact_with_sort_order_enables_rowgroup_skipping(spark, t0, tmp_path):
     # the skipping-shaped query still answers correctly
     one = before["conv_id"].iloc[0]
     got = (
-        spark.read.parquet(path)
+        pipe.read_tier("hourly")
         .filter(F.col("conv_id") == one)
         .count()
     )

@@ -186,7 +186,9 @@ def test_pipeline_snapshot_mode_matches_plain(spark, t0, tmp_path):
         ("gapfill", ["conv_id", "metric", "bucket_start"],
          gapfilled(snap), gapfilled(plain)),
         ("chunks", ["conv_id", "metric", "chunk_start"],
-         snap.read_table("chunks"), spark.read.parquet(plain.chunks_path)),
+         snap.read_table("chunks"),
+         spark.read.option("basePath", plain._chunks_dir()).parquet(
+             os.path.join(plain._chunks_dir(), "chunk_month=*"))),
     ):
         pa = a.toPandas().sort_values(keys, ignore_index=True).reindex(sorted(a.columns), axis=1)
         pb = b.toPandas().sort_values(keys, ignore_index=True).reindex(sorted(b.columns), axis=1)
@@ -300,7 +302,7 @@ def test_pipeline_snapshot_retention_and_compaction(spark, t0, tmp_path):
 
 def test_pipeline_expire_snapshots(spark, t0, tmp_path):
     from engine.pipeline import TierPipeline
-    from engine.retention import RetentionError, expire_snapshots
+    from engine.retention import expire_snapshots
     from engine.snapstore import SnapshotError, SnapStore
 
     pipe = TierPipeline(spark, str(tmp_path / "gc"), snapshots=True)
@@ -321,9 +323,9 @@ def test_pipeline_expire_snapshots(spark, t0, tmp_path):
     assert pipe.read_tier("hourly").count() == before
     with pytest.raises(SnapshotError):
         store.read(spark, as_of=ids[0])
-    # plain pipelines refuse
-    with pytest.raises(RetentionError):
-        expire_snapshots(TierPipeline(spark, str(tmp_path / "pl")), 1)
+    # a snapshots=False pipeline expires like any other (it has no
+    # snapshot-mode precondition); an empty root has nothing to expire
+    assert expire_snapshots(TierPipeline(spark, str(tmp_path / "pl")), 1) == {}
 
 
 def test_read_consistent_pins_all_tables_to_one_run(spark, t0, tmp_path):
@@ -411,6 +413,39 @@ def test_rollback_refuses_across_retention(spark, t0, tmp_path):
     drop_hourly_partitions(pipe, days[:1], run_id="ret")
     with pytest.raises(ValueError, match="retention"):
         pipe.rollback_run(r1)
+
+
+def test_rollback_to_an_expired_target_changes_nothing(spark, t0, tmp_path):
+    """A rollback whose target snapshots were partly expired (a tag kept
+    hourly's, the others went) must refuse before the first pointer flip:
+    flipping table by table and failing at daily would leave hourly at r1,
+    the rest at r2, and hourly's r2 fingerprints claiming its days."""
+    from engine.pipeline import TierPipeline
+    from engine.retention import expire_snapshots
+
+    pipe = TierPipeline(spark, str(tmp_path / "rbx"), snapshots=True)
+    r1 = pipe.run(t0)["run_id"]
+    stores = {n: SnapStore(pipe.table_path(n)) for n in pipe.TABLE_NAMES}
+    stores["hourly"].tag("r1-hourly")
+    late = t0.filter("conv_id = 'conv-00000000'").selectExpr(
+        "conv_id", "cast(turn_idx + 100000 as int) as turn_idx",
+        "role", "text", "tool", "ts + interval 30 minutes as ts",
+    )
+    t2 = t0.unionByName(late)
+    assert pipe.run(t2)["stages"]["hourly"] > 0
+    state2 = {n: _pdf_any(pipe.read_table(n)) for n in pipe.TABLE_NAMES}
+    expire_snapshots(pipe, keep_last=1)
+    current = {n: s.current_id() for n, s in stores.items()}
+    n_manifest = len(pipe.manifest.read_pandas())
+
+    with pytest.raises(SnapshotError, match="expired"):
+        pipe.rollback_run(r1)
+    assert {n: s.current_id() for n, s in stores.items()} == current
+    assert len(pipe.manifest.read_pandas()) == n_manifest
+    for n in pipe.TABLE_NAMES:
+        pd.testing.assert_frame_equal(_pdf_any(pipe.read_table(n)), state2[n]), n
+    # nothing re-armed: the same input is still a no-op
+    assert all(v == 0 for v in pipe.run(t2)["stages"].values())
 
 
 # -- write-audit-publish ------------------------------------------------------

@@ -106,10 +106,10 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
     pipe.run(t0)
     keys = ["conv_id", "metric", "chunk_start"]
     before = (
-        spark.read.parquet(pipe.chunks_path)
+        pipe.read_table("chunks")
         .toPandas()
         .sort_values(keys, ignore_index=True)
-        .reindex(sorted(spark.read.parquet(pipe.chunks_path).columns), axis=1)
+        .reindex(sorted(pipe.read_table("chunks").columns), axis=1)
     )
 
     compact_partition(
@@ -118,7 +118,7 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
     )
 
     after = (
-        spark.read.parquet(pipe.chunks_path)
+        pipe.read_table("chunks")
         .toPandas()
         .sort_values(keys, ignore_index=True)
         .reindex(sorted(before.columns), axis=1)
@@ -127,7 +127,7 @@ def test_zorder_rewrite_preserves_data(spark, tmp_path):
 
     one = before["conv_id"].iloc[0]
     got = (
-        spark.read.parquet(pipe.chunks_path)
+        pipe.read_table("chunks")
         .filter(F.col("conv_id") == one)
         .count()
     )
@@ -148,8 +148,9 @@ def grid_pipes(spark, tmp_path_factory):
     time-only sort cannot separate convs (every hour contains all of them),
     while z-order carves rectangles. Real series clip each conversation to
     its own span, which correlates conv and time and muddies the
-    counterfactual; compact_partition reads only the path, so writing the
-    grid directly exercises the identical rewrite."""
+    counterfactual; compact_partition reads only the table, so writing the
+    grid directly (a plain tree, adopted as the table's first snapshot on
+    first access) exercises the identical rewrite."""
     root = str(tmp_path_factory.mktemp("zgrid"))
     grid = (
         spark.range(192)
@@ -188,10 +189,10 @@ def test_zorder_prunes_both_dimensions(spark, grid_pipes):
         sort_by=("bucket_start",), rowgroup_bytes=8 * 1024,
     )
 
-    z_conv = _containment(_rg_spans(pipe.chunks_path, "conv_id"))
-    z_time = _containment(_rg_spans(pipe.chunks_path, "bucket_start"))
-    l_conv = _containment(_rg_spans(lin.chunks_path, "conv_id"))
-    l_time = _containment(_rg_spans(lin.chunks_path, "bucket_start"))
+    z_conv = _containment(_rg_spans(pipe._chunks_dir(), "conv_id"))
+    z_time = _containment(_rg_spans(pipe._chunks_dir(), "bucket_start"))
+    l_conv = _containment(_rg_spans(lin._chunks_dir(), "conv_id"))
+    l_time = _containment(_rg_spans(lin._chunks_dir(), "bucket_start"))
 
     # z-order: BOTH dimensions prune at footer level
     assert z_conv < 0.5, (z_conv, l_conv)

@@ -151,7 +151,11 @@ def test_compact_torn_then_healed(spark, tmp_path, t0):
     # duplicated rows are harmless to every latest/distinct consumer
     res = pipe.run(t0)
     assert all(v == 0 for v in res["stages"].values())
-    # and the next compact heals them exactly
+    # and the next compact heals them exactly (the no-op run added only its
+    # run barrier)
     pipe.compact_manifest()
     assert len(_files(pipe)) == 1
-    pd.testing.assert_frame_equal(_manifest_pdf(pipe), before)
+    after = _manifest_pdf(pipe)
+    mine = after["run_id"] == res["run_id"]
+    assert set(after.loc[mine, "stage"]) == {"snapshot"}
+    pd.testing.assert_frame_equal(after[~mine].reset_index(drop=True), before)

@@ -97,14 +97,13 @@ import hashlib
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rollup import HLL_LGK, observed_state
 from .snapstore import SnapshotError, SnapStore
-from .io import spread_partitions
+from .io import atomic_write, read_pointer, spread_partitions
 
 KINDS = (
     "sum",
@@ -320,17 +319,10 @@ class ContinuousAggregate:
         }
 
     def _pointer(self, name: str) -> str | None:
-        try:
-            with open(os.path.join(self.path, name)) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(os.path.join(self.path, name))
 
     def _record(self, name: str, value: str) -> None:
-        tmp = os.path.join(self.path, f".{name}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(value)
-        os.replace(tmp, os.path.join(self.path, name))
+        atomic_write(os.path.join(self.path, name), value)
 
     # -- the algebra -----------------------------------------------------
     def _partial_aggs(self) -> list:

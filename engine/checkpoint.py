@@ -2,9 +2,10 @@
 row-count metrics, the Spark-native generalization of the reference's
 write-GeoTIFF-then-`file.exists()`-skip resume idiom.
 
-Storage: a directory of immutable single parquet files, one per commit —
-written to a temp name then os.rename'd (atomic on POSIX), so a killed run
-never leaves a torn manifest. Readers take the union of all commit files.
+Storage: a directory of immutable single parquet files, one per commit,
+each written with `io.atomic_write` (temp file, fsync, `os.replace`), so a
+killed run never leaves a torn manifest, and its dot-prefixed temp name is
+never listed as a commit. Readers take the union of all commit files.
 With a real Iceberg catalog the same interface maps onto snapshot commits.
 
 Schema (FIXTURES.md): run_id, stage, partition_key, input_snapshot_id,
@@ -22,6 +23,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .io import atomic_write, parquet_bytes
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -223,9 +226,7 @@ class Manifest:
             )
         now = int(time.time() * 1_000_000)
         fname = f"commit-{now}-{uuid.uuid4().hex[:8]}-compacted.parquet"
-        tmp = os.path.join(self.path, f"._tmp-{fname}")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.path, fname))
+        atomic_write(os.path.join(self.path, fname), parquet_bytes(table))
         for f in files:
             os.unlink(os.path.join(self.path, f))
         self._cache = None
@@ -256,9 +257,7 @@ class Manifest:
         }
         table = pa.table(cols, schema=_ARROW_SCHEMA)
         fname = f"commit-{now}-{uuid.uuid4().hex[:8]}.parquet"
-        tmp = os.path.join(self.path, f"._tmp-{fname}")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.path, fname))
+        atomic_write(os.path.join(self.path, fname), parquet_bytes(table))
         return fname
 
 

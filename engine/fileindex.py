@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
+from .io import atomic_write, read_pointer
 from .snapstore import SnapStore
 
 _IDENT = ("file", "sz", "mtime_ns")
@@ -134,11 +135,7 @@ class FileIndex:
         return os.path.join(self.index_path, "_SPEC")
 
     def _stored_spec(self) -> str | None:
-        try:
-            with open(self._spec_file()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self._spec_file())
 
     # -- inventory ------------------------------------------------------------
     def _inventory(self) -> dict[str, tuple[int, int]]:
@@ -284,10 +281,7 @@ class FileIndex:
             self.store.abort(sid)
             raise
         self.store.publish(sid)
-        tmp = self._spec_file() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self.spec_token())
-        os.replace(tmp, self._spec_file())
+        atomic_write(self._spec_file(), self.spec_token())
         return {"indexed": len(todo), "reused": len(kept_files), "removed": removed}
 
     # -- lookup ---------------------------------------------------------------

@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .io import atomic_write, parquet_bytes
+
 TOMBSTONE_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -79,9 +81,10 @@ class TombstoneStore:
     """Append-only conversation tombstone set under a pipeline root.
 
     Same durability idiom as the checkpoint manifest: each append is one
-    immutable parquet file written to a temp name then os.rename'd (atomic
-    on POSIX), readers take the union — a killed append never tears the
-    set, and appends from concurrent processes cannot clobber each other.
+    immutable parquet file written with `io.atomic_write`, readers take the
+    union — a killed append never tears the set (its temp name does not end
+    in `.parquet`), and appends from concurrent processes cannot clobber
+    each other.
     """
 
     DIRNAME = "_tombstones"
@@ -112,9 +115,7 @@ class TombstoneStore:
             schema=_ARROW_SCHEMA,
         )
         fname = f"tombstone-{now}-{uuid.uuid4().hex[:8]}.parquet"
-        tmp = os.path.join(self.path, f"._tmp-{fname}")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.path, fname))
+        atomic_write(os.path.join(self.path, fname), parquet_bytes(table))
         return fname
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -10,7 +10,7 @@ table keyed by the hourly tier's own partition unit. Each `refresh()`:
 2. recomputes partials for exactly the added/rewritten days (partition-
    pruned scans) and overwrites those day partitions (dynamic overwrite);
 3. drops partials of removed days (retention downstream-propagation);
-4. records the consumed snapshot id (write-temp-rename, crash-safe).
+4. records the consumed snapshot id (`atomic_write`, crash-safe).
 
 The serving view (`read()`) aggregates the partials — correct under
 arbitrary day REWRITES, not just appends, because a day's partial is
@@ -25,14 +25,13 @@ to consumer cadence.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rollup import observed_state
 from .snapstore import SnapshotError, SnapStore
-from .io import spread_partitions
+from .io import atomic_write, read_pointer, spread_partitions
 
 
 class IncrementalConvSummary:
@@ -50,17 +49,10 @@ class IncrementalConvSummary:
         return os.path.join(self.path, "_CONSUMED")
 
     def consumed_id(self) -> str | None:
-        try:
-            with open(self._consumed_file) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self._consumed_file)
 
     def _record_consumed(self, sid: str) -> None:
-        tmp = self._consumed_file + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.replace(tmp, self._consumed_file)
+        atomic_write(self._consumed_file, sid)
 
     def _day_partials(self, hourly: DataFrame, days: list[str] | None) -> DataFrame:
         h = observed_state(hourly)
@@ -185,17 +177,10 @@ class IncrementalSlidingView:
         return os.path.join(self.path, "_CONSUMED")
 
     def consumed_id(self) -> str | None:
-        try:
-            with open(self._consumed_file) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self._consumed_file)
 
     def _record_consumed(self, sid: str) -> None:
-        tmp = self._consumed_file + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.replace(tmp, self._consumed_file)
+        atomic_write(self._consumed_file, sid)
 
     def _sliding(self, hourly: DataFrame, out_days: list[str] | None):
         """Sliding series restricted to `out_days` output partitions,

@@ -14,12 +14,17 @@ Atomic per-partition overwrite on the parquet backend uses dynamic
 partitionOverwriteMode so a re-run of one (tier, day) partition never
 clobbers its siblings — the distributed generalization of the reference's
 write-GeoTIFF-then-skip idiom.
+
+`atomic_write` is the engine's one file-level commit: every pointer, meta,
+tag, lease and manifest/tombstone file goes through it, and
+`read_pointer` reads the single-value ones back.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -184,6 +189,48 @@ def partition_row_counts(path: str, part: str, vals) -> dict[str, int]:
         d = os.path.join(path, f"{part}={v}")
         out[v] = rows(d) if os.path.isdir(d) else 0
     return out
+
+
+def atomic_write(path: str, data: str | bytes) -> None:
+    """The engine's one file-level commit: write `data` to a temp file in
+    `path`'s directory, fsync it, `os.replace` it onto `path`, then fsync
+    the directory. Readers see the old content or the new, never a torn
+    file, and the new content survives a power cut once this returns. The
+    temp name `.<basename>.tmp-<hex>` is dot-prefixed and never ends in
+    `.parquet`, so no listing, Spark scan or snapshot walk picks up one a
+    crash left behind."""
+    d, base = os.path.split(path)
+    tmp = os.path.join(d, f".{base}.tmp-{uuid.uuid4().hex[:8]}")
+    with open(tmp, "wb") as f:
+        f.write(data.encode() if isinstance(data, str) else data)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(d or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def parquet_bytes(table) -> bytes:
+    """An arrow table serialized as one parquet file, for `atomic_write`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    return buf.getvalue().to_pybytes()
+
+
+def read_pointer(path: str) -> str | None:
+    """A single-value pointer file's stripped text; None when it is missing
+    or empty."""
+    try:
+        with open(path) as f:
+            return f.read().strip() or None
+    except FileNotFoundError:
+        return None
 
 
 def read_tier(spark: SparkSession, path: str, tier: str | None = None) -> DataFrame:

@@ -34,6 +34,8 @@ import os
 import time
 import uuid
 
+from .io import atomic_write
+
 
 class LeaseHeldError(RuntimeError):
     """Another live run holds this root's lease."""
@@ -143,10 +145,7 @@ class RunLease:
         if not st or st.get("token") != self._token:
             raise LeaseHeldError(f"lost lease on {self.root} (broken as stale)")
         st["heartbeat_unix"] = time.time()
-        tmp = self.path + f".hb.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(st))
-        os.replace(tmp, self.path)  # atomic; token unchanged
+        atomic_write(self.path, json.dumps(st))  # token unchanged
 
     def release(self) -> None:
         if self._token is None:

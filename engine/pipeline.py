@@ -654,20 +654,13 @@ class TierPipeline:
         return os.path.join(self.root, "_progress", f"{stage}.upstream")
 
     def _reconciled(self, stage: str) -> tuple[str, str] | None:
-        try:
-            with open(self._progress_file(stage)) as f:
-                sid, _, token = f.read().strip().partition(" ")
-                return (sid, token) if sid else None
-        except FileNotFoundError:
-            return None
+        pointer = eio.read_pointer(self._progress_file(stage)) or ""
+        sid, _, token = pointer.partition(" ")
+        return (sid, token) if sid else None
 
     def _record_reconciled(self, stage: str, sid: str) -> None:
         os.makedirs(os.path.dirname(self._progress_file(stage)), exist_ok=True)
-        p = self._progress_file(stage)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{sid} {self._day_token}")
-        os.replace(tmp, p)
+        eio.atomic_write(self._progress_file(stage), f"{sid} {self._day_token}")
 
     def _changed_upstream_days(self, stage: str, upstream: str) -> list[str] | None:
         """The O(changed)-not-O(table) resume scan: day values of

@@ -38,6 +38,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import atomic_write, read_pointer
 from .snapstore import SnapStore
 
 
@@ -58,20 +59,10 @@ class Replica:
         return os.path.join(self.root, table, "_SYNCED_FROM")
 
     def synced_from(self, table: str) -> str | None:
-        try:
-            with open(self._synced_file(table)) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self._synced_file(table))
 
     def _record_synced(self, table: str, sid: str) -> None:
-        p = self._synced_file(table)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(sid)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+        atomic_write(self._synced_file(table), sid)
 
     # -- sync -----------------------------------------------------------------
     def _copy_partition(self, src_snap: str, staged: str, dirname: str) -> None:

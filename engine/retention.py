@@ -24,6 +24,7 @@ import os
 from pyspark.sql import functions as F
 
 from .checkpoint import DELETED_SNAPSHOT, Manifest, pending_rows, work_manifest
+from .io import read_pointer
 from .pipeline import _STATE_HASH_COLS, CHUNK_PART, TierPipeline, _day_month
 from .rollup import observed_state
 
@@ -95,9 +96,12 @@ def drop_hourly_partitions(
             )
     table = pipe.tier_path("hourly")
     existing = _existing_parts(pipe, table, [f"bucket_date={d}" for d in days])
-    _remove_parts(pipe, table, existing)
     dropped = [d.split("=", 1)[1] for d in existing]
     if dropped:
+        # the manifest records the drop before the snapshot loses the
+        # days: a crash in between leaves them present, so a rerun drops
+        # them again (the repeated rows are idempotent), while a crash
+        # after the publish leaves nothing for a rerun to redo
         pipe.manifest.commit(
             [
                 {
@@ -108,20 +112,19 @@ def drop_hourly_partitions(
                 }
                 for d in dropped
             ]
+            + _series_recommit_rows(pipe, run_id, dropped)
         )
-        _recommit_series_fingerprints(
-            pipe, run_id, sorted({d[:7] for d in dropped})
-        )
+        _remove_parts(pipe, table, existing)
         pipe._trim_history()
     return dropped
 
 
-def _recommit_series_fingerprints(
-    pipe: TierPipeline, run_id: str, months: list[str]
-) -> None:
-    """After an hourly retention drop, re-commit the compress manifest
-    rows of the dropped days' `months` with fingerprints recomputed over
-    their REMAINING hourly days. Without this the next run's fingerprint
+def _series_recommit_rows(
+    pipe: TierPipeline, run_id: str, dropped: list[str]
+) -> list[dict]:
+    """For an hourly retention drop of the `dropped` days, the compress
+    manifest rows that re-commit their months with fingerprints computed
+    over the REMAINING hourly days. Without this the next run's fingerprint
     diff would read the horizon truncation as late data and re-roll those
     months' chunks from the partial input — overwriting archived
     full-month chunks with truncated ones. With it, an unchanged input
@@ -129,7 +132,10 @@ def _recommit_series_fingerprints(
     re-rolls it (which then regenerates from the remaining days only —
     documented loss of pre-horizon series points, and so of served
     gap-fill rows, for that actively-changing month)."""
-    hourly = observed_state(pipe.read_tier("hourly"))
+    months = sorted({d[:7] for d in dropped})
+    hourly = observed_state(pipe.read_tier("hourly")).filter(
+        ~F.col("bucket_date").cast("string").isin(dropped)
+    )
     work = work_manifest(
         hourly.filter(_day_month().isin(months)), _day_month(),
         _STATE_HASH_COLS, "month",
@@ -164,8 +170,7 @@ def _recommit_series_fingerprints(
         for m in months
         if m in committed and f"month={m}" not in work_keys
     ]
-    if rows:
-        pipe.manifest.commit(rows)
+    return rows
 
 
 def droppable_daily_days(pipe: TierPipeline, older_than: str) -> list[str]:
@@ -426,12 +431,7 @@ def expire_snapshots(
             _protect(name, sid)
     for c in consumers or []:
         if isinstance(c, str):
-            f = os.path.join(c, "_CONSUMED")
-            try:
-                with open(f) as fh:
-                    _protect("hourly", fh.read().strip() or None)
-            except FileNotFoundError:
-                pass
+            _protect("hourly", read_pointer(os.path.join(c, "_CONSUMED")))
         else:
             _protect("hourly", c.consumed_id())
     out = {}

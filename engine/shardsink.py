@@ -26,13 +26,13 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from .corpusops import portable_hash60
+from .io import atomic_write
 
 #: tokens per exported shard
 SHARD_BUDGET = 4096
@@ -131,10 +131,10 @@ def export_shards(
             for r in stats
         },
     }
-    fd, tmp = tempfile.mkstemp(dir=out_path, prefix="._manifest")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, sort_keys=True, indent=1)
-    os.replace(tmp, os.path.join(out_path, MANIFEST))
+    atomic_write(
+        os.path.join(out_path, MANIFEST),
+        json.dumps(manifest, sort_keys=True, indent=1),
+    )
     return manifest
 
 

@@ -24,7 +24,8 @@ A new snapshot begins as a **hardlink copy-on-write** of the current one
 trick Iceberg gets from manifest reuse), the writer mutates only the
 partitions it touches (Spark's dynamic partition overwrite unlinks the
 staged hardlinks, never the published files), and `publish` flips the
-`_CURRENT` pointer with an atomic `os.replace`. Consequences:
+`_CURRENT` pointer with `io.atomic_write` (fsync, `os.replace`, directory
+fsync). Consequences:
 
 - **readers are never torn**: a reader resolves `_CURRENT` once and then
   only ever sees that immutable snapshot tree, regardless of concurrent
@@ -56,6 +57,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import atomic_write, read_pointer
+
 _SNAPS = "_snaps"
 _CURRENT = "_CURRENT"
 
@@ -85,11 +88,7 @@ class SnapStore:
         return os.path.join(self.root, _CURRENT)
 
     def current_id(self) -> str | None:
-        try:
-            with open(self._current_file) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self._current_file)
 
     def snapshot_path(self, snap_id: str) -> str:
         return os.path.join(self.root, _SNAPS, snap_id)
@@ -111,30 +110,25 @@ class SnapStore:
     def tag(self, name: str, snap_id: str | None = None) -> str:
         """Pin a retained snapshot under a stable name (compliance audits,
         'last-good' serving refs). Tagged snapshots survive `expire` at any
-        keep_last. One file per tag, tmp+rename — re-tagging is atomic."""
+        keep_last. One file per tag, written with `atomic_write` —
+        re-tagging is atomic."""
         if "/" in name or name.startswith("."):
             raise SnapshotError(f"bad tag name {name!r}")
         sid = snap_id or self.current_id()
         if sid is None or not os.path.isdir(self.snapshot_path(sid)):
             raise SnapshotError(f"cannot tag unknown snapshot {sid!r}")
         os.makedirs(self._tags_dir, exist_ok=True)
-        p = os.path.join(self._tags_dir, name)
-        tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(sid)
-        os.replace(tmp, p)
+        atomic_write(os.path.join(self._tags_dir, name), sid)
         return sid
 
     def tags(self) -> dict[str, str]:
         if not os.path.isdir(self._tags_dir):
             return {}
-        out = {}
-        for n in os.listdir(self._tags_dir):
-            if ".tmp-" in n:
-                continue
-            with open(os.path.join(self._tags_dir, n)) as f:
-                out[n] = f.read().strip()
-        return out
+        return {
+            n: read_pointer(os.path.join(self._tags_dir, n))
+            for n in os.listdir(self._tags_dir)
+            if not n.startswith(".")
+        }
 
     def untag(self, name: str) -> None:
         try:
@@ -165,38 +159,40 @@ class SnapStore:
         nxt = (max(prefixes) + 1) if prefixes else 0
         return f"{nxt:08d}-{uuid.uuid4().hex[:8]}"
 
+    def _stage(self, **meta) -> str:
+        """Create a new snapshot dir holding only its meta.json and return
+        its id. The meta is written into a hidden `.<id>` dir that is then
+        renamed in, so a crash never leaves a snapshot without its meta."""
+        sid = self._new_id()
+        hidden = os.path.join(self.root, _SNAPS, f".{sid}")
+        os.makedirs(hidden)
+        with open(os.path.join(hidden, "meta.json"), "w") as f:
+            json.dump({"id": sid, **meta}, f)
+        os.rename(hidden, self.snapshot_path(sid))
+        return sid
+
     def begin(self, op: str = "write") -> str:
         """Start a snapshot: CoW-hardlink the current tree into a fresh
         snapshot dir and return its id (unpublished until `publish`)."""
-        sid = self._new_id()
-        dst = self.snapshot_path(sid)
         parent = self.current_id()
+        sid = self._stage(parent=parent, op=op)
         if parent is not None:
-            _hardlink_tree(self.snapshot_path(parent), dst)
-        else:
-            os.makedirs(dst)
-        with open(os.path.join(dst, "meta.json"), "w") as f:
-            json.dump({"id": sid, "parent": parent, "op": op}, f)
+            _hardlink_tree(self.snapshot_path(parent), self.snapshot_path(sid))
         return sid
 
     def publish(self, snap_id: str) -> None:
-        """Atomically flip `_CURRENT` to `snap_id` (os.replace: readers see
-        either the old pointer or the new one, never a torn file)."""
+        """Atomically flip `_CURRENT` to `snap_id` (`atomic_write`: readers
+        see either the old pointer or the new one, never a torn file)."""
         if not os.path.isdir(self.snapshot_path(snap_id)):
             raise SnapshotError(f"unknown snapshot {snap_id!r}")
         meta = self.meta(snap_id)
         if not meta.get("published"):
             meta["published"] = True
-            mp = os.path.join(self.snapshot_path(snap_id), "meta.json")
-            with open(mp + ".tmp", "w") as f:
-                json.dump(meta, f)
-            os.replace(mp + ".tmp", mp)
-        tmp = self._current_file + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(snap_id)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._current_file)
+            atomic_write(
+                os.path.join(self.snapshot_path(snap_id), "meta.json"),
+                json.dumps(meta),
+            )
+        atomic_write(self._current_file, snap_id)
 
     def clean_stale_staging(self) -> list[str]:
         """Delete snapshots that were staged but never published (a crashed
@@ -240,15 +236,7 @@ class SnapStore:
             )
             if src is None:
                 return None
-            sid = self._new_id()
-            # meta.json first, in a hidden dir, so a crash never leaves a
-            # snapshot without its meta
-            tmp = os.path.join(self.root, _SNAPS, f".adopt-{sid}")
-            os.makedirs(tmp)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"id": sid, "parent": None, "op": "adopt",
-                           "source": src[len(self.root):]}, f)
-            os.rename(tmp, self.snapshot_path(sid))
+            sid = self._stage(parent=None, op="adopt", source=src[len(self.root):])
         dst = self.snapshot_path(sid)
         for d in _partition_dirs(src):
             os.rename(os.path.join(src, d), os.path.join(dst, d))

@@ -196,8 +196,13 @@ class SnapStore:
 
     def clean_stale_staging(self) -> list[str]:
         """Delete snapshots that were staged but never published (a crashed
-        write-audit-publish run's leftovers). Never touches the current
+        write-audit-publish run's leftovers), and the hidden `.<id>` dirs of
+        `_stage` calls killed before their rename. Never touches the current
         snapshot or anything that was ever published (rollback targets)."""
+        snaps = os.path.join(self.root, _SNAPS)
+        for d in os.listdir(snaps):
+            if d.startswith("."):
+                shutil.rmtree(os.path.join(snaps, d))
         cur = self.current_id()
         doomed = [
             s

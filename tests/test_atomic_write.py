@@ -10,7 +10,9 @@ Pinned here:
    old `._tmp-*.parquet` temp names were listed as commits);
 3. a `SnapStore.begin` killed while it hardlinks the tree leaves a
    snapshot with its meta, which the staging sweep removes, and a WAP
-   run then succeeds (the meta used to be written after the links);
+   run then succeeds (the meta used to be written after the links); one
+   killed before it renames its hidden staging dir in leaves a dir the
+   sweep removes too;
 4. a source scan: no file under `engine/` calls `os.replace`,
    `os.rename` or `pq.write_table` outside `io.py`'s primitive, apart
    from the named directory publishes.
@@ -102,6 +104,22 @@ def test_torn_tombstone_append_keeps_earlier_ids(tmp_path, monkeypatch):
         ts.append(["conv-c"])
     monkeypatch.undo()
     assert ts.ids() == ["conv-a"]
+
+
+def test_begin_killed_before_its_rename_is_swept(tmp_path, monkeypatch):
+    store = SnapStore(str(tmp_path / "t"))
+    store.publish(store.begin())
+    before = store.snapshot_ids()
+
+    def no_rename(src, dst):
+        raise _Crash(src)
+
+    monkeypatch.setattr(os, "rename", no_rename)
+    with pytest.raises(_Crash):
+        store.begin()
+    monkeypatch.undo()
+    assert store.clean_stale_staging() == []
+    assert os.listdir(os.path.join(store.root, "_snaps")) == before
 
 
 def test_begin_killed_while_linking_is_swept(spark, tmp_path, monkeypatch):

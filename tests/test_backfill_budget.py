@@ -13,6 +13,7 @@ shape — bounded, crash-recoverable increments — so the tests pin:
 """
 
 import sys
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pandas as pd
@@ -57,7 +58,7 @@ def test_budget_invalid(spark, tmp_path, t0):
         pipe.run(t0, budget=0)
 
 
-def test_budgeted_backfill_converges_plain(spark, tmp_path, t0):
+def _converges_plain(spark, tmp_path, t0):
     full = TierPipeline(spark, str(tmp_path / "full"), lease=False)
     full.run(t0)
     n_days = full.read_tier("hourly").select("bucket_date").distinct().count()
@@ -89,7 +90,7 @@ def test_budget_oldest_first(spark, tmp_path, t0):
     assert built == [oldest]
 
 
-def test_budgeted_backfill_snapshot_mode_and_late_data(spark, tmp_path, t0):
+def _snapshot_mode_and_late_data(spark, tmp_path, t0):
     """Snapshot mode is where the reconcile-pointer hazard lives: the
     changelog-pruned work manifests diff against a per-stage pointer that
     a truncated batch must not advance. A wrong pointer shows up here as
@@ -122,7 +123,7 @@ def test_budgeted_backfill_snapshot_mode_and_late_data(spark, tmp_path, t0):
     _assert_same_tables(full, inc)
 
 
-def test_budgeted_backfill_under_wap(spark, tmp_path, t0):
+def _under_wap(spark, tmp_path, t0):
     """Each budgeted increment is its own write-audit-publish cycle: the
     loop converges to the plain twin with every table gaining one
     published snapshot per sealed increment."""
@@ -138,7 +139,7 @@ def test_budgeted_backfill_under_wap(spark, tmp_path, t0):
     _assert_same_tables(full, inc)
 
 
-def test_budgeted_wap_veto_preserves_published_prefix(spark, tmp_path, t0):
+def _wap_veto_preserves_published_prefix(spark, tmp_path, t0):
     """An audit veto on increment 2 must leave increment 1's published
     prefix (tables AND manifest) untouched; removing the veto completes
     the backfill to the exact unbudgeted state."""
@@ -171,3 +172,43 @@ def test_budgeted_wap_veto_preserves_published_prefix(spark, tmp_path, t0):
     )
     full.run(t0)
     _assert_same_tables(full, ok)
+
+
+# The four backfills above are ~25 small budgeted runs each, and a small
+# run's wall time is mostly driver-side planning and job latency rather
+# than tasks. On a few cores they overlap well, so the module starts all
+# four at once (each on its own roots); each test waits for its own and
+# re-raises whatever it raised.
+_BACKFILLS = {
+    "plain": _converges_plain,
+    "snapshot": _snapshot_mode_and_late_data,
+    "wap": _under_wap,
+    "veto": _wap_veto_preserves_published_prefix,
+}
+
+
+@pytest.fixture(scope="module")
+def backfills(spark, tmp_path_factory, t0):
+    ex = ThreadPoolExecutor(max_workers=len(_BACKFILLS))
+    futures = {
+        name: ex.submit(fn, spark, tmp_path_factory.mktemp(name), t0)
+        for name, fn in _BACKFILLS.items()
+    }
+    yield futures
+    ex.shutdown(wait=True)
+
+
+def test_budgeted_backfill_converges_plain(backfills):
+    backfills["plain"].result()
+
+
+def test_budgeted_backfill_snapshot_mode_and_late_data(backfills):
+    backfills["snapshot"].result()
+
+
+def test_budgeted_backfill_under_wap(backfills):
+    backfills["wap"].result()
+
+
+def test_budgeted_wap_veto_preserves_published_prefix(backfills):
+    backfills["veto"].result()

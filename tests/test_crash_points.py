@@ -3,12 +3,13 @@ state of a clean run.
 
 Every file commit goes through `engine.io.atomic_write` (one
 `os.replace`), and every directory publish is one `os.rename`, so those
-two calls are the operations' only commit points. For each operation and
-every k, a copy of one cold-run root is crashed at its k-th such call
-(a file source is first truncated to half, as a kill mid-write would
-leave it; that call and every later one raise instead of renaming). A
-fresh pipeline then reruns the same operation, and the root must match a
-clean run of it:
+two calls are the operations' only commit points. For each operation, one
+clean run on a copy of a cold-run root is watched: at its k-th such call,
+for every k, the root is copied as it stands, which is the tree a kill at
+that call leaves (a file source is torn to half in the copy, as a kill
+mid-write would leave it, and the rename is missing). A fresh pipeline
+then reruns the same operation on each copy, and the copy must match the
+clean run's root:
 
 - every table's sorted rows;
 - the latest `input_snapshot_id` per (stage, partition_key) of every
@@ -19,7 +20,7 @@ clean run of it:
 Covered: every k of a late `run()`, `drop_hourly_partitions`,
 `compact_partition("hourly")`, and the tombstone append of
 `forget_conversations`. Rows are read with pyarrow from each table's
-published snapshot, so a crash point costs its two operations and no
+published snapshot, so a crash point costs one resumed operation and no
 extra Spark jobs.
 """
 
@@ -29,6 +30,7 @@ import os
 import shutil
 import sys
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pandas as pd
@@ -50,10 +52,6 @@ from engine.synth import synth_transcripts  # noqa: E402
 
 TIER_KEYS = ["conv_id", "bucket_start"]
 CHUNK_KEYS = ["conv_id", "metric", "chunk_start"]
-
-
-class _Crash(RuntimeError):
-    pass
 
 
 @pytest.fixture(scope="module")
@@ -112,23 +110,42 @@ def _assert_same(got, want, where: str) -> None:
     assert latest == want[1], where
 
 
-def _commit_points(monkeypatch, crash_at: int | None = None) -> list:
-    """Route os.replace/os.rename through a counter; from call `crash_at`
-    on, each one raises instead (the first truncating a file source to
-    half). Returns the list the calls' sources are appended to."""
+def _copy_live_tree(src: str, dst: str) -> None:
+    """Copy `src` while a concurrent stage may still be writing under it.
+    Spark writes only inside hidden staging dirs, which a resume sweeps;
+    a file there that vanishes mid-copy is left out, one caught mid-write
+    is copied torn, as a kill would leave both."""
+    for dirpath, _dirs, files in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(dirpath, src))
+        os.makedirs(out, exist_ok=True)
+        for name in files:
+            try:
+                shutil.copyfile(os.path.join(dirpath, name), os.path.join(out, name))
+            except FileNotFoundError:
+                pass
+
+
+def _commit_points(monkeypatch, root: str, frozen: Path, points) -> list:
+    """Route os.replace/os.rename through a counter. Before the k-th call
+    (k in `points`, or every k when None) renames, `root` is copied to
+    `frozen/k<k>`, the call's file source torn to half in the copy: the
+    tree a kill at that call leaves. Returns the calls' sources, in
+    order."""
     calls: list = []
     lock = threading.Lock()
     real = {"replace": os.replace, "rename": os.rename}
 
     def hook(kind):
         def call(src, dst, *a, **kw):
-            with lock:
+            with lock:  # holds the other stage thread's commits meanwhile
                 calls.append(src)
-                n = len(calls)
-            if crash_at is not None and n >= crash_at:
-                if n == crash_at and os.path.isfile(src):
-                    os.truncate(src, os.path.getsize(src) // 2)
-                raise _Crash(n)
+                k = len(calls)
+                if points is None or k in points:
+                    copy = str(frozen / f"k{k}")
+                    _copy_live_tree(root, copy)
+                    if os.path.isfile(src):
+                        torn = os.path.join(copy, os.path.relpath(src, root))
+                        os.truncate(torn, os.path.getsize(torn) // 2)
             return real[kind](src, dst, *a, **kw)
 
         return call
@@ -139,31 +156,36 @@ def _commit_points(monkeypatch, crash_at: int | None = None) -> list:
 
 
 def _check_every_crash_point(spark, cold, tmp_path, monkeypatch, op, points=None):
-    """Clean run of `op(pipe)` on a copy of the cold root, then for each
-    crash point a crashed copy resumed by `op` again, compared."""
+    """Clean run of `op(pipe)` on a copy of the cold root, frozen at each
+    crash point; then `op` again on every frozen copy, compared."""
     _t0, _late, base = cold
     clean = str(tmp_path / "clean")
     shutil.copytree(base, clean)
+    frozen = tmp_path / "frozen"
+    frozen.mkdir()
     with monkeypatch.context() as m:
-        calls = _commit_points(m)
+        calls = _commit_points(m, clean, frozen, points)
         op(TierPipeline(spark, clean, lease=False))
     want = _state(TierPipeline(spark, clean, lease=False))
     points = points or range(1, len(calls) + 1)
     assert calls and len(points) <= len(calls)
-    for k in points:
-        root = str(tmp_path / f"k{k}")
-        shutil.copytree(base, root)
-        with monkeypatch.context() as m:
-            _commit_points(m, crash_at=k)
-            with pytest.raises(_Crash):
-                op(TierPipeline(spark, root, lease=False))
-        op(TierPipeline(spark, root, lease=False))
-        _assert_same(
-            _state(TierPipeline(spark, root, lease=False)),
-            want,
-            f"k={k}/{len(calls)} ({calls[k - 1]})",
-        )
+    assert sorted(os.listdir(frozen)) == sorted(f"k{k}" for k in points)
+
+    def resume(k):
+        root = str(frozen / f"k{k}")
+        try:
+            op(TierPipeline(spark, root, lease=False))
+            got = _state(TierPipeline(spark, root, lease=False))
+        except Exception as exc:
+            raise AssertionError(f"resume from k={k} ({calls[k - 1]})") from exc
         shutil.rmtree(root)
+        return k, got
+
+    # resumes of separate roots are independent; two at a time overlap
+    # one's driver-side planning with the other's tasks
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        for k, got in ex.map(resume, points):
+            _assert_same(got, want, f"k={k}/{len(calls)} ({calls[k - 1]})")
     return calls
 
 
